@@ -28,10 +28,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from webr import schema, spec
 from webr.catalog import Warehouse, fingerprint
 from webr.cluster import label_clusters
-from webr.features import score_pairs, weight_arrays
+from webr.features import weight_arrays
 from webr.mentions import derive_mentions
-
-SIDE_COLS = [f.name for f in schema.MENTION_FEATS.fields if f.name != "url"]
 
 # Arrow twin of schema.PAIR_SCORES for the applyInArrow pair-scoring
 # path — derived via Spark's own converter so the two can never drift.
@@ -84,7 +82,7 @@ VOCAB_BROADCAST_MAX = int(os.environ.get("WEBR_VOCAB_BROADCAST_MAX",
 
 
 def build_mention_feats(mentions: DataFrame, idf: DataFrame,
-                        vocab_rows: int | None = None) -> DataFrame:
+                        vocab_rows: int) -> DataFrame:
     """Slim per-mention pair-kernel payload with PRECOMPUTED sorted tf-idf
     weight arrays + norm (int64 token ids — see features.token_hash).
 
@@ -95,9 +93,8 @@ def build_mention_feats(mentions: DataFrame, idf: DataFrame,
     variable). Scale path (vocab > VOCAB_BROADCAST_MAX, e.g. 10^12-doc
     corpora): distributed explode + broadcast-hash token join + sorted
     struct re-aggregation, bit-identical by construction (same hash, same
-    sort order, same in-order fold)."""
-    if vocab_rows is None:
-        vocab_rows = idf.count()
+    sort order, same in-order fold). ``vocab_rows``: the idf table's row
+    count, which picks the path."""
     if vocab_rows <= VOCAB_BROADCAST_MAX:
         idf_map = {r["token"]: r["idf"] for r in
                    idf.select("token", "idf").collect()}
@@ -109,16 +106,22 @@ def build_mention_feats(mentions: DataFrame, idf: DataFrame,
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             d = bc.value
             for pdf in batches:
-                arrays = [weight_arrays(list(t), d)
-                          for t in pdf["body_toks"]]
-                pdf = pdf.drop(columns=["body_toks"])
-                pdf["w_toks"] = [a[0] for a in arrays]
-                pdf["w_vals"] = [a[1] for a in arrays]
-                pdf["w_norm"] = [a[2] for a in arrays]
-                yield pdf[[f.name for f in schema.MENTION_FEATS.fields]]
+                yield with_weights(pdf, d)
 
         return slim.mapInPandas(gen, schema=schema.MENTION_FEATS)
     return _build_mention_feats_join(mentions, idf)
+
+
+def with_weights(mentions: pd.DataFrame, idf_map: dict) -> pd.DataFrame:
+    """A batch of mentions -> its mention_feats rows: the body tokens
+    become ``weight_arrays`` (sorted token ids, tf-idf values, norm).
+    Shared by the corpus stage and the record query's query side."""
+    arrays = [weight_arrays(list(t), idf_map) for t in mentions["body_toks"]]
+    out = mentions.drop(columns=["body_toks"])
+    out["w_toks"] = [a[0] for a in arrays]
+    out["w_vals"] = [a[1] for a in arrays]
+    out["w_norm"] = [a[2] for a in arrays]
+    return out[[f.name for f in schema.MENTION_FEATS.fields]]
 
 
 def _build_mention_feats_join(mentions: DataFrame,
@@ -200,27 +203,6 @@ def build_pairs(mentions: DataFrame) -> DataFrame:
             .agg(F.min("bk").alias("block_key")))
 
 
-def attach_sides(pairs: DataFrame, mention_feats: DataFrame) -> DataFrame:
-    m = mention_feats.select("url", *SIDE_COLS)
-    m1 = m.select(F.col("url").alias("url_1"),
-                  *[F.col(c).alias(f"{c}_1") for c in SIDE_COLS])
-    m2 = m.select(F.col("url").alias("url_2"),
-                  *[F.col(c).alias(f"{c}_2") for c in SIDE_COLS])
-    out = (pairs.join(m1.hint("shuffle_hash"), "url_1")
-           .join(m2.hint("shuffle_hash"), "url_2"))
-    return out.select([f.name for f in schema.PAIRS.fields])
-
-
-def build_pair_scores(pairs_sided: DataFrame) -> DataFrame:
-    names = [f.name for f in schema.PAIR_SCORES.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = score_pairs(pdf)
-            yield out[names]
-    return pairs_sided.mapInPandas(gen, schema=schema.PAIR_SCORES)
-
-
 # coarse cogroup salt: pair-scoring tasks each handle ~(pairs/GROUPS)
 # pairs. Scale note: at 100 TB raise via env (or derive from the pairs
 # stage row count) so a group stays ~10^5 pairs; block integrity is NOT
@@ -232,19 +214,20 @@ def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
                               groups: int = PAIR_SCORE_GROUPS) -> DataFrame:
     """Pair scoring without the per-pair feature blow-up.
 
-    ``attach_sides`` ships BOTH mentions' weight arrays once per pair —
-    with avg pair-degree ~25 that is a ~25x amplification of the fat
-    array payload through the join shuffle AND the JVM→Arrow→Python
-    hop, which makes the stage memory-bandwidth-bound (it stops scaling
-    with cores, and at 100 TB it is the dominant shuffle).
+    Joining both mentions' features onto every pair would ship each
+    mention's weight arrays once per pair — with avg pair-degree ~25 that
+    is a ~25x amplification of the fat array payload through the join
+    shuffle AND the JVM→Arrow→Python hop, which makes the stage
+    memory-bandwidth-bound (it stops scaling with cores, and at 100 TB it
+    is the dominant shuffle).
 
     Instead: key every pair by a coarse group (hash of its block_key),
     build the distinct (group, url) membership, join mention_feats ONCE
-    per member, and cogroup(pairs, member_feats) → applyInPandas. Each
-    mention's arrays now cross the wire once per block it actually
-    pairs in (~1-3x) instead of once per pair (~25x). The Python side
-    reassembles the sided frame with O(1) indexer lookups and calls the
-    SAME ``score_pairs`` kernel — bitwise-identical output rows.
+    per member, and cogroup(pairs, member_feats) → applyInArrow. Each
+    mention's arrays cross the wire once per block it actually pairs in
+    (~1-3x) instead of once per pair (~25x). The Python side indexes the
+    pairs into the member table and calls ``score_pairs_indexed_vec``,
+    the bitwise twin of the oracle's scalar ``score_pairs``.
 
     The coarse salt bounds per-task group size: blocks hashing to the
     same group are scored together (the kernel is per-pair, so group
@@ -270,39 +253,15 @@ def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
     side = urls.join(mention_feats.hint("shuffle_hash"), "url")
 
     def score_group(pairs_tbl, memb_tbl):
-        # Arrow-native marshalling (applyInArrow): the kernel's math is
-        # untouched — only the batch conversion changes. The fat
-        # w_toks/w_vals list columns become zero-copy numpy slices over
-        # the Arrow buffers instead of one Python list object per cell
-        # (the applyInPandas conversion built ~#members × avg_len × 2
-        # boxed objects per batch, which dominated the stage, not the
-        # scoring itself).
         import numpy as np
         import pyarrow as pa
 
         from webr.features import (
-            FEATURE_COLUMNS, MEMBER_COLUMNS, score_pairs_indexed_vec,
+            FEATURE_COLUMNS, member_table, score_pairs_indexed_vec,
         )
 
-        def list_col_views(name: str, np_dtype) -> list:
-            arr = memb_tbl.column(name).combine_chunks()
-            flat = arr.values.to_numpy(zero_copy_only=False).astype(
-                np_dtype, copy=False)
-            offs = arr.offsets.to_numpy(zero_copy_only=False)
-            return [flat[offs[i]:offs[i + 1]] for i in range(len(arr))]
-
-        memb = {}
-        for c in MEMBER_COLUMNS:
-            if c == "w_toks":
-                memb[c] = list_col_views(c, np.int64)
-            elif c == "w_vals":
-                memb[c] = list_col_views(c, np.float64)
-            else:
-                # scalar + title_toks columns are member-sized (~1/25 of
-                # the pair count) — plain conversion is cheap
-                memb[c] = memb_tbl.column(c).to_pylist()
-        pos = {u: i for i, u in enumerate(memb[
-            "url"])}
+        memb = member_table(memb_tbl)
+        pos = {u: i for i, u in enumerate(memb["url"])}
 
         def pair_index(col_name: str) -> list:
             # dictionary-encode first: each url repeats ~pair-degree

@@ -1,12 +1,14 @@
 """Pairwise feature + scoring kernel, shared by oracle and engine.
 
-``score_pairs(pairs_pdf, idf)`` is the batched kernel: one pandas DataFrame
-of candidate pairs in, features + calibrated score out. The engine calls it
-inside an Arrow-batched ``mapInPandas`` (analog of the reference's single
-batched ``predict_proba`` over the per-block feature matrix,
-dao/author_block.py:357-410); the NumPy oracle calls it directly. Floating
-point is bitwise-identical on both sides because token accumulation is done
-in sorted-key order.
+One way to score a pair: the engine (pipeline ``pair_scores`` stage and
+the record query) calls ``score_pairs_indexed_vec`` on a member table plus
+pair index arrays inside an Arrow-batched cogroup (analog of the
+reference's single batched ``predict_proba`` over the per-block feature
+matrix, dao/author_block.py:357-410). ``score_pairs(pairs_pdf)`` — one
+pandas DataFrame of sided candidate pairs in, features + calibrated score
+out — is its scalar spec twin, used only by the oracle. Floating point is
+bitwise-identical on both sides because token accumulation is done in
+sorted-key order.
 
 Features (SURVEY §2.7): Jaro-Winkler on full names (F2), Soundex agreement
 on last names (F4), Jaccard-with-eps on title tokens (F1), TF-IDF cosine on
@@ -136,6 +138,19 @@ def sparse_cosine_sorted(t1, v1, n1: float, t2, v2, n2: float) -> float:
     return acc / (n1 * n2)
 
 
+def profile_arrays(items) -> tuple[list[int], list[float], float]:
+    """A cluster profile's (token, weight) items -> (sorted token ids,
+    weights aligned, L2 norm), the operand shape of
+    ``sparse_cosine_sorted``. Entity profiles keep human-readable tokens;
+    this hashes them into the int64 id space of the weight arrays."""
+    entries = sorted((token_hash(t), v) for t, v in items)
+    vals = [v for _, v in entries]
+    acc = 0.0
+    for v in vals:
+        acc += v * v
+    return [h for h, _ in entries], vals, acc ** 0.5
+
+
 def host_similarity(ha: str, hb: str) -> float:
     if not ha and not hb:
         return 0.0
@@ -150,6 +165,26 @@ def _sigmoid(x: float) -> float:
 MEMBER_COLUMNS = ["url", "warc_ts", "doc_id", "name_norm", "first",
                   "middle", "last", "title_toks", "host",
                   "w_toks", "w_vals", "w_norm"]
+
+
+def member_table(tbl) -> dict:
+    """MEMBER_COLUMNS -> per-row values of an Arrow table, the ``memb``
+    input of the kernels below. The fat w_toks/w_vals list columns become
+    zero-copy numpy slices over the Arrow buffers instead of one Python
+    list object per cell (boxing ~#members × avg_len × 2 objects per
+    batch would cost more than the scoring itself); the other columns
+    are member-sized, so plain conversion is cheap."""
+    out = {}
+    for c in MEMBER_COLUMNS:
+        if c in ("w_toks", "w_vals"):
+            arr = tbl.column(c).combine_chunks()
+            flat = arr.values.to_numpy(zero_copy_only=False).astype(
+                np.int64 if c == "w_toks" else np.float64, copy=False)
+            offs = arr.offsets.to_numpy(zero_copy_only=False)
+            out[c] = [flat[offs[i]:offs[i + 1]] for i in range(len(arr))]
+        else:
+            out[c] = tbl.column(c).to_pylist()
+    return out
 
 
 def score_pairs_indexed(memb: dict, i1, i2) -> dict:

@@ -56,16 +56,6 @@ MENTION_FEATS = StructType([
     StructField("w_norm", DoubleType(), True),
 ])
 
-_side = [(f.name, f.dataType) for f in MENTION_FEATS.fields
-         if f.name != "url"]
-
-PAIRS = StructType(
-    [StructField("url_1", StringType(), False),
-     StructField("url_2", StringType(), False),
-     StructField("block_key", StringType(), True)]
-    + [StructField(f"{n}_{s}", t, True) for s in ("1", "2") for n, t in _side]
-)
-
 PAIR_SCORES = StructType([
     StructField("url_1", StringType(), False),
     StructField("url_2", StringType(), False),
