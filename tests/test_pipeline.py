@@ -290,3 +290,90 @@ def test_er_pipeline_f1_driver_row(spark):
     assert row.pairwise_f1 >= 0.99
     assert row.n_labeled_pairs == len(pairs)
     assert row.tp > 0 and row.fn == 0
+
+
+def test_stage_write_reads_back_without_schema_job(spark, warehouse_dir):
+    """A stage rebuild is ONE Spark job, the parquet write: the
+    checkpoint is read back with the schema just written instead of
+    inferring it from the footers (one more job per stage), and the
+    manifest still records the schema inference would give."""
+    import os
+
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    df = spark.range(50).selectExpr("id", "cast(id AS string) AS s",
+                                    "array(id, id + 1) AS a",
+                                    "id % 2 = 0 AS even")
+    sc = spark.sparkContext
+    group = "stage-rebuild-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = wh.stage("t", "snap-1", lambda: df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    inferred = spark.read.parquet(os.path.join(warehouse_dir, "t", "data"))
+    assert wh.manifest("t")["schema"] == inferred.schema.json()
+    assert out.schema == inferred.schema
+    assert sorted(out.collect()) == sorted(inferred.collect())
+
+
+def test_manifest_schema_equals_inferred(spark, pipeline_out):
+    """Every stage manifest records byte-for-byte the schema Spark infers
+    from the checkpoint's parquet files."""
+    import json
+    import os
+    from urllib.parse import urlparse
+    for table, df in pipeline_out.items():
+        data = os.path.dirname(urlparse(df.inputFiles()[0]).path)
+        with open(os.path.join(os.path.dirname(data),
+                               "_manifest.json")) as f:
+            man = json.load(f)
+        assert man["table"] == table
+        assert man["schema"] == spark.read.parquet(data).schema.json(), table
+        assert df.schema == spark.read.parquet(data).schema, table
+
+
+def test_overlapped_branch_failure_is_prompt(spark, pages_df, warehouse_dir,
+                                             monkeypatch):
+    """A failure in the pairs branch surfaces at once, naming its stage,
+    while the concurrent idf -> mention_feats branch is still inside a
+    slow Spark job; that job is cancelled and nothing after it runs."""
+    import time
+
+    from webr import engine, schema
+    slow_s = 90
+    orig_idf = engine.build_idf
+
+    def slow_idf(mentions, n_mentions):
+        def sleepy(batches):
+            import time
+            time.sleep(slow_s)
+            yield from batches
+        return orig_idf(mentions, n_mentions).mapInPandas(
+            sleepy, schema=schema.IDF)
+
+    failed_at = []
+
+    def failing_pairs(mentions):
+        time.sleep(3)  # the feats branch's slow job is running by now
+        failed_at.append(time.monotonic())
+        raise RuntimeError("injected pairs failure")
+
+    monkeypatch.setattr(engine, "build_idf", slow_idf)
+    monkeypatch.setattr(engine, "build_pairs", failing_pairs)
+    monkeypatch.delenv("WEBR_OVERLAP_STAGES", raising=False)
+    pipe = engine.Pipeline(spark, warehouse_dir, input_id="branch-fail-v1")
+    with pytest.raises(RuntimeError, match="injected pairs failure") as ei:
+        pipe.run(pages_df)
+    waited = time.monotonic() - failed_at[0]
+    assert waited < slow_s / 3, waited
+    assert "webr: stage 'pairs' failed" in ei.value.__notes__
+    assert pipe.wh.manifest("mentions") is not None
+    for table in ("idf", "mention_feats", "pairs"):
+        assert pipe.wh.manifest(table) is None, table
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 30
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert tracker.getActiveJobsIds() == []

@@ -63,7 +63,6 @@ class Warehouse:
     # -- io ----------------------------------------------------------------
     def write(self, table: str, df: DataFrame, snapshot: str,
               lineage: dict | None = None,
-              partition_by: list[str] | None = None,
               observation=None) -> DataFrame:
         """Write + manifest. ``observation``: a pyspark Observation
         already attached to ``df`` via ``df.observe`` — its metrics are
@@ -80,11 +79,10 @@ class Warehouse:
         data = os.path.join(d, "data")
         if os.path.exists(d):
             shutil.rmtree(d)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data)
-        out = self.spark.read.parquet(data)
+        df.write.mode("overwrite").parquet(data)
+        # read back with the schema just written: inferring it would
+        # launch one more Spark job (a parquet footer read) per write
+        out = self.spark.read.schema(df.schema).parquet(data)
         # row counts from parquet footers (pyarrow metadata) — a full
         # Spark re-scan per stage was pure flat overhead
         import pyarrow.dataset as pads
@@ -198,7 +196,6 @@ class Warehouse:
     # -- stage runner (resume point) ---------------------------------------
     def stage(self, table: str, snapshot: str, build,
               lineage: dict | None = None,
-              partition_by: list[str] | None = None,
               observation=None) -> DataFrame:
         """Return checkpointed stage output; rebuild only when the
         snapshot fingerprint (spec + upstream lineage) changed.
@@ -207,8 +204,16 @@ class Warehouse:
         if self.has_snapshot(table, snapshot):
             return self.read(table)
         t0 = time.monotonic()
-        out = self.write(table, build(), snapshot, lineage, partition_by,
-                         observation=observation)
+        try:
+            out = self.write(table, build(), snapshot, lineage,
+                             observation=observation)
+        except Exception as e:
+            # name the stage on the error itself, keeping its type: under
+            # overlapped branches the traceback alone does not say which
+            # stage's job failed
+            if hasattr(e, "add_note"):  # Python >= 3.11
+                e.add_note(f"webr: stage {table!r} failed")
+            raise
         if os.environ.get("WEBR_STAGE_TIMING"):
             # single write incl. newline: stages may finish concurrently
             # (overlapped pipeline branches) and interleaved partial

@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import math
 import os
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Iterator
 
 import pandas as pd
@@ -388,6 +389,42 @@ def build_entities(mentions: DataFrame, idf: DataFrame,
 # --------------------------------------------------------------------------
 # orchestrated, checkpointed run
 
+def run_branches(spark: SparkSession, branches: list) -> list:
+    """Run independent pipeline branches from one driver thread each and
+    return their results in order.
+
+    The first branch to fail ends the run at once: every other branch's
+    Spark jobs, running or still to come, are cancelled through its own
+    job group, the other branches are awaited (cancelled, they stop
+    within seconds, so no thread is left writing checkpoints), and the
+    first error is re-raised. ``Warehouse.stage`` has already named the
+    failing stage on it."""
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex[:12]
+    groups = [f"webr-branch-{run_id}-{i}" for i in range(len(branches))]
+
+    def run(group: str, branch):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        sc.setLocalProperty("spark.job.interruptOnCancel", "true")
+        try:
+            return branch()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+    with ThreadPoolExecutor(max_workers=len(branches)) as ex:
+        futs = [ex.submit(run, g, b) for g, b in zip(groups, branches)]
+        wait(futs, return_when=FIRST_EXCEPTION)
+        failed = next((f for f in futs
+                       if f.done() and f.exception() is not None), None)
+        if failed is not None:
+            for g, f in zip(groups, futs):
+                if f is not failed:
+                    sc._jsc.sc().cancelJobGroupAndFutureJobs(g)
+            raise failed.exception()
+    return [f.result() for f in futs]
+
+
 class Pipeline:
     """Checkpointed ER pipeline over a Warehouse. ``input_id`` must change
     when the input data changes (e.g. path + row count); every stage
@@ -455,11 +492,8 @@ class Pipeline:
                             lineage={"mentions": s_m})
 
         if os.environ.get("WEBR_OVERLAP_STAGES", "1") != "0":
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_feats = ex.submit(_branch_feats)
-                fut_pairs = ex.submit(_branch_pairs)
-                idf, mention_feats = fut_feats.result()
-                pairs = fut_pairs.result()
+            (idf, mention_feats), pairs = run_branches(
+                self.spark, [_branch_feats, _branch_pairs])
         else:
             idf, mention_feats = _branch_feats()
             pairs = _branch_pairs()

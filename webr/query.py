@@ -11,9 +11,13 @@ Two semantic stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-Request shape — two Python passes. A Python stage costs about 0.25 s
-on a 4-core host whatever its size (a JVM-only job about 0.02 s), so the
-request is built around how many it runs:
+Request shape — two Python passes. A Python stage has a fixed cost
+whatever its size, so the request is built around how many it runs. On
+a 4-core host that cost was about 0.25 s per task (a JVM-only job about
+0.02 s), mostly the worker re-reading the directories of pyspark.zip,
+the py4j zip and the spark-core jar at the start of every task; with
+the guard in ``webr/__init__.py`` a warm 4-task trivial ``mapInPandas``
+takes about 0.26 s end to end (0.70 s without it):
   * ``prepare_query_mentions``: ONE Arrow pass derives the query pages'
     mentions and tf-idf weight arrays (the corpus's shared kernels, with
     the CORPUS idf — a query must not shift corpus statistics) and
