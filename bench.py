@@ -5,23 +5,24 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
 The default mode taskset-pins the process tree to exactly $CPUS cores
 and keeps the best of $SPARK_GRAFT_BENCH_RUNS (default 2) runs per
-query — same discipline as --scaling — so round-over-round headline
-deltas measure the code, not host contention.
+query, so round-over-round headline deltas measure the code, not host
+contention.
 
 Modes:
   python bench.py                  # headline bench (one JSON line)
   python bench.py --er-only        # just the ER pipeline (pages/sec)
-  python bench.py --scaling        # run ER pipeline at local[8] and
-                                   # local[32], write BENCH/SCALING_LAST.md
+
+Per-stage attribution (task time, Python-worker time, shuffle bytes)
+comes from ``perfbench/run.py --trace 1``, not from this script.
 """
 
 from __future__ import annotations
 
-import re
+import atexit
+import functools
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
@@ -37,9 +38,9 @@ BENCH_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
 
 def _pin_self() -> None:
-    """Re-exec the whole bench under taskset (same rule as --scaling):
-    unpinned, the JVM GC/shuffle threads and Python workers wander the
-    host's CPUs and round-over-round deltas are mostly host noise."""
+    """Re-exec the whole bench under taskset: unpinned, the JVM
+    GC/shuffle threads and Python workers wander the host's CPUs and
+    round-over-round deltas are mostly host noise."""
     if shutil.which("taskset") and not os.environ.get("WEBR_BENCH_PINNED"):
         env = dict(os.environ, WEBR_BENCH_PINNED="1")
         os.execvpe("taskset",
@@ -89,27 +90,24 @@ def bench_queries(spark) -> dict[str, float]:
     return out
 
 
-_PAGES_CACHE: dict[float, str] = {}
-
-
+@functools.cache
 def _pages_parquet(spark) -> tuple[str, int]:
-    """Materialize the synthetic corpus as a parquet table ONCE (untimed):
-    the pipeline input per input_hint is a table scan, not a driver-held
-    pandas frame (whose serial Arrow serving would dominate stage 0)."""
-    if ER_SCALE not in _PAGES_CACHE:
-        from webr import schema
-        from webr.synth import generate_pages, pages_to_pandas
-        pages_pd = pages_to_pandas(generate_pages(seed=42, scale=ER_SCALE))
-        d = os.path.join(tempfile.gettempdir(),
-                         f"webr_bench_pages_{ER_SCALE}")
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            (spark.createDataFrame(
-                pages_pd[["url", "warc_ts", "html", "text", "lang"]],
-                schema=schema.PAGES)
-             .repartition(64).write.mode("overwrite").parquet(d))
-        _PAGES_CACHE[ER_SCALE] = f"{d}|{len(pages_pd)}"
-    d, n = _PAGES_CACHE[ER_SCALE].split("|")
-    return d, int(n)
+    """Materialize the synthetic corpus as a parquet table ONCE per
+    process (untimed): the pipeline input per input_hint is a table
+    scan, not a driver-held pandas frame (whose serial Arrow serving
+    would dominate stage 0). The table lives in a temp dir this process
+    owns and removes at exit, so it always holds the corpus whose page
+    count it returns."""
+    from webr import schema
+    from webr.synth import generate_pages, pages_to_pandas
+    pages_pd = pages_to_pandas(generate_pages(seed=42, scale=ER_SCALE))
+    d = tempfile.mkdtemp(prefix="webr_bench_pages_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    (spark.createDataFrame(
+        pages_pd[["url", "warc_ts", "html", "text", "lang"]],
+        schema=schema.PAGES)
+     .repartition(64).write.mode("overwrite").parquet(d))
+    return d, len(pages_pd)
 
 
 def bench_er_pipeline(spark) -> dict:
@@ -172,265 +170,10 @@ def main_er_only() -> None:
     print(json.dumps(er))
 
 
-def _host_ceiling(lo: int, hi: int, units: int | None = None) -> dict:
-    """Pure-Python multiprocessing probe (no Spark): the max speedup THIS
-    host can deliver lo->hi processes. The sandbox's vCPUs are
-    oversubscribed by the hypervisor (probes show pure integer loops gain
-    only ~2-3x from 8->32 procs on an allegedly 32-core box), so the
-    pipeline's measured ratio must be read against this ceiling."""
-    env = dict(os.environ)
-    if units:
-        env["WEBR_PROBE_UNITS"] = str(units)
-    p = subprocess.run(
-        [sys.executable,
-         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                      "tools", "host_scaling_probe.py"),
-         str(lo), str(hi)],
-        capture_output=True, text=True, timeout=600, env=env)
-    try:
-        return json.loads(p.stdout.strip().splitlines()[-1])
-    except (ValueError, IndexError):
-        return {}
-
-
-def _run_er_leg(cores: int) -> dict:
-    """One pinned --er-only pipeline run at `cores` cores. Captures the
-    per-stage walls (WEBR_STAGE_TIMING prints from the warehouse stage
-    builder) so the scaling report can show WHICH stage stops scaling
-    first, not just the end-to-end ratio."""
-    env = dict(os.environ,
-               SPARK_GRAFT_CPUS=str(cores),
-               WEBR_STAGE_TIMING="1",
-               WEBR_SHUFFLE_PARTITIONS=str(max(2 * cores, 16)))
-    # taskset pins the whole process tree (JVM + GC/shuffle threads +
-    # forked python workers) to exactly `cores` CPUs: without it the
-    # small leg borrows the other host CPUs for GC/IO/Arrow work and
-    # the efficiency ratio is fiction.
-    pin = ["taskset", "-c", f"0-{cores - 1}"] \
-        if shutil.which("taskset") else []
-    for attempt in range(2):  # one retry: a leg lost to a transient
-        # host hiccup shouldn't abort a multi-leg invocation
-        p = subprocess.run(
-            pin + [sys.executable, os.path.abspath(__file__), "--er-only"],
-            capture_output=True, text=True, env=env, timeout=3600)
-        lines = [ln for ln in p.stdout.strip().splitlines()
-                 if ln.startswith("{")]
-        if lines:
-            res = json.loads(lines[-1])
-            stages = {}
-            for ln in p.stdout.splitlines():
-                m = re.match(r"\[stage\] (\w+): ([0-9.]+)s", ln.strip())
-                if m:
-                    stages[m.group(1)] = float(m.group(2))
-            res["stages"] = stages
-            return res
-        print(f"[leg local[{cores}] attempt {attempt}] no result; "
-              f"stderr tail:\n" + "\n".join(
-                  p.stderr.strip().splitlines()[-15:]), file=sys.stderr)
-    raise RuntimeError(f"er leg at {cores} cores failed twice")
-
-
-def main_scaling() -> None:
-    """north_rule scaling evidence: same ER job at N and 4N cores
-    (sandbox stand-in for N vs 4N executors), efficiency =
-    throughput(4N) / (4 * throughput(N)).
-
-    Methodology (round 4): the host-ceiling probe and the pipeline legs
-    are INTERLEAVED in one invocation — probe, lo-leg, probe, hi-leg,
-    probe, repeated $SPARK_GRAFT_SCALING_RUNS times (default 2) — so
-    every pipeline leg is bracketed by two probe samples drawn from the
-    same hypervisor window, and the normalized column divides by the
-    ceiling the host actually offered WHILE the legs ran (previous
-    rounds probed once, before or after, which made the normalization
-    unauditable when the window shifted). Per-leg wall is best-of-runs:
-    wall-clock on this shared host is ±20-50% noisy and the minimum is
-    the least-contended execution.
-
-    Core pairs via $SPARK_GRAFT_SCALING_PAIRS (default "1,4;4,16" —
-    1→4 is where hypervisor oversubscription bites least, 4→16 is the
-    widest pair with physical headroom; 8→32 tops out at the host's own
-    ~2.6x ceiling). Legacy $SPARK_GRAFT_SCALING_CORES ("lo,hi")
-    overrides with a single pair."""
-    runs = int(os.environ.get("SPARK_GRAFT_SCALING_RUNS", "2"))
-    probe_units = int(os.environ.get("WEBR_PROBE_UNITS_QUICK", "768"))
-    legacy = os.environ.get("SPARK_GRAFT_SCALING_CORES")
-    pairs_spec = legacy if legacy else os.environ.get(
-        "SPARK_GRAFT_SCALING_PAIRS", "1,4;4,16")
-    pairs = [tuple(int(c) for c in p.split(","))
-             for p in pairs_spec.split(";")]
-
-    all_pairs = []
-    for lo, hi in pairs:
-        legs = []  # interleaved: probe, lo, probe, hi, probe, lo, ...
-        probes = [_host_ceiling(lo, hi, probe_units)]
-        for r in range(runs):
-            for cores in (lo, hi):
-                res = _run_er_leg(cores)
-                probes.append(_host_ceiling(lo, hi, probe_units))
-                leg = {"cores": cores, "run": r, **res,
-                       "probe_before":
-                           probes[-2].get(f"host_speedup_{lo}_to_{hi}"),
-                       "probe_after":
-                           probes[-1].get(f"host_speedup_{lo}_to_{hi}")}
-                legs.append(leg)
-                print(f"[{lo},{hi}] local[{cores}] run {r}: "
-                      f"{res['pages_per_sec']} p/s, probes "
-                      f"{leg['probe_before']}/{leg['probe_after']}",
-                      file=sys.stderr)
-        best = {c: max((x for x in legs if x["cores"] == c),
-                       key=lambda x: x["pages_per_sec"])
-                for c in (lo, hi)}
-        thr_lo = best[lo]["pages_per_sec"]
-        thr_hi = best[hi]["pages_per_sec"]
-        eff = round(thr_hi / ((hi / lo) * thr_lo), 3)
-        # normalized: divide the measured speedup by the mean of the
-        # probe samples bracketing the two best legs (same-window
-        # numerator and denominator — auditable from the per-leg table)
-        brackets = [v for b in best.values()
-                    for v in (b["probe_before"], b["probe_after"])
-                    if v is not None]
-        host_mean = (round(sum(brackets) / len(brackets), 3)
-                     if brackets else None)
-        norm = (round((thr_hi / thr_lo) / host_mean, 3)
-                if host_mean else None)
-        # per-run (same-window) efficiency: pair each run's lo and hi
-        # legs — they ran back-to-back inside one bracket window, so
-        # numerator and denominator sample the SAME hypervisor weather.
-        # best-of pairing can mix windows (a fast-window lo leg against
-        # a slow-window hi leg skews either way); reporting BOTH, for
-        # every run, keeps the statistic un-cherry-pickable.
-        run_effs = []
-        for r in range(runs):
-            rl = {x["cores"]: x for x in legs if x["run"] == r}
-            if lo in rl and hi in rl:
-                run_effs.append(round(
-                    rl[hi]["pages_per_sec"]
-                    / ((hi / lo) * rl[lo]["pages_per_sec"]), 3))
-        all_pairs.append({"lo": lo, "hi": hi, "legs": legs, "best": best,
-                          "raw_efficiency": eff,
-                          "run_efficiencies": run_effs,
-                          "host_bracket_mean": host_mean,
-                          "normalized_efficiency": norm})
-
-    _write_scaling_md(all_pairs, runs, probe_units)
-    print(json.dumps({"pairs": [
-        {k: p[k] for k in ("lo", "hi", "raw_efficiency",
-                           "run_efficiencies", "host_bracket_mean",
-                           "normalized_efficiency")}
-        for p in all_pairs], "legs": [p["legs"] for p in all_pairs]}))
-
-
-def _write_scaling_md(all_pairs: list, runs: int, probe_units: int) -> None:
-    n_pages = all_pairs[0]["legs"][0]["er_pages"]
-    n_clusters = all_pairs[0]["legs"][0]["er_clusters"]
-    lines = [f"""# BENCH/BASELINE — measured throughput & scaling (north_rule evidence)
-
-Full ER pipeline (extract → blocking → pair scoring → constrained CC
-clustering → entities) over the deterministic synthetic corpus
-(seed=42, scale={ER_SCALE}, {n_pages} pages) materialized as a parquet
-table, fresh warehouse per run. Single-JVM local mode is the sandbox
-stand-in for N vs 4N executors; every leg is **taskset-pinned to
-exactly its core count**.
-
-Round-4 methodology: the host-ceiling probe (tools/
-host_scaling_probe.py, {probe_units} units — regex + md5 + numpy, the
-ER kernels' mix) and the pipeline legs are **interleaved A/B/A/B in one
-invocation**: probe, lo-leg, probe, hi-leg, probe, ×{runs}. Every leg
-below shows the two probe samples that bracket it, so the normalized
-column divides by the ceiling the host offered WHILE that leg ran —
-the round-3 judge flagged one-shot probes as unauditable. Reproduce:
-`SPARK_GRAFT_ER_SCALE={ER_SCALE} python bench.py --scaling`.
-"""]
-    for p in all_pairs:
-        lo, hi = p["lo"], p["hi"]
-        lines.append(f"\n## local[{lo}] → local[{hi}] (N → 4N)\n")
-        lines.append("| leg | run | wall (s) | pages/s | probe before "
-                     "| probe after |\n|---|---|---|---|---|---|")
-        for leg in p["legs"]:
-            star = " ★" if leg is p["best"][leg["cores"]] else ""
-            lines.append(
-                f"| local[{leg['cores']}]{star} | {leg['run']} "
-                f"| {leg['er_pipeline_sec']} | {leg['pages_per_sec']} "
-                f"| {leg['probe_before']}× | {leg['probe_after']}× |")
-        lines.append(f"""
-(★ = best-of-{runs} leg used below; probe columns = host-achievable
-{lo}→{hi} process speedup sampled immediately before/after that leg.)
-
-- **raw scaling efficiency** = thr({hi}) / ({hi // lo} × thr({lo})) =
-  **{p['raw_efficiency']}** (north_rule target ≥ 0.8; best-of legs —
-  may pair legs from different probe windows)
-- **same-window per-run efficiencies** (each run's lo/hi legs ran
-  back-to-back inside one bracket window; all runs listed, none
-  dropped): **{", ".join(str(e) for e in p['run_efficiencies'])}**
-- host bracket mean (probes around the two ★ legs) =
-  **{p['host_bracket_mean']}×** of an ideal {hi // lo}×
-- **host-normalized efficiency** = measured speedup / host bracket
-  mean = **{p['normalized_efficiency']}**
-""")
-        st_lo = p["best"][lo].get("stages") or {}
-        st_hi = p["best"][hi].get("stages") or {}
-        if st_lo and st_hi:
-            lines.append(f"\n### Per-stage walls (★ legs), "
-                         f"local[{lo}] vs local[{hi}]\n")
-            lines.append(f"| stage | local[{lo}] (s) | local[{hi}] (s) "
-                         f"| stage speedup | share @ local[{hi}] |\n"
-                         "|---|---|---|---|---|")
-            tot_hi = sum(st_hi.values()) or 1.0
-            for st in [s for s in
-                       ("mentions", "idf", "mention_feats", "pairs",
-                        "pair_scores", "clusters", "entities")
-                       if s in st_lo and s in st_hi]:
-                sp = round(st_lo[st] / st_hi[st], 2) if st_hi[st] else None
-                lines.append(
-                    f"| {st} | {st_lo[st]} | {st_hi[st]} | {sp}× "
-                    f"| {100 * st_hi[st] / tot_hi:.0f}% |")
-            lines.append(
-                "\n(stage speedup = lo-leg wall / hi-leg wall for the ★ "
-                "legs — identifies which stage stops scaling first; "
-                "share = that stage's fraction of the hi leg's summed "
-                "stage wall.)")
-    lines.append(f"""
-## Reading the numbers
-
-This sandbox's vCPUs are hypervisor-oversubscribed: the pure-Python
-multiprocessing probe has ZERO shared state yet does not reach the
-ideal 4× on any pair wider than 1→4. No distributed design can scale
-past the host's own process ceiling in a single VM. On a real
-1000-executor cluster per-executor resources are NOT oversubscribed,
-so the algorithmic properties evidenced here (no driver-side loops,
-bounded per-block work, one fat-array shuffle per member instead of
-per pair, map-side-combined aggregations, O(log P) CC rounds) are what
-determine the two-cluster-size criterion.
-
-Clusters produced: {n_clusters} — identical at every parallelism level
-(tests/test_pipeline.py::test_partition_invariance asserts cluster
-equality across partitioning).
-
-## History (previous rounds, one-shot probe methodology)
-
-Round 3 (scale 15, best-of-2, final build): 2→8 raw 0.720 / norm 0.73
-(probe 3.92×); 4→16 raw 0.703 / norm 0.79 (probe 3.55×); 4×-input
-(scale 30) 4→16 raw 0.583 / norm 0.735 (probe 3.17×). Round 2: raw
-0.652 / 0.714, norm 1.00 / 1.12 (probes 2.61× / 2.56×). Round 1: raw
-0.721 / 0.678, norm 0.91 / 0.98 (probe 3.17×). Across rounds, raw
-efficiency sits in a 0.58-0.72 band while the host probe swings
-2.6-3.9× with hypervisor weather; those probes were single-shot
-(before OR after the legs), which is exactly what the interleaved
-bracketing above fixes.
-""")
-    # BENCH/BASELINE.md is the hand-curated multi-invocation audit
-    # document (it keeps every invocation's table + committed raw JSON);
-    # a fresh run must not clobber that history, so the generated
-    # single-invocation report goes to a sidecar for manual merge.
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/SCALING_LAST.md", "w") as f:
-        f.write("\n".join(lines))
-
-
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        main_scaling()
-    elif "--er-only" in sys.argv:
+    if set(sys.argv[1:]) - {"--er-only"}:
+        sys.exit("usage: python bench.py [--er-only]")
+    if "--er-only" in sys.argv:
         main_er_only()
     else:
         main_default()

@@ -400,6 +400,94 @@ def test_streaming_sessionized_counts_matches_batch(spark):
         assert g == w, (u, g, w)
 
 
+def test_sessionize_fractional_gaps_agree(spark):
+    """Sub-second event times around the 1800 s gap: the DuckDB twin, the
+    Spark batch query and the drained streaming session_window must give
+    the same sessions. Gaps straddle the threshold (exactly 1800 s stays,
+    1800.5 s splits) from start times on both sides of a half second, so
+    whole-second truncation of either side shows up as a mismatch."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from webr.queries.relational import (
+        SQL_SESSIONIZE_EVENTS, q_sessionize_events,
+    )
+    from webr.streaming import sessionized_counts
+
+    gaps = [1799.5, 1800.0, 1800.5, 1801.0, 1801.5]
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+
+    def chain(user, start, steps):
+        t = base + dt.timedelta(seconds=start)
+        for i, g in enumerate([0.0] + steps):
+            t += dt.timedelta(seconds=g)
+            rows.append((len(rows), t, user, "click", 0.25 * (i + 1), ""))
+
+    user = 0
+    for frac in (0.1, 0.7):
+        for g in gaps:
+            chain(user, user * 100_000 + frac, [g, g])
+            user += 1
+    chain(user, user * 100_000 + 0.3, gaps)
+    sch = pa.schema([("event_id", pa.int64()), ("ts", pa.timestamp("us")),
+                     ("user_id", pa.int64()), ("event_type", pa.string()),
+                     ("value", pa.float64()), ("props", pa.string())])
+
+    def write(path, rs):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(sch.names, r)) for r in rs], schema=sch), path)
+
+    d = tempfile.mkdtemp(prefix="webr_sessfrac_")
+    try:
+        write(os.path.join(d, "events.parquet"), rows)
+        con = duckdb.connect()
+        con.execute("CREATE VIEW events AS SELECT * FROM read_parquet("
+                    f"'{d}/events.parquet')")
+        cols = ["user_id", "session_no", "n_events", "session_cents"]
+        want = con.sql(SQL_SESSIONIZE_EVENTS).df()[cols]
+        batch = q_sessionize_events(spark, d).toPandas()[cols]
+
+        # drain the stream: two far-future sentinel drops, read as later
+        # micro-batches, push the watermark past every real session
+        write(os.path.join(d, "s", "d0", "part.parquet"), rows)
+        last = max(r[1] for r in rows)
+        for i in (1, 2):
+            write(os.path.join(d, "s", f"d{i}", "part.parquet"),
+                  [(10**9 + i, last + dt.timedelta(days=i), -1, "sentinel",
+                    0.0, "")])
+        ev_schema = spark.read.parquet(f"{d}/events.parquet").schema
+        q = (sessionized_counts(
+                spark.readStream.schema(ev_schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(os.path.join(d, "s", "d*")))
+             .writeStream.outputMode("append")
+             .format("memory").queryName("sessions_frac")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(180)
+        streamed = spark.sql(
+            "SELECT * FROM sessions_frac WHERE user_id >= 0").toPandas()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    streamed["session_no"] = (streamed.groupby("user_id")["session_start"]
+                              .rank(method="first").astype("int64"))
+    streamed = streamed[cols]
+
+    def canon(df):
+        return (df.astype("int64").sort_values(["user_id", "session_no"])
+                .reset_index(drop=True))
+
+    # gaps > 1800 s split: per two-gap chain 1/1/3/3/3 sessions, twice,
+    # plus 4 for the mixed chain
+    assert len(want) == 2 * (1 + 1 + 3 + 3 + 3) + 4
+    pd.testing.assert_frame_equal(canon(batch), canon(want))
+    pd.testing.assert_frame_equal(canon(streamed), canon(want))
+
+
 def test_streaming_dedup_exact(spark, corpus_pd):
     """Watermark-scoped streaming dedup: duplicated page drops collapse
     to one row per content fingerprint."""

@@ -318,6 +318,30 @@ def test_stage_write_reads_back_without_schema_job(spark, warehouse_dir):
     assert sorted(out.collect()) == sorted(inferred.collect())
 
 
+def test_read_uses_manifest_schema(spark, warehouse_dir):
+    """Reading a table that has a manifest, directly or through a
+    resumed stage, runs no Spark job: the schema comes from the
+    manifest, not from a parquet footer read."""
+    import os
+
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    wh.stage("t", "snap-1", lambda: spark.range(50).selectExpr(
+        "id", "cast(id AS string) AS s", "array(id, id + 1) AS a"))
+    sc = spark.sparkContext
+    group = "manifest-read-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        read = wh.read("t")
+        resumed = wh.stage("t", "snap-1", lambda: 1 / 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    inferred = spark.read.parquet(os.path.join(warehouse_dir, "t", "data"))
+    assert read.schema == resumed.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect())
+
+
 def test_manifest_schema_equals_inferred(spark, pipeline_out):
     """Every stage manifest records byte-for-byte the schema Spark infers
     from the checkpoint's parquet files."""
@@ -362,7 +386,6 @@ def test_overlapped_branch_failure_is_prompt(spark, pages_df, warehouse_dir,
 
     monkeypatch.setattr(engine, "build_idf", slow_idf)
     monkeypatch.setattr(engine, "build_pairs", failing_pairs)
-    monkeypatch.delenv("WEBR_OVERLAP_STAGES", raising=False)
     pipe = engine.Pipeline(spark, warehouse_dir, input_id="branch-fail-v1")
     with pytest.raises(RuntimeError, match="injected pairs failure") as ei:
         pipe.run(pages_df)

@@ -25,6 +25,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def fingerprint(*parts: str) -> str:
@@ -113,7 +114,14 @@ class Warehouse:
         return out
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(table), "data"))
+        """Read a table back; with a manifest, under its recorded schema
+        (inferring it would launch a parquet footer-read job)."""
+        data = os.path.join(self._dir(table), "data")
+        m = self.manifest(table)
+        if m is None:
+            return self.spark.read.parquet(data)
+        return self.spark.read.schema(
+            StructType.fromJson(json.loads(m["schema"]))).parquet(data)
 
     def merge(self, table: str, df: DataFrame, keys: list[str],
               snapshot: str, lineage: dict | None = None) -> DataFrame:
@@ -203,7 +211,6 @@ class Warehouse:
         rebuilds (a resumed checkpoint never triggered the action)."""
         if self.has_snapshot(table, snapshot):
             return self.read(table)
-        t0 = time.monotonic()
         try:
             out = self.write(table, build(), snapshot, lineage,
                              observation=observation)
@@ -214,13 +221,4 @@ class Warehouse:
             if hasattr(e, "add_note"):  # Python >= 3.11
                 e.add_note(f"webr: stage {table!r} failed")
             raise
-        if os.environ.get("WEBR_STAGE_TIMING"):
-            # single write incl. newline: stages may finish concurrently
-            # (overlapped pipeline branches) and interleaved partial
-            # lines would garble the bench harness's per-stage parse
-            import sys
-            sys.stdout.write(
-                f"[stage] {table}: {time.monotonic() - t0:.2f}s "
-                f"rows={self.manifest(table)['rows']}\n")
-            sys.stdout.flush()
         return out

@@ -22,7 +22,7 @@ Scale note (10^12 docs): the ladder's second-to-last step leaves the
 remaining forest (one entry per linked vertex per surviving partition).
 Web-scale entity graphs reduce enormously (components are entity-sized),
 so the single-task final pass is usually fine — but it is guarded: when
-the residual forest exceeds ``WEBR_CC_FINAL_ROWS_MAX`` rows, ``_resolve``
+the residual forest exceeds ``CC_FINAL_ROWS_MAX`` rows, ``_resolve``
 finishes the merge fully distributed (min-label propagation over the
 partial forests to fixpoint). Partial forests are depth-1 stars, so the
 label graph's diameter is bounded by the handful of partitions being
@@ -32,7 +32,6 @@ no single task ever has to hold the forest.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -76,8 +75,7 @@ def _forest_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 # residual-forest rows above which the ladder's final pass switches from
 # one in-memory union-find task to distributed min-label propagation
-CC_FINAL_ROWS_MAX = int(os.environ.get("WEBR_CC_FINAL_ROWS_MAX",
-                                       "50000000"))
+CC_FINAL_ROWS_MAX = 50_000_000
 
 
 def _resolve(forest: DataFrame) -> DataFrame:

@@ -17,7 +17,6 @@ fingerprint, so a killed job resumes from the last complete stage
 from __future__ import annotations
 
 import math
-import os
 import uuid
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Iterator
@@ -78,8 +77,7 @@ def build_idf(mentions: DataFrame, n_mentions: int) -> DataFrame:
 # with 32 workers per host that is the practical executor-memory ceiling
 # (a 5M cap measured ~0.5-1 GB/worker). The fallback is bitwise-identical
 # (tested), so the cap trades only a little speed, never correctness.
-VOCAB_BROADCAST_MAX = int(os.environ.get("WEBR_VOCAB_BROADCAST_MAX",
-                                         "1000000"))
+VOCAB_BROADCAST_MAX = 1_000_000
 
 
 def build_mention_feats(mentions: DataFrame, idf: DataFrame,
@@ -205,10 +203,10 @@ def build_pairs(mentions: DataFrame) -> DataFrame:
 
 
 # coarse cogroup salt: pair-scoring tasks each handle ~(pairs/GROUPS)
-# pairs. Scale note: at 100 TB raise via env (or derive from the pairs
-# stage row count) so a group stays ~10^5 pairs; block integrity is NOT
+# pairs. This is the floor: Pipeline.run raises it from the pairs
+# stage row count so a group stays ~10^5 pairs; block integrity is NOT
 # required by the kernel, so the salt can split arbitrarily fine.
-PAIR_SCORE_GROUPS = int(os.environ.get("WEBR_PAIR_SCORE_GROUPS", "1024"))
+PAIR_SCORE_GROUPS = 1024
 
 
 def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
@@ -491,17 +489,13 @@ class Pipeline:
             return wh.stage("pairs", s_p, lambda: build_pairs(mentions),
                             lineage={"mentions": s_m})
 
-        if os.environ.get("WEBR_OVERLAP_STAGES", "1") != "0":
-            (idf, mention_feats), pairs = run_branches(
-                self.spark, [_branch_feats, _branch_pairs])
-        else:
-            idf, mention_feats = _branch_feats()
-            pairs = _branch_pairs()
+        (idf, mention_feats), pairs = run_branches(
+            self.spark, [_branch_feats, _branch_pairs])
 
         # scoring salt sized from the MATERIALIZED pair count (the pairs
         # manifest already knows it — no extra job): ~100k pairs/group
         # keeps every task's member+pair batch bounded at any corpus
-        # size; WEBR_PAIR_SCORE_GROUPS remains the floor. Group
+        # size; PAIR_SCORE_GROUPS remains the floor. Group
         # composition never changes output (the kernel is per-pair).
         n_pairs = wh.manifest("pairs")["rows"]
         groups = max(PAIR_SCORE_GROUPS, min(1 << 20, n_pairs // 100_000))

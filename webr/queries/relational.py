@@ -138,11 +138,14 @@ def q_sessionize_events(spark: SparkSession, sf: str) -> DataFrame:
     gap-breaks. Batch analog of session_window in streaming (§2.10)."""
     ev = read(spark, sf, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet ts is TIMESTAMP_NTZ; go through TIMESTAMP (session tz = UTC)
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
+    # parquet ts is TIMESTAMP_NTZ; go through TIMESTAMP (session tz = UTC).
+    # Microseconds, not cast(long): whole seconds would truncate a
+    # fractional gap that the DuckDB twin's epoch(ts) keeps
+    epoch_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = epoch_us - F.lag(epoch_us).over(w)
     sess = (ev.withColumn("new_sess",
-                          F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+                          F.when(gap.isNull() | (gap > 1800 * 10**6), 1)
+                          .otherwise(0))
             .withColumn("session_no",
                         F.sum("new_sess").over(
                             w.rowsBetween(Window.unboundedPreceding, 0))))

@@ -45,23 +45,20 @@ def windowed_host_counts(pages: DataFrame) -> DataFrame:
                     "n_pages"))
 
 
-def sessionized_counts(events: DataFrame, gap: str = "1801 seconds",
+def sessionized_counts(events: DataFrame, gap: str = "1800 seconds",
                        watermark: str = "2 hours") -> DataFrame:
     """Streaming sessionization via ``session_window`` (dynamic-gap
     session windows close ``gap`` after the last event; late data beyond
     ``watermark`` is dropped). The batch twin is
     queries/relational.py::q_sessionize_events (lag + cumulative sum),
-    which compares SECOND-truncated epochs and starts a new session on
-    gap STRICTLY greater than 1800 s; matching exactly needs (a) the
-    same second truncation of event time and (b) G = 1801 s, because
-    session_window splits on gap >= G while the batch rule splits on
-    gap >= 1801 whole seconds. Per-(user, session) event counts then
-    agree exactly on drained input (tested)."""
+    which starts a new session on a microsecond gap STRICTLY greater
+    than 1800 s. session_window splits on gap > G as well (an event
+    exactly G after the last one stays in its session), so G = 1800 s
+    and full-precision event time make per-(user, session) counts agree
+    exactly on drained input (tested, fractional timestamps included)."""
     # watermarks require TIMESTAMP (not NTZ); session tz is pinned UTC so
-    # the cast is value-preserving. cast->long truncates to seconds,
-    # mirroring the batch twin's epoch arithmetic.
-    events = events.withColumn(
-        "ts", F.col("ts").cast("timestamp").cast("long").cast("timestamp"))
+    # the cast is value-preserving
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (events
             .withWatermark("ts", watermark)
             .groupBy(F.session_window("ts", gap).alias("w"), "user_id")

@@ -18,15 +18,15 @@ Scale design (this is the part that has to survive real crawl files —
   the bytes of the record currently being assembled (peak ≈ one record
   + one read chunk), trimming consumed prefixes as it goes.
 * **Bounded output batches.** ``read_warc_pages`` emits pandas frames
-  capped at ``WEBR_WARC_BATCH_ROWS`` rows / ``WEBR_WARC_BATCH_BYTES``
-  of html per frame instead of one frame per file, so Arrow transfer
-  and downstream per-batch memory stay flat regardless of file size.
+  capped at ``BATCH_ROWS`` rows / ``BATCH_BYTES`` of html per frame
+  instead of one frame per file, so Arrow transfer and downstream
+  per-batch memory stay flat regardless of file size.
 * **No whole-file read for local paths.** Only the ``path`` column of
   the ``binaryFile`` source is selected (the format prunes ``content``
   when unselected), and the task opens the file itself and reads it in
-  ``WEBR_WARC_CHUNK_BYTES`` chunks. Non-local schemes (s3://, hdfs://)
-  fall back to the ``content`` column — whole compressed file in
-  memory, but decompression and parsing still stream.
+  ``CHUNK_BYTES`` chunks. Non-local schemes (s3://, hdfs://) fall back
+  to the ``content`` column — whole compressed file in memory, but
+  decompression and parsing still stream.
 
 The parser is deliberately tolerant (crawl WARCs are ragged): records
 without a target URI / Content-Length, with a negative Content-Length,
@@ -38,7 +38,6 @@ twice).
 from __future__ import annotations
 
 import io
-import os
 from typing import IO, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,10 +49,10 @@ _GZ_MAGIC = b"\x1f\x8b"
 
 # read granularity for streaming file/gzip walks; also the floor of the
 # parser's resident buffer (the ceiling is one full record)
-CHUNK_BYTES = int(os.environ.get("WEBR_WARC_CHUNK_BYTES", str(1 << 20)))
+CHUNK_BYTES = 1 << 20
 # output batch caps for read_warc_pages
-BATCH_ROWS = int(os.environ.get("WEBR_WARC_BATCH_ROWS", "2048"))
-BATCH_BYTES = int(os.environ.get("WEBR_WARC_BATCH_BYTES", str(64 << 20)))
+BATCH_ROWS = 2048
+BATCH_BYTES = 64 << 20
 # a WARC header block larger than this is corrupt — resync instead of
 # buffering without bound
 _MAX_HEADER_BYTES = 1 << 20
