@@ -27,7 +27,15 @@ finishes the merge fully distributed (min-label propagation over the
 partial forests to fixpoint). Partial forests are depth-1 stars, so the
 label graph's diameter is bounded by the handful of partitions being
 merged and propagation converges in a few rounds, each a plain shuffle —
-no single task ever has to hold the forest.
+no single task ever has to hold the forest. When the caller knows an
+upper bound on the edges (the pipeline passes the pair_scores row count)
+and twice that bound fits the budget, the ladder goes from its first
+pass straight to the final one without counting a forest.
+
+Labelling (``label_clusters``) adds one cogroup per component — the
+cannot-link replay, a pass-through for components whose name
+signatures are all compatible — and dense cluster ids; in the pipeline
+the whole clusters stage is the ladder's two passes plus one write.
 """
 
 from __future__ import annotations
@@ -36,7 +44,7 @@ from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, Window
+from pyspark.sql import DataFrame, Row
 
 from webr import spec
 
@@ -114,6 +122,42 @@ def _resolve(forest: DataFrame) -> DataFrame:
     return lab.select(F.col("v").alias("url"), F.col("lab").alias("rep"))
 
 
+def _ladder(edges: DataFrame, fanin: int, final_rows_max: int,
+            edges_max: int | None) -> tuple[DataFrame, bool]:
+    """The reduction ladder (see ``connected_components``) -> ((url, rep)
+    forest, whether its final pass ran in one task). ``edges_max``: an
+    upper bound on the edge rows that the caller already knows (the
+    pipeline passes the pair_scores row count); when twice it fits the
+    budget, the ladder goes from its first pass straight to the final
+    one without counting a forest."""
+    first = edges.schema.fields[0].dataType.simpleString()
+    out_schema = f"url {first}, rep {first}"
+    out = (edges.mapInPandas(_forest_map, out_schema)
+           .localCheckpoint(eager=True))
+    # one partition per input partition; asked of the checkpoint, whose
+    # RDD already exists, not of the edges' plan
+    n = out.rdd.getNumPartitions()
+    # a pass emits at most one row per vertex it saw, so no forest ever
+    # exceeds 2 * edges: when a known edge bound fits the single-task
+    # budget, the final pass needs no count to settle it
+    bounded = edges_max is not None and 2 * edges_max <= final_rows_max
+    while n > 1:
+        # the residual forest shrinks fast (one row per vertex per
+        # surviving partition); as soon as it fits the single-task
+        # budget, one final pass resolves it — intermediate fanin rungs
+        # would only add checkpoint round-trips. count() is cheap: out
+        # is always an eager localCheckpoint.
+        if bounded or out.count() <= final_rows_max:
+            n = 1
+        else:
+            n = max(1, n // fanin)
+            if n == 1:
+                return _resolve(out), False
+        out = (out.coalesce(n).mapInPandas(_forest_map, out_schema)
+               .localCheckpoint(eager=True))
+    return out, True
+
+
 def connected_components(edges: DataFrame, fanin: int = 8,
                          final_rows_max: int | None = None) -> DataFrame:
     """edges: (url_1, url_2). Returns (url, rep) for every url that appears
@@ -132,139 +176,112 @@ def connected_components(edges: DataFrame, fanin: int = 8,
     (parquet scan included) serially — the classic coalesce(1) trap."""
     if final_rows_max is None:
         final_rows_max = CC_FINAL_ROWS_MAX
-    first = edges.schema.fields[0].dataType.simpleString()
-    out_schema = f"url {first}, rep {first}"
-    n = edges.rdd.getNumPartitions()
-    out = (edges.mapInPandas(_forest_map, out_schema)
-           .localCheckpoint(eager=True))
-    while n > 1:
-        # the residual forest shrinks fast (one row per vertex per
-        # surviving partition); as soon as it fits the single-task
-        # budget, one final pass resolves it — intermediate fanin rungs
-        # would only add checkpoint round-trips. count() is cheap: out
-        # is always an eager localCheckpoint.
-        if out.count() <= final_rows_max:
-            n = 1
-        else:
-            n = max(1, n // fanin)
-            if n == 1:
-                return _resolve(out)
-        out = (out.coalesce(n).mapInPandas(_forest_map, out_schema)
-               .localCheckpoint(eager=True))
-    return out
+    return _ladder(edges, fanin, final_rows_max, None)[0]
 
 
-def _constrained_refine(members: DataFrame, comp_edges: DataFrame,
-                        ) -> DataFrame:
-    """Per-component cannot-link replay (C2/W2): cogroup each component's
-    members (with name fields) and edges, apply the SAME pure kernel the
-    oracle uses (webr.constraints.constrained_components) -> (url, rep)
-    where rep = min url of the constrained sub-cluster. Components are
-    entity-sized (blocking + scoring bound them), so groups are small and
-    the replay parallelizes across components."""
-    def replay(memb_pdf: pd.DataFrame,
-               edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        from webr.constraints import constrained_components
-        names = {u: (f, m) for u, f, m in zip(
-            memb_pdf["url"], memb_pdf["first"], memb_pdf["middle"])}
-        rep = constrained_components(
-            names, list(zip(edges_pdf["url_1"], edges_pdf["url_2"])))
-        # MIN_PTS applied here (the kernel already sees every member of
-        # the component): sub-clusters reduced to a single member by
-        # vetoed unions are noise — emitting only clustered urls saves a
-        # whole groupBy+join round downstream
-        sizes: dict = {}
-        for r in rep.values():
-            sizes[r] = sizes.get(r, 0) + 1
-        urls = sorted(u for u, r in rep.items()
-                      if sizes[r] >= spec.MIN_PTS)
-        return pd.DataFrame({"url": urls, "rep": [rep[u] for u in urls]})
+def _refine(memb, comp_edges):
+    """Cannot-link replay of one component (C2/W2), Arrow in and out:
+    ``memb`` (comp, url, first, middle) holds every member, ``comp_edges``
+    (comp_e, url_1, url_2) every edge. -> (url, rep) for every member;
+    rep = min url of its constrained sub-cluster, or null when that
+    sub-cluster kept fewer than MIN_PTS members (a vetoed bridge becomes
+    noise).
 
-    # comp_e, not comp: both cogroup branches descend from the same CC
-    # frame, and sharing one attribute id trips the self-join ambiguity
-    # check (same pattern as build_pair_scores_grouped's gk)
-    return (members.groupby("comp")
-            .cogroup(comp_edges.groupby("comp_e"))
-            .applyInPandas(replay, "url string, rep string"))
+    Pay-per-use: a union is only ever vetoed when the merged cluster
+    would hold an INCOMPATIBLE (first, middle) pair, so a component whose
+    distinct signatures are pairwise compatible (the normal case: one
+    author's full/initial variants) can never veto anything — the replay
+    is provably the identity there, every member keeps the CC
+    representative (the component min on both paths, union-by-min), and
+    the edges are never decoded. The check runs the kernel's own
+    ``names_compatible`` over the handful of distinct signatures."""
+    import pyarrow as pa
+
+    from webr.constraints import constrained_components
+    from webr.textproc import names_compatible
+
+    urls = memb.column("url").to_pylist()
+    if not urls:  # membership and edges derive from one CC frame
+        return pa.table({"url": pa.array([], pa.string()),
+                         "rep": pa.array([], pa.string())})
+    names = dict(zip(urls, zip(memb.column("first").to_pylist(),
+                               memb.column("middle").to_pylist())))
+    sigs = list(set(names.values()))
+    if all(names_compatible(fa, ma, fb, mb)
+           for i, (fa, ma) in enumerate(sigs) for fb, mb in sigs[i + 1:]):
+        rep = dict.fromkeys(urls, memb.column("comp")[0].as_py())
+    else:
+        rep = constrained_components(names, list(zip(
+            comp_edges.column("url_1").to_pylist(),
+            comp_edges.column("url_2").to_pylist())))
+    sizes: dict = {}
+    for r in rep.values():
+        sizes[r] = sizes.get(r, 0) + 1
+    return pa.table({
+        "url": pa.array(urls, pa.string()),
+        "rep": pa.array([rep[u] if sizes[rep[u]] >= spec.MIN_PTS else None
+                         for u in urls], pa.string())})
 
 
-def label_clusters(mentions: DataFrame, edges: DataFrame) -> DataFrame:
-    """-> (url, cluster_id, is_noise). Non-linked mentions are noise with
-    cluster_id 0 (ref clustering/dbscan.py:137-139); constrained
-    sub-clusters keeping >= 2 members get dense ids 1..K by sorted
-    representative (deterministic; enumeration via sorted zipWithIndex,
-    not a single-partition window, so it scales).
+def _cluster_ids(labels: DataFrame, one_task: bool) -> DataFrame:
+    """(url, rep) -> (url, cluster_id, is_noise): dense ids 1..K by sorted
+    representative, 0 for noise (null rep).
 
-    Two phases: unconstrained CC bounds each component, then the
-    cannot-link replay (webr.constraints) splits components that merged
-    name-incompatible mentions through an initial-only bridge.
-
-    The replay is pay-per-use: a union is only ever vetoed when the
-    merged cluster would contain an INCOMPATIBLE (first, middle) pair,
-    so a component whose distinct signatures are pairwise compatible
-    (the normal case: one author's full/initial variants) can never veto
-    anything — the replay is provably the identity there and the
-    component keeps its CC representative directly (rep = component min
-    on both paths, union-by-min). Only components containing at least
-    one incompatible signature pair go through the Python cogroup; the
-    predicate is evaluated JVM-side over the collect_set of distinct
-    signatures (a handful per entity-sized component, so the O(s^2)
-    exists-exists is trivial)."""
-    # materialize the CC result once — it feeds the refine cogroup AND the
-    # noise anti-join; without this the union-find ladder re-runs per
-    # consumer.
-    comp = (connected_components(edges)
-            .withColumnRenamed("rep", "comp")
-            .localCheckpoint(eager=True))
-
-    # SQL twin of textproc._part_compat: empty matches anything; initial
-    # vs anything shares the initial; full vs full must be equal
-    def _compat(a: str, b: str) -> str:
-        return (f"(coalesce({a}, '') = '' OR coalesce({b}, '') = '' OR "
-                f"IF(length({a}) > 1 AND length({b}) > 1, {a} = {b}, "
-                f"substring({a}, 1, 1) = substring({b}, 1, 1)))")
-
-    _incompat_pair = ("exists(sigs, x -> exists(sigs, y -> NOT ("
-                      + _compat("x.f", "y.f") + " AND "
-                      + _compat("x.m", "y.m") + ")))")
-    # per-component signature stats via a window over comp: one shuffle
-    # of the member table, no aggregate-then-join-back round trip (the
-    # stats side is one row per component — at web scale that is itself
-    # a huge table, so a broadcast was never an option)
-    w = Window.partitionBy("comp")
-    members = (comp.join(mentions.select("url", "first", "middle"), "url")
-               .withColumn("sigs", F.collect_set(F.struct(
-                   F.col("first").alias("f"),
-                   F.col("middle").alias("m"))).over(w))
-               .withColumn("csize", F.count("*").over(w))
-               .withColumn("needs_replay", F.expr(_incompat_pair))
-               .drop("sigs"))
-    # compatible fast path: replay would union the whole component (no
-    # veto possible) and keep it iff its size >= MIN_PTS
-    hom = (members.where(~F.col("needs_replay")
-                         & (F.col("csize") >= spec.MIN_PTS))
-           .select("url", F.col("comp").alias("rep")))
-    het = (members.where(F.col("needs_replay"))
-           .select("comp", "url", "first", "middle"))
-    het_comps = (het.select(F.col("comp").alias("comp_e")).distinct())
-    comp_edges = (edges.join(
-        comp.select(F.col("url").alias("url_1"),
-                    F.col("comp").alias("comp_e")), "url_1")
-        .join(het_comps, "comp_e", "left_semi"))
-    # refine emits only urls whose constrained sub-cluster kept
-    # >= MIN_PTS members (vetoed bridges drop out and become noise)
-    labels = (hom.unionByName(_constrained_refine(het, comp_edges))
-              .localCheckpoint(eager=True))
-    reps = labels.select("rep").distinct()
-    rep_ids = (reps.orderBy("rep").rdd
+    When the ladder's final pass ran in one task, one task may rank the
+    labels too: they are at most the linked urls that pass already held
+    (one window, one exchange). After a distributed ``_resolve`` no
+    single task may hold them, so the ids come from a sorted
+    ``zipWithIndex`` over the distinct representatives instead."""
+    if one_task:
+        return labels.selectExpr(
+            "url", "CAST(CASE WHEN rep IS NULL THEN 0 ELSE dense_rank() "
+            "OVER (ORDER BY rep ASC NULLS LAST) END AS long) AS cluster_id",
+            "rep IS NULL AS is_noise")
+    rep_ids = (labels.where("rep IS NOT NULL").select("rep").distinct()
+               .orderBy("rep").rdd
                .map(lambda r: r[0])
                .zipWithIndex()
                .map(lambda t: Row(rep=t[0], cluster_id=t[1] + 1))
                .toDF("rep string, cluster_id long"))
-    linked = (labels.join(rep_ids, "rep")
-              .select("url", "cluster_id", F.lit(False).alias("is_noise")))
-    noise = (mentions.select("url").join(labels.select("url"), "url",
-                                         "left_anti")
-             .select("url", F.lit(0).cast("long").alias("cluster_id"),
-                     F.lit(True).alias("is_noise")))
-    return linked.unionByName(noise)
+    return (labels.join(rep_ids, "rep", "left")
+            .selectExpr("url", "coalesce(cluster_id, 0L) AS cluster_id",
+                        "rep IS NULL AS is_noise"))
+
+
+def label_clusters(mentions: DataFrame, edges: DataFrame,
+                   edges_max: int | None = None) -> DataFrame:
+    """-> (url, cluster_id, is_noise) for every mention. Mentions in no
+    edge, and members whose constrained sub-cluster kept fewer than
+    MIN_PTS members, are noise with cluster_id 0 (ref
+    clustering/dbscan.py:137-139); the other sub-clusters get dense ids
+    1..K by sorted representative (deterministic).
+
+    Two phases: unconstrained CC bounds each component (``edges_max``
+    goes to ``_ladder``), then one cogroup
+    per component replays its edges through the cannot-link kernel
+    (``_refine``), which splits components that merged name-incompatible
+    mentions through an initial-only bridge and passes every other
+    component through as is.
+
+    Job shape: the ladder's two checkpointed passes, then one write
+    whose plan broadcasts the (small) component table to the mention
+    and edge scans, shuffles both by component into the cogroup, and
+    ranks the representatives (``_cluster_ids``). Noise needs no
+    anti-join: it is the left join's unmatched side plus the replay's
+    dropped members."""
+    forest, one_task = _ladder(edges, 8, CC_FINAL_ROWS_MAX, edges_max)
+    # all three joins below use the SAME build side, so the plan
+    # broadcasts the component table once and reuses it
+    comp = forest.withColumnRenamed("rep", "comp")
+    memb = mentions.select("url", "first", "middle").join(comp, "url")
+    unlinked = (mentions.select("url").join(comp, "url", "left")
+                .where("comp IS NULL")
+                .selectExpr("url", "0L AS cluster_id", "true AS is_noise"))
+    # comp_e, not comp: both cogroup branches descend from the same CC
+    # frame, and sharing one attribute id trips the self-join ambiguity
+    # check (same pattern as build_pair_scores_grouped's gk)
+    comp_edges = (edges.withColumnRenamed("url_1", "url").join(comp, "url")
+                  .selectExpr("url AS url_1", "url_2", "comp AS comp_e"))
+    labels = (memb.groupby("comp").cogroup(comp_edges.groupby("comp_e"))
+              .applyInArrow(_refine, "url string, rep string"))
+    return _cluster_ids(labels, one_task).unionByName(unlinked)

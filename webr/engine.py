@@ -5,9 +5,10 @@ pages -> mentions (Arrow mapInPandas, shared kernel)
       -> mentions+idf_map (distributed token join — no driver dict)
       -> candidate pairs (block explode; J1 self-join for small blocks,
          sorted-neighborhood window for mega-blocks = explicit skew rule)
-      -> pair scores (Arrow mapInPandas, shared batched kernel, A8)
-      -> edges (score >= EPS) -> hash-min connected components (C3)
-      -> clusters, entities (A6 majority vote)
+      -> pair scores (cogroup applyInArrow, shared batched kernel, A8)
+      -> edges (score >= EPS) -> union-find connected components (C3)
+         + per-component cannot-link replay -> clusters
+      -> entities (A6 majority vote, two aggregations)
 
 Every stage checkpoints through the Warehouse facade with a lineage
 fingerprint, so a killed job resumes from the last complete stage
@@ -23,7 +24,7 @@ from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from webr import schema, spec
 from webr.catalog import Warehouse, fingerprint
@@ -166,40 +167,53 @@ def _build_mention_feats_join(mentions: DataFrame,
 
 def build_pairs(mentions: DataFrame) -> DataFrame:
     """Candidate pair generation. Small blocks: all i<j pairs via self-join
-    on block_key (J1/P10 — Catalyst picks the physical join, AQE handles
-    residual skew). Blocks over MAX_BLOCK_SIZE: sorted-neighborhood window
-    (orderBy name_norm,url; lead 1..SN_WINDOW) — bounds any block to O(n·W)
-    pairs, which is the explicit mega-block/skew rule (SURVEY §4)."""
+    on block_key (J1/P10). Blocks over MAX_BLOCK_SIZE: sorted-neighborhood
+    window (orderBy name_norm,url; lead 1..SN_WINDOW) — bounds any block
+    to O(n·W) pairs, which is the explicit mega-block/skew rule (SURVEY
+    §4). Both run inside one hash partitioning by block key with the
+    session's default parallelism; one more by pair dedups the pairs
+    that share several blocks (four jobs in all)."""
+    # one explicit hash partitioning by block key serves the block sizes,
+    # the self-join and the window without another exchange; AQE would
+    # coalesce this small shuffle into one task, but never coalesces a
+    # repartition by number
+    n = mentions.sparkSession.sparkContext.defaultParallelism
+    # SQL strings, not Column builders: each builder call is one py4j
+    # round trip, and a stage's plan is built on the driver before any of
+    # its jobs can start
     memb = (mentions
-            .where(F.col("parse_ok") & (F.size("block_keys") > 0))
-            .select("url", "name_norm",
-                    F.explode("block_keys").alias("bk")))
-    sizes = memb.groupBy("bk").agg(F.count("*").alias("bk_n"))
-    memb = memb.join(sizes, "bk")  # singleton blocks die via bk_n >= 2
+            .where("parse_ok AND size(block_keys) > 0")
+            .selectExpr("url", "name_norm", "explode(block_keys) AS bk")
+            .repartition(n, "bk")
+            # singleton blocks die via bk_n >= 2
+            .selectExpr("*", "count(*) OVER (PARTITION BY bk) AS bk_n"))
 
-    small = memb.where((F.col("bk_n") >= 2)
-                       & (F.col("bk_n") <= spec.MAX_BLOCK_SIZE))
-    a, b = small.alias("a"), small.alias("b")
-    pairs_small = (a.join(b, (F.col("a.bk") == F.col("b.bk"))
-                          & (F.col("a.url") < F.col("b.url")))
-                   .select(F.col("a.bk").alias("bk"),
-                           F.col("a.url").alias("url_1"),
-                           F.col("b.url").alias("url_2")))
+    small = memb.where(f"bk_n BETWEEN 2 AND {spec.MAX_BLOCK_SIZE}")
+    # merge join: both sides are already partitioned by bk (a broadcast
+    # would cost one more job)
+    pairs_small = (small.alias("a")
+                   .join(small.alias("b").hint("merge"),
+                         F.expr("a.bk = b.bk AND a.url < b.url"))
+                   .selectExpr("a.bk AS bk", "a.url AS url_1",
+                               "b.url AS url_2"))
 
-    big = memb.where(F.col("bk_n") > spec.MAX_BLOCK_SIZE)
-    w = Window.partitionBy("bk").orderBy("name_norm", "url")
-    nbrs = F.array(*[F.lead("url", o).over(w)
-                     for o in range(1, spec.SN_WINDOW + 1)])
-    pairs_big = (big.select("bk", "url", nbrs.alias("nbrs"))
-                 .select("bk", "url", F.explode("nbrs").alias("nbr"))
-                 .where(F.col("nbr").isNotNull())
-                 .select("bk",
-                         F.least("url", "nbr").alias("url_1"),
-                         F.greatest("url", "nbr").alias("url_2")))
+    leads = ", ".join(
+        f"lead(url, {o}) OVER (PARTITION BY bk ORDER BY name_norm, url)"
+        for o in range(1, spec.SN_WINDOW + 1))
+    pairs_big = (memb.where(f"bk_n > {spec.MAX_BLOCK_SIZE}")
+                 .selectExpr("bk", "url", f"array({leads}) AS nbrs")
+                 .selectExpr("bk", "url", "explode(nbrs) AS nbr")
+                 .where("nbr IS NOT NULL")
+                 .selectExpr("bk", "least(url, nbr) AS url_1",
+                             "greatest(url, nbr) AS url_2"))
 
+    # a pair repeats once per block it shares, and those blocks sit in
+    # different bk partitions: a map-side partial min would find nothing
+    # to fold, so hash by pair once (n tasks, none coalesced) and reduce
     return (pairs_small.unionByName(pairs_big)
+            .repartition(n, "url_1", "url_2")
             .groupBy("url_1", "url_2")
-            .agg(F.min("bk").alias("block_key")))
+            .agg(F.expr("min(bk) AS block_key")))
 
 
 # coarse cogroup salt: pair-scoring tasks each handle ~(pairs/GROUPS)
@@ -235,17 +249,16 @@ def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
     """
     names = [f.name for f in schema.PAIR_SCORES.fields]
 
-    p = pairs.select(
-        "url_1", "url_2", "block_key",
-        F.pmod(F.xxhash64("block_key"), F.lit(groups)).alias("gk"))
+    # explicit partition counts on both cogroup sides: AQE would coalesce
+    # this ~MB shuffle into one partition (the kernel's CPU then runs in
+    # one task), but never coalesces a repartition by number; hash
+    # partitioning on gk already satisfies the cogroup
+    n = pairs.sparkSession.sparkContext.defaultParallelism
+    gk = f"pmod(xxhash64(block_key), {int(groups)}) AS gk"
+    p = pairs.selectExpr("url_1", "url_2", "block_key", gk)
     # gk recomputed from `pairs` (not re-used from `p`) so the cogroup's
     # two branches don't share one attribute id (self-join ambiguity)
-    urls = (pairs.select(F.col("block_key").alias("bk"),
-                         F.col("url_1").alias("url"))
-            .unionByName(pairs.select(F.col("block_key").alias("bk"),
-                                      F.col("url_2").alias("url")))
-            .select(F.pmod(F.xxhash64("bk"), F.lit(groups)).alias("gk"),
-                    "url")
+    urls = (pairs.selectExpr(gk, "explode(array(url_1, url_2)) AS url")
             .distinct())
     # shuffle_hash: never sort the fat weight-array side (scoped hint —
     # see webr/session.py note)
@@ -292,8 +305,8 @@ def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
         return pa.table(
             {n: cols[n] for n in names}).cast(_PAIR_ARROW)
 
-    return (p.groupby("gk")
-            .cogroup(side.groupby("gk"))
+    return (p.repartition(n, "gk").groupby("gk")
+            .cogroup(side.repartition(n, "gk").groupby("gk"))
             .applyInArrow(score_group, schema=schema.PAIR_SCORES))
 
 
@@ -301,87 +314,74 @@ def build_entities(mentions: DataFrame, idf: DataFrame,
                    clusters: DataFrame,
                    profile_top: int = 256) -> DataFrame:
     """Canonical record per cluster (ref import_clusters.py:86-194, A6/W3):
-    majority-vote name + top-3 hosts + top-N tf-idf profile tokens."""
-    members = (clusters.where(~F.col("is_noise"))
-               .join(mentions, "url"))
+    majority-vote name, last name and first initial, the member count,
+    top-3 hosts and the top-N tf-idf profile tokens. Pandas twin:
+    ``webr.oracle.entities.build_entities``.
 
-    # ONE scan + ONE count-shuffle + ONE ranked pass for all four
-    # majority votes (name, last, first-initial, top-3 hosts) and the
-    # member count — was 5 separate aggregation chains re-scanning the
-    # members join, each with its own shuffle round (flat latency that
-    # doesn't amortize at 1000 executors).
-    melted = (members.select(
-        "cluster_id",
-        F.explode(F.array(
-            F.struct(F.lit("name").alias("kind"),
-                     F.col("name_norm").alias("val")),
-            F.struct(F.lit("last").alias("kind"),
-                     F.col("last").alias("val")),
-            F.struct(F.lit("fi").alias("kind"),
-                     F.substring("first", 1, 1).alias("val")),
-            F.struct(F.lit("host").alias("kind"),
-                     F.col("host").alias("val")),
-        )).alias("kv"))
-        .select("cluster_id", F.col("kv.kind").alias("kind"),
-                F.col("kv.val").alias("val")))
-    ranked = (melted.groupBy("cluster_id", "kind", "val")
-              .agg(F.count("*").alias("cnt"))
-              .withColumn("rn", F.row_number().over(
-                  Window.partitionBy("cluster_id", "kind")
-                  .orderBy(F.desc("cnt"), F.asc("val")))))
+    Two aggregations for everything. Each member melts into (kind, val)
+    rows — its name, last name, first initial, host and every body
+    token — and ONE count per (cluster, kind, val) folds them map-side;
+    the idf joins the token rows by broadcast; ONE group-by per cluster
+    then takes every vote from those counts. A vote is the value with
+    the highest count, ties to the lowest value (``min_by`` over
+    (-count, value), nulls first as in an ascending sort). The profile
+    is the ``profile_top`` tokens by tf-idf weight (desc, then token):
+    idf(token) is constant across members, so count * idf equals the
+    per-member tf*idf sum. A cluster's distinct hosts and tokens are
+    collected whole, which is safe because clusters are entity-sized."""
+    # SQL strings, not Column builders: each builder call is one py4j
+    # round trip, and the plan is built on the driver before any job runs
+    def kv(kind: str, val: str) -> str:
+        return f"named_struct('kind', '{kind}', 'val', {val})"
 
-    def top1(kind: str):
-        return F.max(F.when((F.col("kind") == kind) & (F.col("rn") == 1),
-                            F.col("val")))
+    melted = (clusters.where("NOT is_noise").join(mentions, "url")
+              .selectExpr("cluster_id", "inline(concat(array("
+                          + ", ".join([kv("name", "name_norm"),
+                                       kv("last", "last"),
+                                       kv("fi", "substring(first, 1, 1)"),
+                                       kv("host", "host")])
+                          + "), transform(coalesce(body_toks, "
+                          "cast(array() AS array<string>)), t -> "
+                          + kv("tok", "t") + ")))"))
+    # tokens the idf table does not know get no weight (inner-join
+    # semantics); a cluster left with none has a null profile
+    counts = (melted.groupBy("cluster_id", "kind", "val")
+              .agg(F.expr("count(*) AS cnt"))
+              .join(F.broadcast(idf), F.expr("val = token"), "left"))
+    rank = "named_struct('k', -cnt, 'v', val)"
 
-    stats = (ranked.groupBy("cluster_id").agg(
-        top1("name").alias("canonical_name"),
-        top1("last").alias("last"),
-        top1("fi").alias("first_initial"),
-        F.sum(F.when(F.col("kind") == "name", F.col("cnt"))
-              .otherwise(F.lit(0))).alias("n_members"),
-        F.expr("transform(array_sort(collect_list(case when kind = 'host' "
-               "then struct(rn, val) end)), x -> x.val)")
-        .alias("hosts_ranked")))
+    def top1(k: str, name: str):
+        return F.expr(f"min_by(val, CASE WHEN kind = '{k}' THEN {rank} END)"
+                      f" AS {name}")
+
+    stats = counts.groupBy("cluster_id").agg(
+        top1("name", "canonical_name"),
+        top1("last", "last"),
+        top1("fi", "first_initial"),
+        F.expr("sum(CASE WHEN kind = 'name' THEN cnt ELSE 0 END) "
+               "AS n_members"),
+        F.expr(f"array_sort(collect_list(CASE WHEN kind = 'host' THEN "
+               f"{rank} END)) AS hosts_ranked"),
+        F.expr(f"slice(array_sort(collect_list(CASE WHEN kind = 'tok' AND "
+               f"idf IS NOT NULL THEN named_struct('k', -(cnt * idf), "
+               f"'v', val) END)), 1, {int(profile_top)}) AS top"))
     # top-3 hosts after substring-containment dedup in rank order (A6,
     # ref import_clusters.py:148-179 scans the FULL ranked list until 3
     # survive: 'sub.mega.example.com' and 'mega.example.com' collapse to
-    # the higher-ranked one). The ranked list is bounded by the cluster's
-    # distinct-host count (entity-sized), so collecting it whole is safe.
-    # The fold compares each host against the SURVIVORS so far — not
-    # against already-dropped entries, which would eliminate an
-    # unrelated host transitively through a dropped middleman
-    stats = (stats.withColumn(
-        "hosts",
-        F.expr("aggregate(hosts_ranked, cast(array() as array<string>), "
-               "(acc, x) -> CASE WHEN size(acc) >= 3 OR exists(acc, "
-               "y -> instr(y, x) > 0 OR instr(x, y) > 0) "
-               "THEN acc ELSE array_append(acc, x) END)"))
-        .drop("hosts_ranked"))
-
-    # cluster BoW profile: sum member tf*idf per token, keep top-N (A5).
-    # idf(token) is constant across members, so sum(tf)*idf == the
-    # per-member tf*idf sum — ONE occurrence-count shuffle (map-side
-    # combine collapses it to |clusters|x|vocab|) replaces the former
-    # (cluster,url,token) two-level aggregation. idf is broadcast (vocab
-    # table is small relative to the corpus; for 10^9-term vocabularies
-    # drop the hint and let AQE pick the join).
-    occ = (members.select("cluster_id", F.explode("body_toks").alias("token"))
-           .groupBy("cluster_id", "token")
-           .agg(F.count("*").alias("cnt")))
-    weights = (occ.join(F.broadcast(idf.select("token", "idf")), "token")
-               .select("cluster_id", "token",
-                       (F.col("cnt") * F.col("idf")).alias("w")))
-    top_w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("w"), F.asc("token"))
-    profile = (weights.withColumn("rn", F.row_number().over(top_w))
-               .where(F.col("rn") <= profile_top)
-               .groupBy("cluster_id")
-               .agg(F.map_from_entries(F.collect_list(
-                   F.struct("token", "w"))).alias("profile")))
-
-    out = stats.join(profile, "cluster_id", "left")
-    return out.select([f.name for f in schema.ENTITIES.fields])
+    # the higher-ranked one). The fold compares each host against the
+    # SURVIVORS so far — not against already-dropped entries, which would
+    # eliminate an unrelated host transitively through a dropped
+    # middleman
+    return stats.selectExpr(
+        "cluster_id", "canonical_name", "last", "first_initial",
+        "n_members",
+        "aggregate(transform(hosts_ranked, x -> x.v), "
+        "cast(array() AS array<string>), "
+        "(acc, x) -> CASE WHEN size(acc) >= 3 OR exists(acc, "
+        "y -> instr(y, x) > 0 OR instr(x, y) > 0) "
+        "THEN acc ELSE array_append(acc, x) END) AS hosts",
+        "CASE WHEN size(top) > 0 THEN map_from_entries(transform(top, "
+        "x -> named_struct('t', x.v, 'w', -x.k))) END AS profile")
 
 
 # --------------------------------------------------------------------------
@@ -511,7 +511,8 @@ class Pipeline:
             "clusters", s_c,
             lambda: label_clusters(
                 mentions,
-                pair_scores.where("is_edge").select("url_1", "url_2")),
+                pair_scores.where("is_edge").select("url_1", "url_2"),
+                edges_max=wh.manifest("pair_scores")["rows"]),
             lineage={"pair_scores": s_ps})
 
         s_e = self.snap("entities", s_c, s_m, s_idf)

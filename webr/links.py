@@ -150,10 +150,12 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
     Real iteration counts: the rank state is ``localCheckpoint``-ed to
     cut the LOGICAL plan back to a leaf — persist+count bounds physical
     re-execution but not plan growth. Without dangling nodes the plan
-    deepens linearly (one self-reference per round) and a cut every
-    ``checkpoint_every`` rounds suffices; WITH dangling nodes each round
-    references the rank state twice (contributions + mass aggregate), so
-    the analyzed tree DOUBLES per round (2^k leaves — measured: the
+    deepens linearly (one self-reference per round): without ``tol``
+    the rounds chain lazily and materialize together, in one checkpoint
+    every ``checkpoint_every`` rounds and one at the last round; WITH
+    dangling nodes each round references the rank state twice
+    (contributions + mass aggregate), so the analyzed tree DOUBLES per
+    round (2^k leaves — measured: the
     AQE plan-string emission alone OOMs a 1 GiB driver by round 7) and
     the state is checkpointed EVERY round. The checkpoint is the round's
     materializing action, so it replaces — not adds to — the Pregel
@@ -179,6 +181,10 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
                 .select("id").persist())
     has_dangling = bool(dang_ids.limit(1).count())
     ranks = nodes.select("id", F.lit(1.0 / n).alias("r")).persist()
+    # without dangling nodes or tol, a round's state is read by the next
+    # round only: the rounds chain lazily and materialize at checkpoints
+    lazy = not has_dangling and tol is None
+    held = ranks  # newest materialized state, released once superseded
     for it in range(1, iters + 1):
         contribs = (eo.join(ranks.withColumnRenamed("id", "src"), "src")
                     .groupBy("dst")
@@ -197,28 +203,31 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
             "id",
             (F.lit((1.0 - damping) / n)
              + F.lit(damping) * term).alias("r"))
-        # MATERIALIZE the new state before dropping its parent, else the
-        # final action re-derives every generation from scratch. A
-        # dangling graph reads the rank state twice per round, so its
+        # A dangling graph reads the rank state twice per round, so its
         # analyzed plan doubles per round unless cut NOW (see docstring);
-        # the linear-growth case is cut every checkpoint_every rounds.
-        if has_dangling or it % checkpoint_every == 0:
+        # the linear-growth case is cut every checkpoint_every rounds and
+        # at the last one. The tol path materializes every round (its
+        # delta reads two states).
+        if has_dangling or it % checkpoint_every == 0 or (
+                lazy and it == iters):
             nxt = nxt.localCheckpoint(eager=True)  # lineage cut to leaf
+        elif lazy:
+            ranks = nxt
+            continue
         else:
             nxt = nxt.persist()
             nxt.count()
+        delta = None
         if tol is not None:
-            delta = (nxt.join(ranks.select(
+            delta = (nxt.join(held.select(
                          "id", F.col("r").alias("r_prev")), "id")
                      .agg(F.sum(F.abs(F.col("r") - F.col("r_prev"))))
                      .first()[0])
-            _release(ranks)
-            ranks = nxt
-            if delta is not None and delta < tol:
-                break
-        else:
-            _release(ranks)
-            ranks = nxt
+        # only now that nxt is materialized may its parents go
+        _release(held)
+        held = ranks = nxt
+        if delta is not None and delta < tol:
+            break
     eo.unpersist()
     dang_ids.unpersist()
     pagerank.last_iters = it  # introspection aid (tests pin early exit)
