@@ -48,55 +48,104 @@ def test_streaming_ingest_and_window_counts(spark, corpus_pd):
     assert got == len(corpus_pd)
 
 
-def test_streaming_incremental_assign_stateful(spark, corpus_pd):
-    """applyInPandasWithState C6: first drop creates representatives; a
-    RESTARTED query (same checkpoint) must resume with that state — pages
-    of the same entity arriving later link to the first drop's rep, and
-    assignments agree with the compat gate (same-entity pages of one
-    block share exactly one rep)."""
+def test_streaming_assign_matches_record_query(spark, corpus_pd,
+                                               warehouse_dir):
+    """Streamed pages get the cluster ``match_records`` ranks first on the
+    same warehouse (one rule for the stream, ``webr query`` and Q3),
+    upserted by url into ``assignments``. Two drops, restarts on one
+    checkpoint: a restart without new files merges nothing, the second
+    drop's merge chains to the first. The drops carry held-out corpus
+    pages, a page that matches nothing (noise 0), John/Jane Brookstone
+    pages behind initial-only 'J Brookstone' pages that sort first (a
+    first-compatible-representative rule would put John and Jane in
+    one cluster), and a re-crawl whose latest version must win."""
+    import datetime as dt
+
+    import pandas as pd
+
     from webr import schema
-    from webr.streaming import incremental_assign_query
+    from webr.catalog import Warehouse
+    from webr.engine import Pipeline
+    from webr.query import match_records
+    from webr.streaming import assign_stream
+    from webr.synth import (
+        BRIDGE_INITIAL, BRIDGE_JANE, BRIDGE_JOHN, generate_bridge_pages,
+        pages_to_pandas,
+    )
 
-    d = tempfile.mkdtemp(prefix="webr_incr_")
-    in_dir, out_dir, ckpt = (os.path.join(d, x)
-                             for x in ("in", "out", "ckpt"))
-    os.makedirs(in_dir)
-    pages = spark.createDataFrame(
-        corpus_pd[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
-    half1 = pages.where(F.crc32("url") % 2 == 0)
-    half2 = pages.where(F.crc32("url") % 2 == 1)
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    bridge = pages_to_pandas(generate_bridge_pages())
+    bridge = bridge[bridge.url.str.contains("/b/brookstone-")]
+    bridge["url"] = [u.replace("/b/", "/a/") if e == BRIDGE_INITIAL else u
+                     for u, e in zip(bridge.url, bridge.entity_id)]
+    b_held = ((bridge.groupby("entity_id").cumcount() >= 4)
+              | (bridge.entity_id == BRIDGE_INITIAL)).values
+    c_held = (pd.RangeIndex(len(corpus_pd)) % 5 == 0)
+    base = pd.concat([corpus_pd[~c_held][cols], bridge[~b_held][cols]])
+    Pipeline(spark, warehouse_dir, input_id="assign-v1").run(
+        spark.createDataFrame(base, schema=schema.PAGES))
+    wh = Warehouse(spark, warehouse_dir)
 
-    half1.write.parquet(os.path.join(in_dir, "drop1"))
-    q1 = incremental_assign_query(
-        spark, in_dir + "/drop*", out_dir, ckpt)
-    q1.awaitTermination(180)
-    first = spark.read.parquet(out_dir).toPandas()
-    assert len(first) == half1.count() and first.is_new.any()
+    held = corpus_pd[c_held][cols].sort_values("url")
+    nomatch = held.iloc[:1].assign(
+        url="https://nowhere.example/1",
+        html=[b"<html><body><h1>Xqz Vvkw</h1><p>qqq</p></body></html>"])
+    stale = held.iloc[-1:].assign(
+        warc_ts=held.warc_ts.iloc[-1] - dt.timedelta(days=3),
+        html=nomatch.html.values)
+    drop1 = pd.concat([bridge[b_held][cols], nomatch,
+                       held.iloc[:len(held) // 2]])
+    drop2 = pd.concat([stale, held.iloc[len(held) // 2:]])
+    assert drop1.url.min().startswith("https://bridge.example.org/a/")
 
-    # second drop, NEW query object, same checkpoint -> state restored
-    half2.write.parquet(os.path.join(in_dir, "drop2"))
-    q2 = incremental_assign_query(
-        spark, in_dir + "/drop*", out_dir, ckpt)
-    q2.awaitTermination(180)
-    allout = spark.read.parquet(out_dir).toPandas()
-    assert len(allout) == pages.count()
+    d = tempfile.mkdtemp(prefix="webr_assign_")
+    in_dir, ckpt = os.path.join(d, "in"), os.path.join(d, "ckpt")
 
-    # per (bk, entity) exactly one representative, established in drop1
-    # when the entity appeared there (state survived the restart)
-    truth = corpus_pd[["url", "entity_id"]]
-    merged = allout.merge(truth, on="url")
-    per_entity = merged.groupby(["bk", "entity_id"])["rep"].nunique()
-    # compat-gate granularity: an entity never splits within a block
-    # unless the generator emitted incompatible name variants; the synth
-    # corpus pins names per entity, so reps are unique per (bk, entity)
-    assert (per_entity == 1).all()
-    seen_drop1 = set(first.url)
-    rep_drop1 = merged[merged.url.isin(seen_drop1)].groupby(
-        ["bk", "entity_id"])["rep"].first()
-    rep_all = merged.groupby(["bk", "entity_id"])["rep"].first()
-    for k, r in rep_drop1.items():
-        assert rep_all[k] == r
+    def drain(drop=None, name=None):
+        if drop is not None:  # one file per drop: one micro-batch
+            (spark.createDataFrame(drop, schema=schema.PAGES).coalesce(1)
+             .write.parquet(os.path.join(in_dir, name)))
+        q = assign_stream(spark, in_dir + "/drop*", warehouse_dir, ckpt)
+        assert q.awaitTermination(300)
+        return wh.manifest("assignments")
+
+    m1 = drain(drop1, "drop1")
+    assert m1["rows"] == len(drop1)
+    assert m1["lineage"]["parent"] is None
+    assert m1["lineage"]["clusters"] == wh.manifest("clusters")["snapshot"]
+    assert drain() == m1  # restart, nothing new: nothing merged
+    m2 = drain(drop2, "drop2")
+    assert m2["lineage"]["parent"] == m1["snapshot"]
+    assert m2["lineage"]["epoch"] > m1["lineage"]["epoch"]
+
+    got = (wh.read("assignments").toPandas()
+           .sort_values("url").reset_index(drop=True))
+    streamed = pd.concat([drop1, drop2.iloc[1:]])  # the stale one lost
+    assert len(got) == len(streamed) == m2["rows"]
+    top = (match_records(spark.createDataFrame(streamed, schema=schema.PAGES),
+                         *map(wh.read, ("idf", "entities", "clusters",
+                                        "mention_feats")))
+           .where("rank = 1").toPandas())
+    want = dict(zip(top.q_url, top.cluster_id))
+    assert list(got.url) == sorted(streamed.url)
+    assert list(got.cluster_id) == [want.get(u, 0) for u in got.url]
+    assert list(got.is_noise) == [u not in want for u in got.url]
+    # the re-crawl kept its latest version, which matches a cluster
+    recrawl = got[got.url == stale.url.iloc[0]].iloc[0]
+    assert recrawl.warc_ts == held.warc_ts.iloc[-1] and not recrawl.is_noise
+    assert got[got.url == nomatch.url.iloc[0]].cluster_id.tolist() == [0]
+    ent = dict(zip(bridge.url, bridge.entity_id))
+    by_ent = got.assign(entity=got.url.map(ent)).groupby("entity")
+    john = set(by_ent.get_group(BRIDGE_JOHN).cluster_id)
+    jane = set(by_ent.get_group(BRIDGE_JANE).cluster_id)
+    assert 0 not in john | jane and not (john & jane)
+    # two versions of one url with one warc_ts: the batch fails, as a
+    # record query with them fails, and merges nothing
+    clash = pd.concat([nomatch,
+                       nomatch.assign(html=held.html.iloc[:1].values)])
+    with pytest.raises(Exception, match="different content"):
+        drain(clash.assign(url="https://nowhere.example/2"), "drop3")
+    assert wh.manifest("assignments") == m2
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -270,6 +319,31 @@ def test_warehouse_merge_upsert(spark, warehouse_dir):
     # the failed merge left the table untouched
     assert wh.manifest("entities")["snapshot"] == "snap-v2"
     assert wh.read("entities").count() == 4
+
+
+def test_warehouse_merge_replay_and_new_table(spark, warehouse_dir):
+    """Merging the same rows twice (a replayed stream epoch) leaves the
+    table's content unchanged; a missing table takes the same staged
+    path, duplicate-key check included."""
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    ddl = "url string, cluster_id long, is_noise boolean"
+    dup = spark.createDataFrame([("u1", 1, False), ("u1", 2, False)], ddl)
+    with pytest.raises(ValueError, match="not unique"):
+        wh.merge("t", dup, keys=["url"], snapshot="s0")
+    assert wh.manifest("t") is None
+    assert os.listdir(warehouse_dir) == []
+    rows = spark.createDataFrame([("u1", 1, False), ("u2", 0, True)], ddl)
+
+    def content():
+        return sorted(wh.read("t").collect())
+
+    wh.merge("t", rows, keys=["url"], snapshot="s1")
+    once = content()
+    assert wh.manifest("t")["lineage"]["parent"] is None
+    wh.merge("t", rows, keys=["url"], snapshot="s2")
+    assert content() == once and len(once) == 2
+    assert wh.manifest("t")["lineage"]["parent"] == "s1"
 
 
 def test_learned_blocking_cnf(spark):
@@ -650,6 +724,64 @@ def test_pyfiles_zip_is_zipimportable():
                          cwd=tempfile.gettempdir())
     assert out.returncode == 0, out.stderr
     assert "zipimport-ok" in out.stdout
+
+
+def test_submit_er_sets_every_get_spark_sql_conf(monkeypatch):
+    """tools/submit_er.py attaches to the session spark-submit built and
+    sets the runtime SQL confs itself: every spark.sql.* conf get_spark
+    sets must be among them, with the same value (a missed one, e.g. the
+    broadcast-join threshold, plans a submitted run differently)."""
+    import importlib.util
+    import pathlib
+
+    from pyspark.sql import SparkSession
+
+    from webr.session import get_spark
+
+    class Stop(Exception):
+        pass
+
+    class Recorder:
+        """Stands in for SparkSession.builder and for the session."""
+
+        def __init__(self):
+            self.confs = {}
+            self.conf = self
+
+        def appName(self, _):
+            return self
+
+        master = appName
+
+        def config(self, k, v):
+            self.confs[k] = v
+            return self
+
+        def set(self, k, v):
+            self.confs[k] = v
+
+        def getOrCreate(self):
+            return self
+
+        @property
+        def read(self):  # submit_er's first use of the session
+            raise Stop
+
+    built, submitted = Recorder(), Recorder()
+    monkeypatch.setattr(SparkSession, "builder", built)
+    get_spark(master="local[1]")
+    monkeypatch.setattr(SparkSession, "builder", submitted)
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    spec = importlib.util.spec_from_file_location(
+        "submit_er", tools / "submit_er.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    with pytest.raises(Stop):
+        mod.main(["--input", "unused", "--warehouse", "unused"])
+    sql = {k: v for k, v in built.confs.items() if k.startswith("spark.sql.")}
+    assert "spark.sql.autoBroadcastJoinThreshold" in sql
+    assert sql.items() <= submitted.confs.items(), (
+        set(sql.items()) - set(submitted.confs.items()))
 
 
 def test_vec_kernel_bitwise():

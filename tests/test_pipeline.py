@@ -148,7 +148,7 @@ def test_entities_canonical(pipeline_out, oracle_result, corpus_pd):
 
 
 def test_mention_feats_join_fallback_bitwise(pipeline_out):
-    """The huge-vocab distributed path (_build_mention_feats_join) must be
+    """The huge-vocab distributed path (build_mention_feats_join) must be
     bitwise-identical to the broadcast-dict fast path: same token hash,
     same sort, same in-order norm fold."""
     from webr.engine import build_mention_feats

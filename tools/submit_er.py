@@ -10,15 +10,16 @@ submit command line, exactly as they would on a real cluster:
     spark-submit --master local[8] --py-files "$ZIP" tools/submit_er.py \
         --input /path/pages_dir --warehouse /path/wh
 
-Runtime-settable SQL confs (Arrow, AQE, shuffle partitions, UTC) are
-applied via spark.conf.set; JVM-startup confs (driver memory) belong on
-the submit command line (--driver-memory).
+Runtime-settable SQL confs are ``webr.session.sql_confs()``, the same
+mapping ``get_spark`` uses (shuffle partitions from
+``WEBR_SHUFFLE_PARTITIONS``), applied via spark.conf.set; JVM-startup
+confs (driver memory) belong on the submit command line
+(--driver-memory).
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 import time
 
@@ -29,27 +30,21 @@ def main(argv: list[str]) -> int:
                     help="parquet path with pages (url, warc_ts, html, text, lang)")
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--input-id", default=None)
-    ap.add_argument("--shuffle-partitions", type=int,
-                    default=int(os.environ.get("WEBR_SHUFFLE_PARTITIONS", "32")))
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
     spark = SparkSession.builder.appName("webr-submit-er").getOrCreate()
-    # SQL confs are runtime-settable; everything JVM-level (master, memory,
-    # py-files) is owned by the spark-submit command line.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(args.shuffle_partitions))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
 
     # imported AFTER the session exists so the modules resolve from
     # --py-files on executors and from the local tree on the driver
     from webr.__main__ import _auto_input_id
     from webr.engine import Pipeline
+    from webr.session import sql_confs
+
+    # SQL confs are runtime-settable; everything JVM-level (master, memory,
+    # py-files) is owned by the spark-submit command line.
+    for k, v in sql_confs().items():
+        spark.conf.set(k, v)
 
     pages = spark.read.parquet(args.input)
     input_id = args.input_id or _auto_input_id(args.input)

@@ -129,8 +129,9 @@ class Warehouse:
         INSERTs canonical rows and UPDATEs matching cluster assignments in
         place; the Iceberg analog is MERGE INTO ... WHEN MATCHED UPDATE
         WHEN NOT MATCHED INSERT). Incoming rows replace existing rows with
-        the same key tuple; everything else is kept. The new manifest
-        records the replaced snapshot as ``parent`` — snapshot lineage
+        the same key tuple; everything else is kept. A missing table is
+        merged as an empty one. The new manifest records the replaced
+        snapshot as ``parent`` (None for a new table) — snapshot lineage
         stays a chain, so resume logic still refuses stale upstreams.
 
         Distributed shape: one left_anti join on the key columns + union —
@@ -138,42 +139,28 @@ class Warehouse:
         MERGE INTO and this facade keeps the call shape."""
         import pyspark.sql.functions as F
         cur = self.manifest(table)
-
-        # MERGE semantics need one row per key tuple — incoming
-        # duplicates would all survive the anti-join and insert twice;
-        # fail loudly instead of silently corrupting the table. The check
-        # runs on the MATERIALIZED parquet (one cheap key-column scan),
-        # never on the incoming lazy plan, which would re-run the whole
-        # upstream computation a second time.
-        def _has_dup_keys(materialized: DataFrame) -> bool:
-            return bool(
-                materialized.groupBy(keys).agg(F.count("*").alias("__n"))
-                .where(F.col("__n") > 1).limit(1).count())
-
-        if cur is None:
-            out = self.write(table, df, snapshot, lineage)
-            if _has_dup_keys(out):
-                self.drop(table)
-                raise ValueError(
-                    f"merge into {table!r}: incoming rows are not unique "
-                    f"on key {keys} — dedupe deterministically before "
-                    f"merging")
-            return out
-        existing = self.read(table)
-        merged = (existing.join(df.select(keys).distinct(), keys,
-                                "left_anti")
-                  .unionByName(df.select(existing.columns)))
+        merged = df  # merging into a missing (empty) table
+        if cur is not None:
+            existing = self.read(table)
+            merged = (existing.join(df.select(keys).distinct(), keys,
+                                    "left_anti")
+                      .unionByName(df.select(existing.columns)))
         # stage through a sibling dir: the merged plan lazily reads the
         # files write() would delete
         tmp = f"{table}__merge_tmp"
         lin = dict(lineage or {})
-        lin["parent"] = cur["snapshot"]
+        lin["parent"] = cur["snapshot"] if cur is not None else None
         lin["merge_keys"] = keys
-        self.write(tmp, merged, snapshot, lin)
-        # existing is key-unique by induction (every write/merge through
-        # this facade is checked), so duplicate keys in the staged result
-        # can only come from duplicated incoming rows
-        if _has_dup_keys(self.read(tmp)):
+        staged = self.write(tmp, merged, snapshot, lin)
+        # MERGE semantics need one row per key tuple. existing is
+        # key-unique by induction (every merge through this facade is
+        # checked), so duplicate keys in the staged result can only come
+        # from duplicated incoming rows — fail loudly instead of silently
+        # inserting twice. The check scans the MATERIALIZED parquet (one
+        # cheap key-column scan), never the incoming lazy plan, which
+        # would re-run the whole upstream computation a second time.
+        if (staged.groupBy(keys).agg(F.count("*").alias("__n"))
+                .where(F.col("__n") > 1).limit(1).count()):
             self.drop(tmp)
             raise ValueError(
                 f"merge into {table!r}: incoming rows are not unique on "
@@ -191,7 +178,8 @@ class Warehouse:
         final = self._dir(table)
         backup = f"{final}__old"
         shutil.rmtree(backup, ignore_errors=True)
-        os.rename(final, backup)
+        if os.path.exists(final):
+            os.rename(final, backup)
         os.rename(self._dir(tmp), final)
         shutil.rmtree(backup, ignore_errors=True)
         return self.read(table)

@@ -109,7 +109,7 @@ def build_mention_feats(mentions: DataFrame, idf: DataFrame,
                 yield with_weights(pdf, d)
 
         return slim.mapInPandas(gen, schema=schema.MENTION_FEATS)
-    return _build_mention_feats_join(mentions, idf)
+    return build_mention_feats_join(mentions, idf)
 
 
 def with_weights(mentions: pd.DataFrame, idf_map: dict) -> pd.DataFrame:
@@ -124,8 +124,8 @@ def with_weights(mentions: pd.DataFrame, idf_map: dict) -> pd.DataFrame:
     return out[[f.name for f in schema.MENTION_FEATS.fields]]
 
 
-def _build_mention_feats_join(mentions: DataFrame,
-                              idf: DataFrame) -> DataFrame:
+def build_mention_feats_join(mentions: DataFrame,
+                             idf: DataFrame) -> DataFrame:
     """Distributed fallback for huge vocabularies. JVM twin of
     ``weight_arrays``: conv(md5) token hash == features.token_hash; struct
     sort by (hash, weight) == the Python tuple sort; in-order ``aggregate``

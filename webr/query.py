@@ -153,9 +153,7 @@ def prepare_query_mentions(query_pages: DataFrame,
     tbl = tbl.take(keep).drop_columns(["digest"])
     if bc is None:  # vocabulary too big to broadcast: distributed join
         mentions = spark.createDataFrame(tbl, schema=schema.MENTIONS)
-        tbl = engine.build_mention_feats(
-            mentions, idf, vocab_rows=engine.VOCAB_BROADCAST_MAX + 1
-        ).toArrow()
+        tbl = engine.build_mention_feats_join(mentions, idf).toArrow()
     return spark.createDataFrame(tbl, schema=schema.MENTION_FEATS)
 
 

@@ -31,11 +31,32 @@ def _package_zip() -> str:
     return out
 
 
+def sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """Runtime-settable SQL confs of every webr session: ``get_spark``
+    sets them on its builder, ``tools/submit_er.py`` on the session
+    spark-submit made (JVM-level confs stay on the submit command line)."""
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("WEBR_SHUFFLE_PARTITIONS", "32"))
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # NOTE: wide-row joins (sides carrying weight arrays) use explicit
+        # per-join SHUFFLE_HASH hints at the call sites instead of a
+        # session-wide preferSortMergeJoin=false — ShuffledHashJoin has no
+        # sort-based spill fallback, so forcing it globally risks OOM on
+        # large non-broadcastable build sides unrelated to the fat rows
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    }
+
+
 def get_spark(app: str = "webr", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     master = master or os.environ.get("WEBR_MASTER", "local[*]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("WEBR_SHUFFLE_PARTITIONS", "32"))
     # Ship webr to python workers. Local mode: workers inherit the env of
     # the JVM we are about to launch -> put the repo root on PYTHONPATH
     # before building. Cluster mode: spark.submit.pyFiles (the
@@ -48,23 +69,12 @@ def get_spark(app: str = "webr", master: str | None = None,
     b = (
         SparkSession.builder.appName(app)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # NOTE: wide-row joins (sides carrying weight arrays) use explicit
-        # per-join SHUFFLE_HASH hints at the call sites instead of a
-        # session-wide preferSortMergeJoin=false — ShuffledHashJoin has no
-        # sort-based spill fallback, so forcing it globally risks OOM on
-        # large non-broadcastable build sides unrelated to the fat rows
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory",
                 os.environ.get("WEBR_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
+    for k, v in sql_confs(shuffle_partitions).items():
+        b = b.config(k, v)
     if not master.startswith("local"):
         b = b.config("spark.submit.pyFiles", _package_zip())
     return b.getOrCreate()

@@ -1,23 +1,20 @@
 """Structured Streaming ingest (SURVEY §2.10: the reference is batch-only;
 north_rule keeps the engine batch-first, so streaming is the optional
-page-arrival front door: readStream -> watermark -> windowed stats +
+page-arrival front door: readStream -> watermark -> windowed stats,
 foreachBatch append into the warehouse staging table that the batch
-pipeline then consumes)."""
+pipeline then consumes, and foreachBatch record queries that assign each
+arriving page to an existing cluster)."""
 
 from __future__ import annotations
 
 import os
-from typing import Any, Iterator, Tuple
 
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType, BooleanType, StringType, StructField, StructType,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from webr import schema
+from webr.catalog import Warehouse, fingerprint
+from webr.query import match_records
 
 
 def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -166,103 +163,45 @@ def ingest_to_staging(spark: SparkSession, input_dir: str,
             .start())
 
 
-# ---------------------------------------------------------------------------
-# Custom stateful operator: incremental cluster assignment (C6 as a stream)
+def assign_stream(spark: SparkSession, input_dir: str, warehouse_root: str,
+                  checkpoint_dir: str):
+    """Page drops -> one row per page in the warehouse table
+    ``assignments`` (url, warc_ts, cluster_id, is_noise), availableNow
+    semantics. Each micro-batch is a record query (``match_records``,
+    the rule of ``webr query`` and the batch Q3) against the warehouse's
+    current tables: rank 1 gives the cluster, no match is noise 0 as in
+    the batch pipeline. ``Warehouse.merge`` on url upserts the rows, so a
+    replayed epoch rewrites the same rows, and its lineage records the
+    ``clusters`` snapshot and the epoch, so a reader can tell
+    assignments that predate a re-clustering. Within a micro-batch a
+    re-crawl keeps its latest ``warc_ts`` (the merge's "later replaces"
+    rule across batches); two versions with one ``warc_ts`` raise."""
+    wh = Warehouse(spark, warehouse_root)
 
-ASSIGN_OUT = StructType([
-    StructField("bk", StringType(), False),
-    StructField("url", StringType(), False),
-    StructField("rep", StringType(), False),
-    StructField("is_new", BooleanType(), False),
-])
+    def assign(pages: DataFrame, epoch_id: int) -> None:
+        pages = (pages.withColumn("_latest", F.max("warc_ts").over(
+                     Window.partitionBy("url")))
+                 .where(F.col("warc_ts").eqNullSafe(F.col("_latest")))
+                 .drop("_latest"))
+        snap = wh.manifest("clusters")["snapshot"]
+        top = (match_records(pages, *map(wh.read, (
+            "idf", "entities", "clusters", "mention_feats")))
+            .where("rank = 1").select(F.col("q_url").alias("url"),
+                                      "cluster_id"))
+        # materialized once: merge reads its incoming rows twice
+        rows = (pages.select("url", "warc_ts").distinct()
+                .join(top, "url", "left")
+                .select("url", "warc_ts",
+                        F.coalesce("cluster_id", F.lit(0)).alias("cluster_id"),
+                        F.col("cluster_id").isNull().alias("is_noise"))
+                .localCheckpoint())
+        wh.merge("assignments", rows, keys=["url"],
+                 snapshot=fingerprint("assignments", snap, str(epoch_id)),
+                 lineage={"clusters": snap, "epoch": epoch_id})
 
-# per-block state: parallel arrays of known cluster representatives and
-# the name evidence needed by the compat gate
-_ASSIGN_STATE = StructType([
-    StructField("reps", ArrayType(StringType()), True),
-    StructField("firsts", ArrayType(StringType()), True),
-    StructField("middles", ArrayType(StringType()), True),
-])
-
-
-def _assign_fn(key: Tuple[str], pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-    """Grouped stateful handler: for each mention arriving in this block,
-    link it to the first existing representative whose name evidence is
-    compatible (``textproc.names_compatible`` — the SAME kernel the batch
-    scorer gates on), else promote it to a new representative. State is
-    O(#clusters in block), not O(#mentions): web-scale blocks keep
-    thousands of reps, not millions of members."""
-    from webr.textproc import names_compatible
-
-    if state.exists:
-        reps, firsts, middles = (list(x) for x in state.get)
-    else:
-        reps, firsts, middles = [], [], []
-    bk = key[0]
-    out_rows: list[dict[str, Any]] = []
-    # arrival order within a micro-batch is not deterministic after a
-    # shuffle, and a large group arrives as MULTIPLE Arrow chunks with
-    # nondeterministic boundaries — concatenate the whole group FIRST,
-    # then sort once (url order) so replays produce identical state
-    chunks = [pdf for pdf in pdfs]
-    if chunks:
-        rows = pd.concat(chunks, ignore_index=True).sort_values("url")
-        for url, first, middle in zip(rows["url"], rows["first"],
-                                      rows["middle"]):
-            hit = None
-            for i, r in enumerate(reps):
-                if names_compatible(first, middle, firsts[i], middles[i]):
-                    hit = r
-                    break
-            if hit is None:
-                reps.append(url)
-                firsts.append(first)
-                middles.append(middle)
-                out_rows.append({"bk": bk, "url": url, "rep": url,
-                                 "is_new": True})
-            else:
-                out_rows.append({"bk": bk, "url": url, "rep": hit,
-                                 "is_new": False})
-    state.update((reps, firsts, middles))
-    yield pd.DataFrame(out_rows, columns=[f.name for f in ASSIGN_OUT.fields])
-
-
-def incremental_assign(mentions: DataFrame) -> DataFrame:
-    """Streaming mentions (bk, url, first, middle) -> (bk, url, rep,
-    is_new) via ``applyInPandasWithState``. State lives in the streaming
-    checkpoint, so a restarted query resumes with every block's known
-    representatives intact (tested in tests/test_modules.py)."""
-    return (mentions
-            .groupBy("bk")
-            .applyInPandasWithState(
-                _assign_fn, ASSIGN_OUT, _ASSIGN_STATE,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def mention_stream(pages: DataFrame) -> DataFrame:
-    """pages stream -> streaming mentions keyed by the first-initial+last
-    block key (the n: key of mentions.block_keys_for), via the SAME
-    extraction kernel as the batch pipeline."""
-    from webr.engine import build_mentions
-    m = build_mentions(pages)
-    return (m.where(F.col("parse_ok"))
-            .select(F.concat(F.substring("first", 1, 1), F.lit(":"),
-                             F.col("last")).alias("bk"),
-                    "url", "first", "middle"))
-
-
-def incremental_assign_query(spark: SparkSession, input_dir: str,
-                             out_dir: str, checkpoint_dir: str):
-    """End-to-end: page drops -> mentions -> stateful cluster assignment
-    -> parquet sink, availableNow (drain-what-is-there) semantics."""
-    q = (incremental_assign(mention_stream(stream_pages(spark, input_dir)))
-         .writeStream
-         .format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    return q
+    return (stream_pages(spark, input_dir)
+            .writeStream
+            .foreachBatch(assign)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
