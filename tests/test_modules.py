@@ -346,6 +346,35 @@ def test_warehouse_merge_replay_and_new_table(spark, warehouse_dir):
     assert wh.manifest("t")["lineage"]["parent"] == "s1"
 
 
+def test_warehouse_merge_evaluates_input_once(spark, warehouse_dir):
+    """Merging into an existing table runs the incoming plan once: a
+    100-row Python input sends 100 rows through Python, not one pass per
+    use (the anti-join keys and the union read it twice before)."""
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    ddl = "url string, cluster_id long, is_noise boolean"
+    wh.merge("t", spark.createDataFrame(
+        [(f"u{i}", 1, False) for i in range(0, 150, 3)], ddl),
+        keys=["url"], snapshot="s1")
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf.assign(cluster_id=2)
+
+    incoming = spark.range(100).selectExpr(
+        "concat('u', id) as url", "0L as cluster_id",
+        "false as is_noise").mapInPandas(tag, ddl)
+    out = wh.merge("t", incoming, keys=["url"], snapshot="s2")
+    assert seen.value == 100
+    got = {r.url: r.cluster_id for r in out.collect()}
+    # 100 incoming rows replace or add; the 17 old keys >= 100 stay
+    assert len(got) == 100 + len(range(102, 150, 3))
+    assert {got[f"u{i}"] for i in range(100)} == {2}
+    assert {got[f"u{i}"] for i in range(102, 150, 3)} == {1}
+
+
 def test_learned_blocking_cnf(spark):
     from webr.blocking_learn import evaluate_scheme, learn_cnf
     # pred_a / pred_b each admit all matches plus DIFFERENT noise slices;

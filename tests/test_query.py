@@ -206,12 +206,34 @@ def _diluted(by_url, base: str, other: str, k: int, url: str) -> dict:
             "html": html.encode("utf-8"), "text": "", "lang": "eng"}
 
 
+def _renamed(page, url: str, name: str) -> dict:
+    """``page`` under ``url`` with its author heading replaced by
+    ``name``."""
+    html = re.sub(r"<h1>.*?</h1>", f"<h1>{name}</h1>",
+                  page["html"].decode("utf-8"), count=1)
+    return {"url": url, "warc_ts": page["warc_ts"],
+            "html": html.encode("utf-8"), "text": "", "lang": page["lang"]}
+
+
+def _blank_initial_cluster(corpus_pd, warehouse_pd) -> int:
+    """The cluster of the ``blank_first`` fixture's pages: its entity row
+    gets first_initial '' in that fixture's warehouse."""
+    clusters_pd = warehouse_pd[2]
+    return int(clusters_pd.set_index("url").cluster_id[
+        _held(corpus_pd, clusters_pd)[3]])
+
+
+def _held(corpus_pd, clusters_pd) -> list[str]:
+    full = set(corpus_pd.url[~corpus_pd.author_name.map(_initial_only)])
+    return sorted(u for u, noise in zip(clusters_pd.url, clusters_pd.is_noise)
+                  if not noise and u in full)
+
+
 def _query_fixture(kind: str, corpus_pd, warehouse_pd) -> pd.DataFrame:
     clusters_pd = warehouse_pd[2]
     by_url = corpus_pd.set_index("url", drop=False)
     full = set(corpus_pd.url[~corpus_pd.author_name.map(_initial_only)])
-    held = sorted(u for u, noise in zip(clusters_pd.url, clusters_pd.is_noise)
-                  if not noise and u in full)
+    held = _held(corpus_pd, clusters_pd)
     rng = random.Random(5)
     if kind == "single":
         rows = [by_url.loc[held[3], _PAGE_COLS].to_dict()]
@@ -240,6 +262,19 @@ def _query_fixture(kind: str, corpus_pd, warehouse_pd) -> pd.DataFrame:
                          "https://dilute.example.org/p/gate")]
     elif kind == "recrawl":  # an existing url whose body changed
         rows = [_perturbed(by_url.loc[held[7]], held[7], rng)]
+    elif kind == "blank_first":
+        # a page under its last name only (parsed first name ''); the
+        # warehouse of this fixture blanks the first_initial of its
+        # cluster's entity
+        page = by_url.loc[held[3]]
+        rows = [_renamed(page, f"{held[3]}-nofirst",
+                         page["author_name"].split()[-1])]
+    elif kind == "shared_cluster":
+        # two pages of one cluster in one batch: every member of that
+        # cluster is scored once against each
+        c = clusters_pd.set_index("url").cluster_id
+        twin = next(u for u in held if u != held[3] and c[u] == c[held[3]])
+        rows = [by_url.loc[u, _PAGE_COLS].to_dict() for u in (held[3], twin)]
     return pd.DataFrame(rows)[_PAGE_COLS]
 
 
@@ -252,9 +287,12 @@ def warehouse_pd(pipeline_out):
             pipeline_out["mention_feats"].toPandas())
 
 
-def _engine_rows(spark, pipeline_out, qpd: pd.DataFrame) -> list[tuple]:
+def _engine_rows(spark, pipeline_out, qpd: pd.DataFrame,
+                 entities=None) -> list[tuple]:
     res = match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
-                        pipeline_out["idf"], pipeline_out["entities"],
+                        pipeline_out["idf"],
+                        pipeline_out["entities"] if entities is None
+                        else entities,
                         pipeline_out["clusters"],
                         pipeline_out["mention_feats"])
     return sorted(tuple(r) for r in res.collect())
@@ -262,15 +300,25 @@ def _engine_rows(spark, pipeline_out, qpd: pd.DataFrame) -> list[tuple]:
 
 @pytest.mark.parametrize("kind", ["single", "mix64", "initial_only",
                                   "recrawl", "two_clusters",
-                                  "near_thresholds"])
+                                  "near_thresholds", "blank_first",
+                                  "shared_cluster"])
 def test_query_matches_oracle_rows(spark, pipeline_out, corpus_pd,
                                    warehouse_pd, kind):
     """Full rows (q_url, cluster_id, votes, cluster_cos, rank) equal the
     pandas twin built from the scalar kernels."""
     from webr.oracle import record_query
     qpd = _query_fixture(kind, corpus_pd, warehouse_pd)
+    entities = None
+    if kind == "blank_first":
+        cid = _blank_initial_cluster(corpus_pd, warehouse_pd)
+        entities = pipeline_out["entities"].withColumn(
+            "first_initial", F.when(F.col("cluster_id") == cid, F.lit(""))
+            .otherwise(F.col("first_initial")))
+        ent_pd = warehouse_pd[1].copy()
+        ent_pd.loc[ent_pd.cluster_id == cid, "first_initial"] = ""
+        warehouse_pd = (warehouse_pd[0], ent_pd, *warehouse_pd[2:])
     want = record_query.match_records(qpd, *warehouse_pd)
-    got = _engine_rows(spark, pipeline_out, qpd)
+    got = _engine_rows(spark, pipeline_out, qpd, entities)
     assert got == sorted(tuple(r) for r in want.itertuples(index=False))
     assert got, kind  # every fixture kind gets at least one answer
     if kind == "two_clusters":
@@ -280,6 +328,27 @@ def test_query_matches_oracle_rows(spark, pipeline_out, corpus_pd,
     if kind == "mix64":
         answered = {r[0] for r in got}
         assert not any(u.startswith("https://nomatch.") for u in answered)
+    top1 = {r[0]: r[1] for r in got if r[4] == 1}
+    if kind == "blank_first":
+        assert list(top1.values()) == [
+            _blank_initial_cluster(corpus_pd, warehouse_pd)], got
+    if kind == "shared_cluster":
+        assert len(top1) == 2 and len(set(top1.values())) == 1, got
+
+
+def test_first_initial_rule_is_sql_or(spark):
+    """The driver's first-initial rule equals the SQL predicate it
+    replaced on every null/empty/letter combination: a null query
+    initial still matches an entity initial '' (three-valued OR)."""
+    from webr.query import _first_initial_ok
+    vals = [None, "", "a", "b"]
+    combos = [(q, e) for q in vals for e in vals]
+    df = spark.createDataFrame(combos, "q string, e string")
+    sql = {(r.q, r.e): bool(r.ok) for r in df.select(
+        "q", "e", F.expr("coalesce((q = e) OR q = '' OR e = '', false)")
+        .alias("ok")).collect()}
+    assert {c: _first_initial_ok(*c) for c in combos} == sql
+    assert _first_initial_ok(None, "") and not _first_initial_ok(None, None)
 
 
 def test_query_repeated_url_answered_once(spark, pipeline_out, corpus_pd,
@@ -306,33 +375,72 @@ def test_query_repeated_url_with_new_content_raises(spark, pipeline_out,
             pipeline_out["clusters"], pipeline_out["mention_feats"])
 
 
-def _request_jobs(spark, pipeline_out, qpd, group: str) -> int:
+def _request_jobs(spark, pipeline_out, qpd, group: str):
+    """-> (result rows, stage count of each Spark job the request ran)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        _engine_rows(spark, pipeline_out, qpd)
+        rows = _engine_rows(spark, pipeline_out, qpd)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    return rows, [len(st.getJobInfo(j).stageIds)
+                  for j in st.getJobIdsForGroup(group)]
 
 
 def test_query_job_budget_and_idf_memo(spark, pipeline_out, corpus_pd,
                                        warehouse_pd, monkeypatch):
-    """A single-page request runs at most 7 Spark jobs (11 with the
-    per-pair sided join it replaced); a repeat request against the same
-    idf files reuses the memoized broadcast instead of counting and
-    collecting the vocabulary again."""
+    """A warm single-page request runs at most 4 Spark jobs (7 with the
+    cogroup it replaced, 11 with the per-pair sided join before that),
+    each of one stage: no shuffle. A request whose last name matches no
+    entity stops after the candidate lookup. A repeat request against
+    the same idf files reuses the memoized broadcast instead of counting
+    and collecting the vocabulary again."""
     from webr import query
     monkeypatch.setattr(query, "_IDF_MEMO", {})
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
-    first = _request_jobs(spark, pipeline_out, qpd, "q3-budget-1")
+    _, first = _request_jobs(spark, pipeline_out, qpd, "q3-budget-1")
     (entry,) = query._IDF_MEMO.values()
-    second = _request_jobs(spark, pipeline_out, qpd, "q3-budget-2")
+    rows, second = _request_jobs(spark, pipeline_out, qpd, "q3-budget-2")
     (again,) = query._IDF_MEMO.values()
     assert again[2] is entry[2] and entry[2] is not None
-    assert second <= 7, second
-    assert first >= second + 2, (first, second)  # idf count + collect
+    assert rows
+    assert len(second) <= 4, second
+    assert set(second) == {1}, second  # one stage per job: no exchange
+    # idf count + collect
+    assert len(first) >= len(second) + 2, (first, second)
+    stranger = pd.DataFrame([_fabricated(0, random.Random(3))])[_PAGE_COLS]
+    rows, jobs = _request_jobs(spark, pipeline_out, stranger, "q3-budget-3")
+    assert rows == [] and len(jobs) <= 2, (rows, jobs)
+
+
+def test_member_pass_plan_broadcasts_no_shuffle(spark, pipeline_out,
+                                               corpus_pd, warehouse_pd):
+    """The member pass joins mention_feats to a broadcast of the named
+    clusters: no shuffle exchange, no sort-merge join. A shuffle here
+    would cost a request two more jobs."""
+    import io
+    from contextlib import redirect_stdout
+
+    from webr.query import member_votes, prepare_query_mentions
+    qpd = _query_fixture("single", corpus_pd, warehouse_pd)
+    queries = prepare_query_mentions(
+        spark.createDataFrame(qpd, schema=schema.PAGES), pipeline_out["idf"])
+    cid = int(warehouse_pd[2].set_index("url").cluster_id[qpd.url.iloc[0]])
+    df = member_votes(queries, {cid: [0]}, pipeline_out["clusters"],
+                      pipeline_out["mention_feats"])
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    plan = buf.getvalue()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    # one row per task that holds members: partial counts
+    rows = df.collect()
+    assert {(r.q, r.cluster_id) for r in rows} == {(0, cid)}
+    assert sum(r.votes for r in rows) >= 1
 
 
 def test_query_idf_memo_replaced_on_rewrite(spark, pipeline_out,

@@ -134,17 +134,24 @@ class Warehouse:
         snapshot as ``parent`` (None for a new table) — snapshot lineage
         stays a chain, so resume logic still refuses stale upstreams.
 
-        Distributed shape: one left_anti join on the key columns + union —
-        no collect, scales with the table. On a real catalog this maps to
-        MERGE INTO and this facade keeps the call shape."""
+        Distributed shape: the union of existing and incoming rows keeps,
+        per key tuple, the rows of the newer side (a window over the
+        keys) — no collect, scales with the table, and the incoming plan
+        is evaluated once. On a real catalog this maps to MERGE INTO and
+        this facade keeps the call shape."""
         import pyspark.sql.functions as F
+        from pyspark.sql import Window
         cur = self.manifest(table)
         merged = df  # merging into a missing (empty) table
         if cur is not None:
             existing = self.read(table)
-            merged = (existing.join(df.select(keys).distinct(), keys,
-                                    "left_anti")
-                      .unionByName(df.select(existing.columns)))
+            both = (existing.withColumn("__new", F.lit(False))
+                    .unionByName(df.select(existing.columns)
+                                 .withColumn("__new", F.lit(True))))
+            merged = (both.withColumn("__top", F.max("__new").over(
+                          Window.partitionBy(*keys)))
+                      .where(F.col("__new") == F.col("__top"))
+                      .drop("__new", "__top"))
         # stage through a sibling dir: the merged plan lazily reads the
         # files write() would delete
         tmp = f"{table}__merge_tmp"

@@ -11,28 +11,31 @@ Two semantic stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-Request shape — two Python passes. A Python stage has a fixed cost
-whatever its size, so the request is built around how many it runs. On
-a 4-core host that cost was about 0.25 s per task (a JVM-only job about
-0.02 s), mostly the worker re-reading the directories of pyspark.zip,
-the py4j zip and the spark-core jar at the start of every task; with
-the guard in ``webr/__init__.py`` a warm 4-task trivial ``mapInPandas``
-takes about 0.26 s end to end (0.70 s without it):
+Request shape — two Python passes, no shuffle. A request's cost is
+mostly fixed (jobs, Python stage start-up, py4j round trips), not task
+CPU, so it is built around how few of each it runs:
   * ``prepare_query_mentions``: ONE Arrow pass derives the query pages'
     mentions and tf-idf weight arrays (the corpus's shared kernels, with
     the CORPUS idf — a query must not shift corpus statistics) and
-    collects them to the driver; the query side comes back as a local
-    DataFrame, so nothing downstream recomputes it.
-  * JVM-only broadcast joins: the name-key candidates (query × entities)
-    and their members (× non-noise clusters × mention_feats). No shuffle
-    of the corpus-sized tables.
-  * ONE grouped Arrow pass (cogroup on a coarse hash of q_url, so many
-    queries share a group): profile-cosine gate, member scoring with
-    ``score_pairs_indexed_vec`` (the pipeline's pair kernel), MIN_VOTES
-    and the top-K rank.
-A single-page request runs at most 7 Spark jobs once the idf broadcast
-is warm (was 11); the first request against an idf table also counts
-and collects its vocabulary. Both are pinned by tests/test_query.py.
+    collects them to the driver as an Arrow table.
+  * One JVM-only collect of the name-key candidates: the entity rows
+    whose ``last`` is one of the queries' last names. The driver applies
+    the first-initial rule and the profile-cosine gate (stage 1) to
+    these request-sized rows.
+  * ONE ``mapInArrow`` pass over ``mention_feats`` joined to a broadcast
+    of the surviving clusters' non-noise rows scores every member
+    against the queries that named its cluster with
+    ``score_pairs_indexed_vec`` (the pipeline's pair kernel; the query
+    rows travel in the closure) and returns vote counts per (query,
+    cluster). Member features never leave the executors.
+  * The driver sums the votes, applies MIN_VOTES and the top-K rank, and
+    returns the rows as a DataFrame over a local Arrow table (its
+    ``round(cluster_cos, 9)`` is a JVM expression that runs no job).
+A single-page request runs at most 4 Spark jobs once the idf broadcast
+is warm (prepare, candidates, the broadcast side, the member pass; 7
+with the cogroup it replaced), each of one stage; a request whose last
+names match no entity runs 2. The first request against an idf table
+also counts and collects its vocabulary. Pinned by tests/test_query.py.
 
 The idf broadcast is memoized on the idf DataFrame's plan and its
 ``inputFiles()``. Every write of a Spark table gives its part files new
@@ -52,6 +55,7 @@ import hashlib
 import threading
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -62,12 +66,11 @@ from pyspark.sql.types import (
 )
 
 from webr import engine, schema, spec
+from webr.features import (
+    MEMBER_COLUMNS, member_table, profile_arrays, score_pairs_indexed_vec,
+    sparse_cosine_sorted,
+)
 from webr.mentions import derive_mentions
-
-# cogroup key space of the grouped pass: coarse, so a batch request's
-# queries share groups (fewer Python calls, members shipped once per
-# group); the result never depends on it (per-query computation)
-QUERY_GROUPS = 8
 
 _FEAT_COLS = [f.name for f in schema.MENTION_FEATS.fields]
 _CONTENT_COLS = ("warc_ts", "html", "text")  # what the match reads
@@ -114,11 +117,11 @@ def _content_digests(pdf: pd.DataFrame) -> list[str]:
 
 
 def prepare_query_mentions(query_pages: DataFrame,
-                           idf: DataFrame) -> DataFrame:
-    """Query pages -> their mention_feats rows as a local DataFrame:
-    same extract/normalize/weights kernels as the corpus, with the CORPUS
-    idf. One Python pass, collected once through Arrow; one row per
-    distinct url (see the module docstring)."""
+                           idf: DataFrame) -> pa.Table:
+    """Query pages -> their mention_feats rows as an Arrow table on the
+    driver: same extract/normalize/weights kernels as the corpus, with
+    the CORPUS idf. One Python pass, collected once; one row per distinct
+    url (see the module docstring)."""
     spark = query_pages.sparkSession
     bc = _idf_broadcast(idf)
     # warc_ts is optional, as in engine.build_mentions
@@ -154,7 +157,7 @@ def prepare_query_mentions(query_pages: DataFrame,
     if bc is None:  # vocabulary too big to broadcast: distributed join
         mentions = spark.createDataFrame(tbl, schema=schema.MENTIONS)
         tbl = engine.build_mention_feats_join(mentions, idf).toArrow()
-    return spark.createDataFrame(tbl, schema=schema.MENTION_FEATS)
+    return tbl.select(_FEAT_COLS)
 
 
 _MATCHES = StructType([
@@ -165,92 +168,67 @@ _MATCHES = StructType([
     StructField("rank", IntegerType()),
 ])
 _MATCHES_ARROW = to_arrow_schema(_MATCHES)
+_VOTES = StructType([
+    StructField("q", LongType()),
+    StructField("cluster_id", LongType()),
+    StructField("votes", LongType()),
+])
 
 
-def _match_group(cand, side):
-    """One cogroup of the grouped pass (pyarrow tables in and out).
+def _first_initial_ok(q_fi, e_fi) -> bool:
+    """The name key's first-initial rule with SQL's three-valued OR:
+    ``q_fi = e_fi OR q_fi = '' OR e_fi = ''`` holds when one disjunct is
+    TRUE, so a null query initial still matches an entity initial ''."""
+    return (q_fi is not None and q_fi == e_fi) or q_fi == "" or e_fi == ""
 
-    ``cand``: one row per (query url, name-key candidate cluster) with
-    the cluster's n_members and profile. ``side``: mention_feats rows —
-    the group's queries (cluster_id null) and the members of their
-    candidate clusters (a member repeats once per query of the group
-    that names its cluster).
-    -> (q_url, cluster_id, votes, cluster_cos, rank) rows."""
-    import numpy as np
-    import pyarrow.compute as pc
 
-    from webr.features import (
-        member_table, profile_arrays, score_pairs_indexed_vec,
-        sparse_cosine_sorted,
-    )
+def member_votes(queries: pa.Table, named: dict, clusters: DataFrame,
+                 mention_feats: DataFrame) -> DataFrame:
+    """-> (q, cluster_id, votes): for query row index ``q`` of
+    ``queries`` (mention_feats rows) and a cluster, how many of the
+    cluster's members score >= RECORD_EPS against the query. One row per
+    Arrow batch that has hits, so a (q, cluster_id) can repeat: the
+    caller sums. ``named``: cluster_id -> the query indexes whose
+    stage-1 gate it passed.
 
-    is_query = pc.is_null(side.column("cluster_id"))
-    qt = member_table(side.filter(is_query))
-    q_pos = {u: j for j, u in enumerate(qt["url"])}
-    q_urls = cand.column("url").to_pylist()
-    cids = cand.column("cluster_id").to_pylist()
-    n_members = cand.column("n_members").to_pylist()
-    profiles = cand.column("profile").to_pylist()
+    One Arrow pass over mention_feats joined to a broadcast of the named
+    clusters' non-noise rows: no shuffle, and member features stay on
+    the executors. Each batch scores its members in ONE kernel call over
+    a member table of the queries followed by the batch's members."""
+    live = (clusters.where(~F.col("is_noise")
+                           & F.col("cluster_id").isin(list(named)))
+            .select("url", "cluster_id"))
+    members = (mention_feats.join(F.broadcast(live), "url")
+               .select(*MEMBER_COLUMNS, "cluster_id"))
 
-    # stage 1: cluster-profile cosine gate (profiles hashed once per
-    # cluster of the group)
-    prof_memo: dict = {}
-    surv, coss = [], []
-    for k, cid in enumerate(cids):
-        p = prof_memo.get(cid)
-        if p is None:
-            p = prof_memo[cid] = profile_arrays(profiles[k] or ())
-        j = q_pos[q_urls[k]]
-        cos = sparse_cosine_sorted(qt["w_toks"][j], qt["w_vals"][j],
-                                   qt["w_norm"][j], *p)
-        if cos >= spec.CLUSTER_EPS:
-            surv.append(k)
-            coss.append(cos)
-    if not surv:
-        return _MATCHES_ARROW.empty_table()
+    def votes(batches):
+        qt = member_table(queries)
+        nq = len(qt["url"])
+        for batch in batches:
+            cids = batch.column("cluster_id").to_pylist()
+            i1, i2 = [], []
+            for j, c in enumerate(cids):
+                for q in named[c]:
+                    i1.append(q)
+                    i2.append(nq + j)
+            if not i1:
+                continue
+            mt = member_table(pa.Table.from_batches([batch]))
+            table = {c: qt[c] + mt[c] for c in qt}
+            score = score_pairs_indexed_vec(table, i1, i2)["score"]
+            hit = score >= spec.RECORD_EPS
+            if not hit.any():
+                continue
+            q_hit = np.asarray(i1, dtype=np.int64)[hit]
+            c_hit = np.asarray(cids, dtype=np.int64)[
+                np.asarray(i2, dtype=np.int64)[hit] - nq]
+            keys, n = np.unique(np.stack([q_hit, c_hit]), axis=1,
+                                return_counts=True)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys[0]), pa.array(keys[1]), pa.array(n)],
+                names=["q", "cluster_id", "votes"])
 
-    # stage 2: every survivor's members scored in ONE kernel call over a
-    # member table of the group's queries followed by the distinct
-    # members of surviving clusters
-    memb = side.filter(pc.invert(is_query))
-    live = {cids[k] for k in surv}
-    m_rows: dict = {}
-    for i, (u, c) in enumerate(zip(memb.column("url").to_pylist(),
-                                   memb.column("cluster_id").to_pylist())):
-        if c in live:
-            m_rows.setdefault(u, (i, c))
-    mt = member_table(memb.take([i for i, _ in m_rows.values()]))
-    table = {c: qt[c] + mt[c] for c in qt}
-    by_cluster: dict = {}
-    for j, (_, c) in enumerate(m_rows.values()):
-        by_cluster.setdefault(c, []).append(len(q_pos) + j)
-    i1, i2, owner = [], [], []
-    for s, k in enumerate(surv):
-        mem = by_cluster.get(cids[k], [])
-        i1 += [q_pos[q_urls[k]]] * len(mem)
-        i2 += mem
-        owner += [s] * len(mem)
-    votes = [0] * len(surv)
-    if i1:
-        score = score_pairs_indexed_vec(table, i1, i2)["score"]
-        hit = np.asarray(owner, dtype=np.int64)[score >= spec.RECORD_EPS]
-        votes = np.bincount(hit, minlength=len(surv)).tolist()
-
-    # MIN_VOTES gate, then rank per query: votes desc, stage-1 cosine
-    # desc, cluster_id asc; top-K
-    ranked: dict = {}
-    for s, k in enumerate(surv):
-        need = 1 if n_members[k] < 2 else spec.MIN_VOTES
-        if votes[s] >= need:
-            ranked.setdefault(q_urls[k], []).append(
-                (-votes[s], -coss[s], cids[k]))
-    rows = []
-    for u, hits in ranked.items():
-        hits.sort()
-        for r, (nv, nc, cid) in enumerate(hits[:spec.TOP_K], start=1):
-            rows.append({"q_url": u, "cluster_id": cid, "votes": -nv,
-                         "cluster_cos": -nc, "rank": r})
-    return pa.Table.from_pylist(rows, schema=_MATCHES_ARROW)
+    return members.mapInArrow(votes, _VOTES)
 
 
 def match_records(query_pages: DataFrame, idf: DataFrame,
@@ -262,44 +240,72 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
     Raises ValueError when one url arrives twice with different content.
 
     Batch-friendly by construction: pass MANY query pages in one call and
-    the name-key candidate join against the entity table runs ONCE for
+    the name-key candidate lookup against the entity table runs ONCE for
     the whole batch (the distributed analog of ref
     record_based_query_exp2.py:124-150's per-name-key profile cache —
     there the cache avoids refetching cluster profiles per query; here
-    one broadcast join amortizes the same work across the batch), and
-    the batch's queries share the grouped pass's groups. Tested with a
-    100-query batch in tests/test_query.py."""
-    qf = prepare_query_mentions(query_pages, idf)
+    one collect amortizes the same work across the batch), and one
+    member pass scores every query's survivors. Tested with a 100-query
+    batch in tests/test_query.py."""
+    spark = query_pages.sparkSession
+    # through the module global: a wrapper installed on the module sees
+    # the call
+    qtbl = prepare_query_mentions(query_pages, idf)
+    q_last = qtbl.column("last").to_pylist()
+    q_first = qtbl.column("first").to_pylist()
 
-    def gk():
-        return F.pmod(F.xxhash64("url"), F.lit(QUERY_GROUPS)).alias("gk")
+    # name-key candidates: entity rows sharing a query's last name
+    ent = (entities.where(F.col("last").isin(sorted(set(q_last) - {None})))
+           .select("last", "first_initial", "cluster_id", "n_members",
+                   "profile").toArrow())
+    by_last: dict = {}
+    for last, *cand in zip(*(c.to_pylist() for c in ent.columns)):
+        by_last.setdefault(last, []).append(cand)
 
-    # name-key candidates. Both uses below read the same (url, first,
-    # last) columns of qf, so they share one broadcast of it
-    q_fi = F.substring("first", 1, 1)
-    cand = (F.broadcast(qf).join(
-        entities.select(F.col("last").alias("e_last"), "first_initial",
-                        "cluster_id", "n_members", "profile"),
-        (F.col("last") == F.col("e_last"))
-        & ((q_fi == F.col("first_initial")) | (q_fi == F.lit(""))
-           | (F.col("first_initial") == F.lit(""))))
-        .select(gk(), "url", "cluster_id", "n_members", "profile"))
-    # members of every candidate cluster, tagged with the group of the
-    # query that named it; the queries' own features ride along with a
-    # null cluster_id. gk and cluster_id come from fresh expressions (not
-    # re-used from ``cand``) so the cogroup's two branches don't share an
-    # attribute id (self-join ambiguity)
-    keys = cand.select(gk(), F.col("cluster_id").alias("k_cid"))
-    member_urls = (keys.join(clusters.where(~F.col("is_noise")),
-                             F.col("k_cid") == F.col("cluster_id"))
-                   .select("gk", "cluster_id", "url"))
-    side = (F.broadcast(member_urls).join(mention_feats, "url")
-            .select("gk", *_FEAT_COLS, "cluster_id")
-            .unionByName(qf.select(
-                gk(), *_FEAT_COLS,
-                F.lit(None).cast("long").alias("cluster_id"))))
-    out = (cand.groupby("gk").cogroup(side.groupby("gk"))
-           .applyInArrow(_match_group, schema=_MATCHES))
-    return out.select("q_url", "cluster_id", "votes",
+    # stage 1: first-initial rule, then the cluster-profile cosine gate
+    # (profiles hashed once per cluster of the request)
+    qt = member_table(qtbl)
+    prof_memo: dict = {}
+    surv = []  # (query index, cluster_id, n_members, cosine)
+    for q, (last, first) in enumerate(zip(q_last, q_first)):
+        q_fi = None if first is None else first[:1]
+        for e_fi, cid, n_members, profile in by_last.get(last, ()):
+            if not _first_initial_ok(q_fi, e_fi):
+                continue
+            p = prof_memo.get(cid)
+            if p is None:
+                p = prof_memo[cid] = profile_arrays(profile or ())
+            cos = sparse_cosine_sorted(qt["w_toks"][q], qt["w_vals"][q],
+                                       qt["w_norm"][q], *p)
+            if cos >= spec.CLUSTER_EPS:
+                surv.append((q, cid, n_members, cos))
+
+    # stage 2: member votes
+    votes: dict = {}
+    if surv:
+        named: dict = {}
+        for q, cid, _, _ in surv:
+            named.setdefault(cid, []).append(q)
+        out = member_votes(qtbl, named, clusters, mention_feats).toArrow()
+        for key in zip(*(out.column(c).to_pylist()
+                         for c in ("q", "cluster_id", "votes"))):
+            votes[key[:2]] = votes.get(key[:2], 0) + key[2]
+
+    # MIN_VOTES gate, then rank per query: votes desc, stage-1 cosine
+    # desc, cluster_id asc; top-K
+    ranked: dict = {}
+    for q, cid, n_members, cos in surv:
+        v = votes.get((q, cid), 0)
+        if v >= (1 if n_members < 2 else spec.MIN_VOTES):
+            ranked.setdefault(q, []).append((-v, -cos, cid))
+    rows = []
+    for q, hits in ranked.items():
+        hits.sort()
+        for r, (nv, nc, cid) in enumerate(hits[:spec.TOP_K], start=1):
+            rows.append({"q_url": qt["url"][q], "cluster_id": cid,
+                         "votes": -nv, "cluster_cos": -nc, "rank": r})
+    res = spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=_MATCHES_ARROW), schema=_MATCHES)
+    return res.select("q_url", "cluster_id", "votes",
                       F.round("cluster_cos", 9).alias("cluster_cos"),
                       "rank")

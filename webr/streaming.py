@@ -188,13 +188,11 @@ def assign_stream(spark: SparkSession, input_dir: str, warehouse_root: str,
             "idf", "entities", "clusters", "mention_feats")))
             .where("rank = 1").select(F.col("q_url").alias("url"),
                                       "cluster_id"))
-        # materialized once: merge reads its incoming rows twice
         rows = (pages.select("url", "warc_ts").distinct()
                 .join(top, "url", "left")
                 .select("url", "warc_ts",
                         F.coalesce("cluster_id", F.lit(0)).alias("cluster_id"),
-                        F.col("cluster_id").isNull().alias("is_noise"))
-                .localCheckpoint())
+                        F.col("cluster_id").isNull().alias("is_noise")))
         wh.merge("assignments", rows, keys=["url"],
                  snapshot=fingerprint("assignments", snap, str(epoch_id)),
                  lineage={"clusters": snap, "epoch": epoch_id})
