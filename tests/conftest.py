@@ -16,6 +16,14 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def compiled(spark):
+    """-> a callable: how many classes Spark's codegen has compiled in
+    this JVM so far (a cache hit compiles none)."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: cm.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="session")
 def corpus_pd():
     from webr.synth import generate_pages, pages_to_pandas
     return pages_to_pandas(

@@ -375,6 +375,37 @@ def test_warehouse_merge_evaluates_input_once(spark, warehouse_dir):
     assert {got[f"u{i}"] for i in range(102, 150, 3)} == {1}
 
 
+def test_warehouse_merge_replay_after_failed_swap(spark, warehouse_dir,
+                                                  monkeypatch):
+    """A merge that fails between its two renames leaves the table only
+    under ``<table>__old``; the replayed merge rolls it back instead of
+    taking the table for missing and deleting the old rows."""
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    ddl = "url string, cluster_id long, is_noise boolean"
+    wh.merge("t", spark.createDataFrame(
+        [(f"u{i}", 1, False) for i in range(10)], ddl),
+        keys=["url"], snapshot="s1")
+    one = spark.createDataFrame([("new", 2, False)], ddl)
+    rename = os.rename
+
+    def failing(src, dst):
+        if src.endswith("__merge_tmp"):
+            raise OSError("crash between the swap's renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing)
+    with pytest.raises(OSError, match="crash"):
+        wh.merge("t", one, keys=["url"], snapshot="s2")
+    monkeypatch.setattr(os, "rename", rename)
+    assert wh.manifest("t") is None  # only t__old holds the rows now
+    wh.merge("t", one, keys=["url"], snapshot="s2")
+    got = {r.url: r.cluster_id for r in wh.read("t").collect()}
+    assert got == {**{f"u{i}": 1 for i in range(10)}, "new": 2}
+    assert wh.manifest("t")["lineage"]["parent"] == "s1"
+    assert sorted(os.listdir(warehouse_dir)) == ["t"]
+
+
 def test_learned_blocking_cnf(spark):
     from webr.blocking_learn import evaluate_scheme, learn_cnf
     # pred_a / pred_b each admit all matches plus DIFFERENT noise slices;
@@ -755,17 +786,20 @@ def test_pyfiles_zip_is_zipimportable():
     assert "zipimport-ok" in out.stdout
 
 
-def test_submit_er_sets_every_get_spark_sql_conf(monkeypatch):
+def test_submit_er_sets_every_get_spark_sql_conf(monkeypatch, capsys):
     """tools/submit_er.py attaches to the session spark-submit built and
     sets the runtime SQL confs itself: every spark.sql.* conf get_spark
     sets must be among them, with the same value (a missed one, e.g. the
-    broadcast-join threshold, plans a submitted run differently)."""
+    broadcast-join threshold, plans a submitted run differently). The
+    static codegen cache size cannot be set on a running session: it is
+    not among the runtime confs, and submit_er warns once when the
+    session's value differs."""
     import importlib.util
     import pathlib
 
     from pyspark.sql import SparkSession
 
-    from webr.session import get_spark
+    from webr.session import CODEGEN_CACHE_CONF, get_spark, sql_confs
 
     class Stop(Exception):
         pass
@@ -789,6 +823,9 @@ def test_submit_er_sets_every_get_spark_sql_conf(monkeypatch):
         def set(self, k, v):
             self.confs[k] = v
 
+        def get(self, k):
+            return self.confs.get(k, "100")  # Spark's default cache size
+
         def getOrCreate(self):
             return self
 
@@ -807,10 +844,18 @@ def test_submit_er_sets_every_get_spark_sql_conf(monkeypatch):
     spec.loader.exec_module(mod)
     with pytest.raises(Stop):
         mod.main(["--input", "unused", "--warehouse", "unused"])
-    sql = {k: v for k, v in built.confs.items() if k.startswith("spark.sql.")}
+    static_key, static_val = CODEGEN_CACHE_CONF
+    assert static_key not in sql_confs()
+    assert built.confs[static_key] == static_val
+    sql = {k: v for k, v in built.confs.items()
+           if k.startswith("spark.sql.") and k != static_key}
+    assert sql == sql_confs()
     assert "spark.sql.autoBroadcastJoinThreshold" in sql
     assert sql.items() <= submitted.confs.items(), (
         set(sql.items()) - set(submitted.confs.items()))
+    assert static_key not in submitted.confs
+    warned = capsys.readouterr().err.splitlines()
+    assert len(warned) == 1 and f"--conf {static_key}=" in warned[0], warned
 
 
 def test_vec_kernel_bitwise():

@@ -415,6 +415,31 @@ def test_query_job_budget_and_idf_memo(spark, pipeline_out, corpus_pd,
     assert rows == [] and len(jobs) <= 2, (rows, jobs)
 
 
+def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,
+                                             warehouse_pd, compiled):
+    """A warm request naming other clusters and last names reuses the
+    classes the first request compiled: the candidate and member
+    predicates hold their values as an array literal (a reference in the
+    generated code), not as inlined literals, which at warehouse scale
+    would compile new classes for almost every request."""
+    ent = warehouse_pd[1].set_index("cluster_id")["last"]
+    cl = warehouse_pd[2]
+    members = cl[~cl.is_noise].drop_duplicates("cluster_id")
+    # one page each of three clusters with three different last names
+    picks = members[~members.cluster_id.map(ent).duplicated()].iloc[:3]
+    assert len(picks) == 3
+    by_url = corpus_pd.set_index("url", drop=False)
+    first = _engine_rows(spark, pipeline_out,
+                         by_url.loc[picks.url.iloc[:1], _PAGE_COLS])
+    before = compiled()
+    second = _engine_rows(spark, pipeline_out,
+                          by_url.loc[picks.url.iloc[1:], _PAGE_COLS])
+    assert compiled() == before
+    top1 = {r[0]: r[1] for r in second if r[4] == 1}
+    assert top1 == dict(zip(picks.url.iloc[1:], picks.cluster_id.iloc[1:]))
+    assert {r[1] for r in first}.isdisjoint(top1.values())
+
+
 def test_member_pass_plan_broadcasts_no_shuffle(spark, pipeline_out,
                                                corpus_pd, warehouse_pd):
     """The member pass joins mention_feats to a broadcast of the named

@@ -2,6 +2,7 @@
 with outputs pinned to the oracle and to the pandas entities twin.
 
 - job budget per stage, counted from Spark's own job groups;
+- a second run in the session compiles no generated class;
 - the pair-scoring kernel spread over the session's cores;
 - every connected-components path (count-free ladder, multi-rung ladder,
   distributed ``_resolve``) gives the same labels on a multi-file
@@ -64,6 +65,23 @@ def test_stage_job_budget(spark, pages_df, warehouse_dir, monkeypatch):
     result_stage = max(st.getJobInfo(jobs["pair_scores"][-1]).stageIds)
     tasks = st.getStageInfo(result_stage).numTasks
     assert tasks >= min(4, spark.sparkContext.defaultParallelism), tasks
+
+
+def test_second_run_compiles_no_class(spark, pages_df, warehouse_dir,
+                                      compiled):
+    """A second Pipeline.run in the session, into a fresh warehouse,
+    compiles no generated class: the codegen cache holds a run's working
+    set (webr.session.CODEGEN_CACHE_CONF; Spark's default of 100 is
+    flushed by every run), and no stage plan inlines an input-dependent
+    literal."""
+    from webr.engine import Pipeline
+    counts = []
+    for name in ("a", "b"):
+        before = compiled()
+        Pipeline(spark, f"{warehouse_dir}/{name}",
+                 input_id="compile-v1").run(pages_df)
+        counts.append(compiled() - before)
+    assert counts[1] == 0, counts
 
 
 def _sorted(df, *cols) -> pd.DataFrame:

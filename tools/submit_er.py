@@ -7,14 +7,17 @@ already configured — master, executors, and --py-files come from the
 submit command line, exactly as they would on a real cluster:
 
     ZIP=$(python -c 'from webr.session import _package_zip; print(_package_zip())')
-    spark-submit --master local[8] --py-files "$ZIP" tools/submit_er.py \
+    spark-submit --master local[8] --py-files "$ZIP" \
+        --conf spark.sql.codegen.cache.maxEntries=512 tools/submit_er.py \
         --input /path/pages_dir --warehouse /path/wh
 
 Runtime-settable SQL confs are ``webr.session.sql_confs()``, the same
 mapping ``get_spark`` uses (shuffle partitions from
-``WEBR_SHUFFLE_PARTITIONS``), applied via spark.conf.set; JVM-startup
-confs (driver memory) belong on the submit command line
-(--driver-memory).
+``WEBR_SHUFFLE_PARTITIONS``), applied via spark.conf.set. Confs read at
+start-up belong on the submit command line: driver memory
+(--driver-memory) and the static codegen cache size
+(``webr.session.CODEGEN_CACHE_CONF``, the --conf above); the script
+warns on stderr when the session's cache size differs from it.
 """
 
 from __future__ import annotations
@@ -39,12 +42,18 @@ def main(argv: list[str]) -> int:
     # --py-files on executors and from the local tree on the driver
     from webr.__main__ import _auto_input_id
     from webr.engine import Pipeline
-    from webr.session import sql_confs
+    from webr.session import CODEGEN_CACHE_CONF, sql_confs
 
     # SQL confs are runtime-settable; everything JVM-level (master, memory,
-    # py-files) is owned by the spark-submit command line.
+    # py-files, static confs) is owned by the spark-submit command line.
     for k, v in sql_confs().items():
         spark.conf.set(k, v)
+    key, want = CODEGEN_CACHE_CONF
+    got = spark.conf.get(key)
+    if got != want:
+        print(f"submit_er: {key} is {got}, webr sizes it {want}: "
+              f"each run recompiles its generated classes; pass "
+              f"--conf {key}={want} to spark-submit", file=sys.stderr)
 
     pages = spark.read.parquet(args.input)
     input_id = args.input_id or _auto_input_id(args.input)

@@ -141,6 +141,13 @@ class Warehouse:
         this facade keeps the call shape."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
+        final = self._dir(table)
+        backup = f"{final}__old"
+        # a crash between the swap's two renames (below) left the table
+        # only under __old: roll it back before reading, or this merge
+        # would take the table for missing and delete those rows
+        if not os.path.exists(final) and os.path.exists(backup):
+            os.rename(backup, final)
         cur = self.manifest(table)
         merged = df  # merging into a missing (empty) table
         if cur is not None:
@@ -180,10 +187,8 @@ class Warehouse:
             json.dump(man, f, indent=1)
         # crash-safe swap: old table stays intact under __old until the
         # staged dir is in place — a failure window leaves either the old
-        # table (pre-first-rename) or a recoverable __old backup, never a
-        # table with no data and no manifest
-        final = self._dir(table)
-        backup = f"{final}__old"
+        # table (pre-first-rename) or an __old backup that the next merge
+        # rolls back, never a table with no data and no manifest
         shutil.rmtree(backup, ignore_errors=True)
         if os.path.exists(final):
             os.rename(final, backup)

@@ -58,7 +58,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyarrow as pa
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -182,6 +182,14 @@ def _first_initial_ok(q_fi, e_fi) -> bool:
     return (q_fi is not None and q_fi == e_fi) or q_fi == "" or e_fi == ""
 
 
+def _one_of(col: str, values: list, dtype) -> Column:
+    """``col IN values`` over one array literal. ``isin`` inlines its
+    values into the generated Java, so each request naming new clusters
+    or last names would compile new classes; the array literal is a
+    reference in the generated code, which every request then reuses."""
+    return F.array_contains(F.lit(np.array(values, dtype=dtype)), F.col(col))
+
+
 def member_votes(queries: pa.Table, named: dict, clusters: DataFrame,
                  mention_feats: DataFrame) -> DataFrame:
     """-> (q, cluster_id, votes): for query row index ``q`` of
@@ -196,7 +204,7 @@ def member_votes(queries: pa.Table, named: dict, clusters: DataFrame,
     the executors. Each batch scores its members in ONE kernel call over
     a member table of the queries followed by the batch's members."""
     live = (clusters.where(~F.col("is_noise")
-                           & F.col("cluster_id").isin(list(named)))
+                           & _one_of("cluster_id", list(named), np.int64))
             .select("url", "cluster_id"))
     members = (mention_feats.join(F.broadcast(live), "url")
                .select(*MEMBER_COLUMNS, "cluster_id"))
@@ -255,7 +263,7 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
     q_first = qtbl.column("first").to_pylist()
 
     # name-key candidates: entity rows sharing a query's last name
-    ent = (entities.where(F.col("last").isin(sorted(set(q_last) - {None})))
+    ent = (entities.where(_one_of("last", sorted(set(q_last) - {None}), str))
            .select("last", "first_initial", "cluster_id", "n_members",
                    "profile").toArrow())
     by_last: dict = {}

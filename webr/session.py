@@ -34,7 +34,8 @@ def _package_zip() -> str:
 def sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
     """Runtime-settable SQL confs of every webr session: ``get_spark``
     sets them on its builder, ``tools/submit_er.py`` on the session
-    spark-submit made (JVM-level confs stay on the submit command line)."""
+    spark-submit made (JVM-level and static confs, such as
+    ``CODEGEN_CACHE_CONF``, stay on the submit command line)."""
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("WEBR_SHUFFLE_PARTITIONS", "32"))
     return {
@@ -52,6 +53,17 @@ def sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     }
+
+
+# Static SQL conf: Spark reads it once, when the JVM's codegen class cache
+# is created, so it can only be set before the session starts (builder or
+# spark-submit --conf), never through spark.conf.set. The cache holds 100
+# classes by default, but one Pipeline.run needs ~164-174 distinct ones (a
+# Q3 session ~16 more, a driver_suite pass plus its check ~344): at 100
+# the LRU is flushed every pass and each run into a fresh warehouse
+# recompiles all 164 (0.85-1.5 s of a 6-8 s run, local[4]). At 512 a
+# second run compiles none.
+CODEGEN_CACHE_CONF = ("spark.sql.codegen.cache.maxEntries", "512")
 
 
 def get_spark(app: str = "webr", master: str | None = None,
@@ -72,6 +84,7 @@ def get_spark(app: str = "webr", master: str | None = None,
         .config("spark.driver.memory",
                 os.environ.get("WEBR_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(*CODEGEN_CACHE_CONF)
     )
     for k, v in sql_confs(shuffle_partitions).items():
         b = b.config(k, v)
