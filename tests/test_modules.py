@@ -48,6 +48,31 @@ def test_streaming_ingest_and_window_counts(spark, corpus_pd):
     assert got == len(corpus_pd)
 
 
+def test_streaming_staging_replayed_epoch_lands_once(spark, corpus_pd):
+    """A crash after the staging write but before the stream's commit log
+    entry replays the epoch; the replay replaces the epoch's rows instead
+    of appending them a second time."""
+    from webr import schema
+    from webr.streaming import ingest_to_staging
+
+    d = tempfile.mkdtemp(prefix="webr_stage_replay_")
+    in_dir, staging, ckpt = (os.path.join(d, n)
+                             for n in ("in", "staging", "ckpt"))
+    (spark.createDataFrame(
+        corpus_pd[["url", "warc_ts", "html", "text", "lang"]].iloc[:13],
+        schema=schema.PAGES).coalesce(1).write.parquet(in_dir))
+    for replay in (False, True):
+        if replay:  # the commit log entry of epoch 0 never got written
+            for name in ("0", ".0.crc"):
+                os.remove(os.path.join(ckpt, "commits", name))
+        assert ingest_to_staging(spark, in_dir, staging,
+                                 ckpt).awaitTermination(120)
+        staged = spark.read.parquet(staging)
+        assert staged.count() == staged.select("url").distinct().count() \
+            == 13
+    shutil.rmtree(d, ignore_errors=True)
+
+
 def test_streaming_assign_matches_record_query(spark, corpus_pd,
                                                warehouse_dir):
     """Streamed pages get the cluster ``match_records`` ranks first on the
@@ -377,9 +402,10 @@ def test_warehouse_merge_evaluates_input_once(spark, warehouse_dir):
 
 def test_warehouse_merge_replay_after_failed_swap(spark, warehouse_dir,
                                                   monkeypatch):
-    """A merge that fails between its two renames leaves the table only
-    under ``<table>__old``; the replayed merge rolls it back instead of
-    taking the table for missing and deleting the old rows."""
+    """A merge that fails at the manifest replace (its commit) leaves the
+    old snapshot readable; the replayed merge keeps the old rows, and a
+    second replay under the same snapshot id (a stream epoch replayed
+    after its commit) changes neither the rows nor the parent."""
     from webr.catalog import Warehouse
     wh = Warehouse(spark, warehouse_dir)
     ddl = "url string, cluster_id long, is_noise boolean"
@@ -387,23 +413,130 @@ def test_warehouse_merge_replay_after_failed_swap(spark, warehouse_dir,
         [(f"u{i}", 1, False) for i in range(10)], ddl),
         keys=["url"], snapshot="s1")
     one = spark.createDataFrame([("new", 2, False)], ddl)
-    rename = os.rename
+    replace = os.replace
 
     def failing(src, dst):
-        if src.endswith("__merge_tmp"):
-            raise OSError("crash between the swap's renames")
-        rename(src, dst)
+        if dst.endswith("_manifest.json"):
+            raise OSError("crash at the manifest replace")
+        replace(src, dst)
 
-    monkeypatch.setattr(os, "rename", failing)
+    monkeypatch.setattr(os, "replace", failing)
     with pytest.raises(OSError, match="crash"):
         wh.merge("t", one, keys=["url"], snapshot="s2")
-    monkeypatch.setattr(os, "rename", rename)
-    assert wh.manifest("t") is None  # only t__old holds the rows now
-    wh.merge("t", one, keys=["url"], snapshot="s2")
-    got = {r.url: r.cluster_id for r in wh.read("t").collect()}
-    assert got == {**{f"u{i}": 1 for i in range(10)}, "new": 2}
-    assert wh.manifest("t")["lineage"]["parent"] == "s1"
+    monkeypatch.setattr(os, "replace", replace)
+    assert wh.manifest("t")["snapshot"] == "s1"
+    assert wh.read("t").count() == 10
+    want = {**{f"u{i}": 1 for i in range(10)}, "new": 2}
+    for _ in range(2):
+        wh.merge("t", one, keys=["url"], snapshot="s2")
+        got = {r.url: r.cluster_id for r in wh.read("t").collect()}
+        assert got == want
+        assert wh.manifest("t")["lineage"]["parent"] == "s1"
     assert sorted(os.listdir(warehouse_dir)) == ["t"]
+    assert sorted(os.listdir(os.path.join(warehouse_dir, "t"))) == [
+        "_manifest.json", wh.manifest("t")["data"]]
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("point", ["build", "before_replace", "replace",
+                                   "cleanup"])
+@pytest.mark.parametrize("op", ["write", "merge", "merge_new"])
+def test_warehouse_commit_fault_injection(spark, warehouse_dir, monkeypatch,
+                                          op, point):
+    """A write, a merge into an existing table or a merge into a missing
+    one, crashed in its build, between its data write and the manifest
+    replace (mid-``json.dump``), at the replace, or while it removes the
+    old data dirs. Before the replace the table reads as the old snapshot
+    (or is missing); after it, as the new one: never empty or mixed. The
+    replayed call gives the rows and parent of an uncrashed one and
+    leaves only the data dir its manifest names."""
+    import json
+    import shutil
+
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    ddl = "url string, cluster_id long, is_noise boolean"
+    old = [(f"u{i}", 1, False) for i in range(6)]
+    new = [("u0", 2, False), ("new", 3, True)]
+    want, parent = {
+        "write": (new, None),
+        "merge": (new + old[1:], "s1"),
+        "merge_new": (new, None)}[op]
+    if op != "merge_new":
+        wh.write("t", spark.createDataFrame(old, ddl), snapshot="s1")
+    # a data dir orphaned by a crash before some earlier commit
+    os.makedirs(os.path.join(warehouse_dir, "t", "data-orphan"))
+
+    def call(df):
+        if op == "write":
+            return wh.write("t", df, snapshot="s2")
+        return wh.merge("t", df, keys=["url"], snapshot="s2")
+
+    def boom(batches):
+        for _ in batches:
+            raise RuntimeError("crash in the build")
+        yield from ()
+
+    def dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:20])  # a truncated temp manifest
+        raise _Crash("crash in json.dump")
+
+    def replace(src, dst):
+        raise _Crash("crash at os.replace")
+
+    def rmtree(path, *a, **kw):
+        raise _Crash("crash in the cleanup")
+
+    df = spark.createDataFrame(new, ddl)
+    if point == "build":
+        df = df.mapInPandas(boom, ddl)
+    else:
+        target, name, fake = {"before_replace": (json, "dump", dump),
+                              "replace": (os, "replace", replace),
+                              "cleanup": (shutil, "rmtree", rmtree)}[point]
+        monkeypatch.setattr(target, name, fake)
+    with pytest.raises(Exception, match="crash"):
+        call(df)
+    monkeypatch.undo()
+    if point == "cleanup":  # the replace committed the new snapshot
+        assert sorted(wh.read("t").collect()) == sorted(want)
+    elif op == "merge_new":
+        assert wh.manifest("t") is None
+    else:
+        assert wh.manifest("t")["snapshot"] == "s1"
+        assert sorted(wh.read("t").collect()) == sorted(old)
+
+    out = call(spark.createDataFrame(new, ddl))
+    assert sorted(out.collect()) == sorted(wh.read("t").collect()) \
+        == sorted(want)
+    man = wh.manifest("t")
+    assert (man["snapshot"], man["lineage"].get("parent")) == ("s2", parent)
+    assert sorted(os.listdir(os.path.join(warehouse_dir, "t"))) == [
+        "_manifest.json", man["data"]]
+
+
+def test_warehouse_old_layout_manifest_rebuilds(spark, warehouse_dir):
+    """A manifest without ``data`` (the old single ``data/`` dir layout)
+    counts as absent: the stage rebuilds it instead of failing, and the
+    commit removes the old dir."""
+    import json
+
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, warehouse_dir)
+    wh.stage("t", "snap-1", lambda: spark.range(5))
+    t = os.path.join(warehouse_dir, "t")
+    man = wh.manifest("t")
+    os.rename(os.path.join(t, man.pop("data")), os.path.join(t, "data"))
+    with open(os.path.join(t, "_manifest.json"), "w") as f:
+        json.dump(man, f)
+    assert not wh.has_snapshot("t", "snap-1")
+    out = wh.stage("t", "snap-1", lambda: spark.range(7))
+    assert out.count() == 7
+    assert sorted(os.listdir(t)) == ["_manifest.json",
+                                     wh.manifest("t")["data"]]
 
 
 def test_learned_blocking_cnf(spark):

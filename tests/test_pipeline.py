@@ -136,6 +136,61 @@ def test_resume_from_checkpoint(spark, pages_df, oracle_result,
     assert (cl1.url.values == cl2.url.values).all()
 
 
+_CRASH_AT_CLUSTERS_COMMIT = """
+import os, signal, sys
+from webr import schema
+from webr.engine import Pipeline
+from webr.session import get_spark
+from webr.synth import generate_pages, pages_to_pandas
+
+spark = get_spark(app="webr-crash", master="local[2]")
+pages = pages_to_pandas(generate_pages(n_entities=12, pages_per_entity=15,
+                                       seed=7))
+replace = os.replace
+
+def crash(src, dst):
+    if dst.endswith(os.path.join("clusters", "_manifest.json")):
+        os.kill(os.getpid(), signal.SIGKILL)
+    replace(src, dst)
+
+os.replace = crash
+Pipeline(spark, sys.argv[1], input_id="crash-v1").run(spark.createDataFrame(
+    pages[["url", "warc_ts", "html", "text", "lang"]], schema=schema.PAGES))
+"""
+
+
+def test_resume_after_kill_at_commit(spark, pages_df, pipeline_out,
+                                     corpus_pd, warehouse_dir):
+    """A process SIGKILLed at the clusters stage's manifest replace: a
+    resumed run in the same warehouse gives the clusters of an uncrashed
+    run, and every table holds its manifest and the one data dir it
+    names."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    from webr.catalog import Warehouse
+    from webr.engine import Pipeline
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_AT_CLUSTERS_COMMIT, warehouse_dir],
+        cwd=repo, capture_output=True, text=True, timeout=900,
+        env={**os.environ, "WEBR_DRIVER_MEM": "2g"})
+    assert child.returncode == -signal.SIGKILL, child.stderr[-3000:]
+    wh = Warehouse(spark, warehouse_dir)
+    assert wh.manifest("clusters") is None
+    assert wh.manifest("pair_scores") is not None
+    out = Pipeline(spark, warehouse_dir, input_id="crash-v1").run(pages_df)
+    cl = _clusters_pd(out)[["url", "cluster_id"]]
+    assert cl.equals(_clusters_pd(pipeline_out)[["url", "cluster_id"]])
+    assert len(cl) == len(corpus_pd)
+    assert sorted(os.listdir(warehouse_dir)) == sorted(out)
+    for table in out:
+        assert sorted(os.listdir(os.path.join(warehouse_dir, table))) == [
+            "_manifest.json", wh.manifest(table)["data"]], table
+
+
 def test_entities_canonical(pipeline_out, oracle_result, corpus_pd):
     ents = pipeline_out["entities"].toPandas()
     cl = oracle_result.clusters
@@ -312,7 +367,8 @@ def test_stage_write_reads_back_without_schema_job(spark, warehouse_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    inferred = spark.read.parquet(os.path.join(warehouse_dir, "t", "data"))
+    inferred = spark.read.parquet(
+        os.path.join(warehouse_dir, "t", wh.manifest("t")["data"]))
     assert wh.manifest("t")["schema"] == inferred.schema.json()
     assert out.schema == inferred.schema
     assert sorted(out.collect()) == sorted(inferred.collect())
@@ -337,7 +393,8 @@ def test_read_uses_manifest_schema(spark, warehouse_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
-    inferred = spark.read.parquet(os.path.join(warehouse_dir, "t", "data"))
+    inferred = spark.read.parquet(
+        os.path.join(warehouse_dir, "t", wh.manifest("t")["data"]))
     assert read.schema == resumed.schema == inferred.schema
     assert sorted(read.collect()) == sorted(inferred.collect())
 

@@ -5,10 +5,14 @@ killed job resumes mid-pipeline. The real deployment writes Iceberg tables
 (`spark.catalog`/`writeTo(...)`); this sandbox has no Iceberg runtime jar
 (SURVEY §7.0), so the facade keeps the same call shape and persists:
 
-  <warehouse>/<table>/data/*.parquet          (the rows)
-  <warehouse>/<table>/_manifest.json          (schema, snapshot id = content
+  <warehouse>/<table>/data-<uuid>/*.parquet   (the rows of one commit)
+  <warehouse>/<table>/_manifest.json          (names the data dir; schema,
+                                               snapshot id = content
                                                fingerprint of inputs+spec,
                                                row count, per-stage lineage)
+
+A commit is one atomic ``os.replace`` of the manifest (Iceberg's
+metadata-pointer swap).
 
 ``snapshot`` ids are deterministic fingerprints of (spec version, upstream
 snapshot ids, stage name), so resume only reuses a checkpoint whose whole
@@ -23,6 +27,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -59,42 +64,35 @@ class Warehouse:
 
     def has_snapshot(self, table: str, snapshot: str) -> bool:
         m = self.manifest(table)
-        return bool(m) and m.get("snapshot") == snapshot
+        # no "data": a manifest of the old layout, so the stage rebuilds
+        return bool(m) and "data" in m and m["snapshot"] == snapshot
 
     # -- io ----------------------------------------------------------------
-    def write(self, table: str, df: DataFrame, snapshot: str,
-              lineage: dict | None = None,
-              observation=None) -> DataFrame:
-        """Write + manifest. ``observation``: a pyspark Observation
-        already attached to ``df`` via ``df.observe`` — its metrics are
-        collected AFTER the parquet write (the action that populates
-        it) and recorded as ``counters``, costing zero extra jobs.
-        The manifest also records per-FILE row counts (``partitions``)
-        straight from the parquet footers pyarrow already reads for the
-        total, so a resume after a partial failure can localize skew or
-        a short-written partition, not just verify the stage total —
-        the Iceberg per-manifest-entry stats analog (north_rule
-        "per-partition lineage + metrics"; reference analog: the
-        inspectable per-block files of extract_blocks.py:64-71)."""
-        d = self._dir(table)
-        data = os.path.join(d, "data")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-        df.write.mode("overwrite").parquet(data)
-        # read back with the schema just written: inferring it would
+    def _write_rows(self, table: str, df: DataFrame):
+        """-> (a fresh uncommitted data dir holding ``df``, its rows).
+        Unique per commit, not per snapshot: a replayed merge under the
+        same snapshot id reads the live dir while it writes its own."""
+        data = os.path.join(self._dir(table), f"data-{uuid.uuid4().hex}")
+        df.write.parquet(data)
+        # read back under the schema just written: inferring it would
         # launch one more Spark job (a parquet footer read) per write
-        out = self.spark.read.schema(df.schema).parquet(data)
-        # row counts from parquet footers (pyarrow metadata) — a full
-        # Spark re-scan per stage was pure flat overhead
+        return data, self.spark.read.schema(df.schema).parquet(data)
+
+    def _commit(self, table: str, data: str, out: DataFrame, snapshot: str,
+                lineage: dict | None, observation=None) -> DataFrame:
+        """Publish ``data`` as the table's snapshot by one atomic replace
+        of the manifest: a crash leaves the old snapshot or the new one
+        whole. Only then are the other data dirs removed (the superseded
+        one, any a crash orphaned). ``partitions``: per-FILE row counts
+        from the parquet footers, so a resume can localize skew or a
+        short-written partition (Iceberg per-manifest-entry stats)."""
+        # row counts from parquet footers (pyarrow metadata, no data
+        # scan) — a full Spark re-scan per stage was pure flat overhead
         import pyarrow.dataset as pads
-        parts = []
-        n = 0
-        for frag in pads.dataset(data, format="parquet").get_fragments():
-            rows = frag.count_rows()  # footer metadata, no data scan
-            parts.append({"path": os.path.relpath(frag.path, data),
-                          "rows": rows})
-            n += rows
-        parts.sort(key=lambda x: x["path"])
+        parts = sorted(
+            ({"path": os.path.relpath(f.path, data), "rows": f.count_rows()}
+             for f in pads.dataset(data, format="parquet").get_fragments()),
+            key=lambda x: x["path"])
         counters = {}
         if observation is not None:
             counters = {k: (int(v) if isinstance(v, (int, bool)) else v)
@@ -102,26 +100,44 @@ class Warehouse:
         man = {
             "table": table,
             "snapshot": snapshot,
-            "rows": n,
+            "data": os.path.basename(data),
+            "rows": sum(p["rows"] for p in parts),
             "partitions": parts,
             "counters": counters,
             "schema": out.schema.json(),
             "lineage": lineage or {},
             "written_unix": int(time.time()),
         }
-        with open(self._manifest_path(table), "w") as f:
+        path = self._manifest_path(table)
+        with open(f"{path}.tmp", "w") as f:
             json.dump(man, f, indent=1)
+        os.replace(f"{path}.tmp", path)
+        d = self._dir(table)
+        for name in os.listdir(d):
+            if name.startswith("data") and name != man["data"]:
+                shutil.rmtree(os.path.join(d, name))
         return out
 
+    def write(self, table: str, df: DataFrame, snapshot: str,
+              lineage: dict | None = None,
+              observation=None) -> DataFrame:
+        """Write ``df`` as the table's new snapshot. ``observation``: a
+        pyspark Observation already attached to ``df`` via
+        ``df.observe`` — its metrics are collected AFTER the parquet write
+        (the action that populates it) and recorded as ``counters``,
+        costing zero extra jobs."""
+        return self._commit(table, *self._write_rows(table, df), snapshot,
+                            lineage, observation)
+
     def read(self, table: str) -> DataFrame:
-        """Read a table back; with a manifest, under its recorded schema
+        """Read the committed snapshot under its recorded schema
         (inferring it would launch a parquet footer-read job)."""
-        data = os.path.join(self._dir(table), "data")
         m = self.manifest(table)
         if m is None:
-            return self.spark.read.parquet(data)
+            raise FileNotFoundError(f"no table {table!r} in {self.root}")
         return self.spark.read.schema(
-            StructType.fromJson(json.loads(m["schema"]))).parquet(data)
+            StructType.fromJson(json.loads(m["schema"]))).parquet(
+                os.path.join(self._dir(table), m["data"]))
 
     def merge(self, table: str, df: DataFrame, keys: list[str],
               snapshot: str, lineage: dict | None = None) -> DataFrame:
@@ -132,24 +148,21 @@ class Warehouse:
         the same key tuple; everything else is kept. A missing table is
         merged as an empty one. The new manifest records the replaced
         snapshot as ``parent`` (None for a new table) — snapshot lineage
-        stays a chain, so resume logic still refuses stale upstreams.
+        stays a chain, so resume logic still refuses stale upstreams. A
+        replay under the snapshot id already committed replaces that
+        snapshot and keeps its parent.
 
         Distributed shape: the union of existing and incoming rows keeps,
         per key tuple, the rows of the newer side (a window over the
         keys) — no collect, scales with the table, and the incoming plan
-        is evaluated once. On a real catalog this maps to MERGE INTO and
-        this facade keeps the call shape."""
+        is evaluated once, into a new data dir committed as ``write``
+        does. On a real catalog this maps to MERGE INTO and this facade
+        keeps the call shape."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
-        final = self._dir(table)
-        backup = f"{final}__old"
-        # a crash between the swap's two renames (below) left the table
-        # only under __old: roll it back before reading, or this merge
-        # would take the table for missing and delete those rows
-        if not os.path.exists(final) and os.path.exists(backup):
-            os.rename(backup, final)
         cur = self.manifest(table)
         merged = df  # merging into a missing (empty) table
+        lin = dict(lineage or {}, parent=None, merge_keys=keys)
         if cur is not None:
             existing = self.read(table)
             both = (existing.withColumn("__new", F.lit(False))
@@ -159,47 +172,29 @@ class Warehouse:
                           Window.partitionBy(*keys)))
                       .where(F.col("__new") == F.col("__top"))
                       .drop("__new", "__top"))
-        # stage through a sibling dir: the merged plan lazily reads the
-        # files write() would delete
-        tmp = f"{table}__merge_tmp"
-        lin = dict(lineage or {})
-        lin["parent"] = cur["snapshot"] if cur is not None else None
-        lin["merge_keys"] = keys
-        staged = self.write(tmp, merged, snapshot, lin)
+            lin["parent"] = (cur["lineage"].get("parent")
+                             if cur["snapshot"] == snapshot
+                             else cur["snapshot"])
+        data, staged = self._write_rows(table, merged)
         # MERGE semantics need one row per key tuple. existing is
         # key-unique by induction (every merge through this facade is
-        # checked), so duplicate keys in the staged result can only come
+        # checked), so duplicate keys in the merged rows can only come
         # from duplicated incoming rows — fail loudly instead of silently
-        # inserting twice. The check scans the MATERIALIZED parquet (one
+        # inserting twice. The check scans the uncommitted parquet (one
         # cheap key-column scan), never the incoming lazy plan, which
         # would re-run the whole upstream computation a second time.
         if (staged.groupBy(keys).agg(F.count("*").alias("__n"))
                 .where(F.col("__n") > 1).limit(1).count()):
-            self.drop(tmp)
+            shutil.rmtree(data)
+            if cur is None:
+                self.drop(table)
             raise ValueError(
                 f"merge into {table!r}: incoming rows are not unique on "
                 f"key {keys} — dedupe deterministically before merging")
-        # fix the staged manifest's table name BEFORE the swap, so the
-        # final state lands in ONE rename of a fully-consistent dir
-        man = self.manifest(tmp)
-        man["table"] = table
-        with open(self._manifest_path(tmp), "w") as f:
-            json.dump(man, f, indent=1)
-        # crash-safe swap: old table stays intact under __old until the
-        # staged dir is in place — a failure window leaves either the old
-        # table (pre-first-rename) or an __old backup that the next merge
-        # rolls back, never a table with no data and no manifest
-        shutil.rmtree(backup, ignore_errors=True)
-        if os.path.exists(final):
-            os.rename(final, backup)
-        os.rename(self._dir(tmp), final)
-        shutil.rmtree(backup, ignore_errors=True)
-        return self.read(table)
+        return self._commit(table, data, staged, snapshot, lin)
 
     def drop(self, table: str) -> None:
-        d = self._dir(table)
-        if os.path.exists(d):
-            shutil.rmtree(d)
+        shutil.rmtree(self._dir(table), ignore_errors=True)
 
     # -- stage runner (resume point) ---------------------------------------
     def stage(self, table: str, snapshot: str, build,

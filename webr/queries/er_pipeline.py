@@ -6,7 +6,8 @@ parity against the NumPy oracle, bitwise scores included."""
 
 from __future__ import annotations
 
-import os
+import atexit
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -39,7 +40,9 @@ def _run(spark: SparkSession) -> dict:
     pages = spark.createDataFrame(
         pages_pd[["url", "warc_ts", "html", "text", "lang"]],
         schema=schema.PAGES)
-    wh = os.path.join(tempfile.gettempdir(), "webr_entry_wh")
+    # per process: a shared dir lets other processes resume its tables
+    wh = tempfile.mkdtemp(prefix="webr_entry_wh_")
+    atexit.register(shutil.rmtree, wh, ignore_errors=True)
     out = Pipeline(spark, wh, input_id=f"entry-{_SEED}").run(pages)
     _RUN_CACHE.clear()
     _RUN_CACHE[key] = out

@@ -147,13 +147,13 @@ def streaming_link_indegree(pages: DataFrame, watermark: str = "2 hours",
 def ingest_to_staging(spark: SparkSession, input_dir: str,
                       staging_dir: str, checkpoint_dir: str):
     """Exactly-once-per-batch append into the staging table via
-    foreachBatch (idempotent by epoch directory). Returns the query;
-    caller awaits termination or uses availableNow semantics."""
+    foreachBatch: a replayed epoch replaces its ``_epoch=<id>`` dir.
+    Returns the query; caller awaits termination or uses availableNow."""
     os.makedirs(staging_dir, exist_ok=True)
 
     def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (df.withColumn("_epoch", F.lit(epoch_id))
-         .write.mode("append").parquet(staging_dir))
+        df.write.mode("overwrite").parquet(
+            os.path.join(staging_dir, f"_epoch={epoch_id}"))
 
     return (stream_pages(spark, input_dir)
             .writeStream
