@@ -222,8 +222,9 @@ def test_mention_feats_join_fallback_bitwise(pipeline_out):
 
 
 def test_mega_block_bounded(pipeline_out):
-    """Skew rule: no block contributes O(n^2) pairs. The mega-host block
-    must exist in the corpus and still be bounded in the pair table."""
+    """Skew rule: no block contributes O(n^2) pairs. The fixture corpus
+    has no block above MAX_BLOCK_SIZE, so this only checks the all-pairs
+    branch; test_mega_block_pairs_match_oracle runs the window."""
     pairs = pipeline_out["pairs"].toPandas()
     per_block = pairs.groupby("block_key").size()
     from webr import spec
@@ -232,6 +233,31 @@ def test_mega_block_bounded(pipeline_out):
     # sorted-neighborhood blocks contribute <= n*W pairs; with the corpus
     # sizes here every block must sit far below the quadratic blowup
     assert (per_block <= cap).all(), per_block.sort_values().tail()
+
+
+def test_mega_block_pairs_match_oracle(spark):
+    """The sorted-neighborhood branch of build_pairs: 3 entities x 40
+    pages gives blocks above MAX_BLOCK_SIZE, and the engine's pair table
+    equals the oracle's row for row."""
+    from webr import schema, spec
+    from webr.engine import build_mentions, build_pairs
+    from webr.mentions import derive_mentions
+    from webr.oracle.oracle import enumerate_pairs
+    from webr.synth import generate_pages, pages_to_pandas
+
+    pd_pages = pages_to_pandas(
+        generate_pages(n_entities=3, pages_per_entity=40, seed=7))
+    mentions = derive_mentions(pd_pages)
+    biggest = mentions.block_keys.explode().value_counts().max()
+    assert biggest > spec.MAX_BLOCK_SIZE, biggest
+    want = enumerate_pairs(mentions)
+    pages = spark.createDataFrame(
+        pd_pages[["url", "warc_ts", "html", "text", "lang"]],
+        schema=schema.PAGES)
+    got = (build_pairs(build_mentions(pages)).toPandas()
+           [["url_1", "url_2", "block_key"]]
+           .sort_values(["url_1", "url_2"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, want.reset_index(drop=True))
 
 
 def test_cannot_link_bridge_split(spark, warehouse_dir):

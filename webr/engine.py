@@ -165,52 +165,76 @@ def build_mention_feats_join(mentions: DataFrame,
     return out.select([f.name for f in schema.MENTION_FEATS.fields])
 
 
+def bounded_pairs(memb: DataFrame, key: str, id_col: str,
+                  order: tuple[str, ...] | None = None) -> DataFrame:
+    """``(key, {id_col}_1, {id_col}_2)`` candidate pairs under the
+    mega-block guard, the one Spark spelling of the blocking rule (J1/P10
+    plus the explicit skew rule of SURVEY §4). Blocks of 2 to
+    MAX_BLOCK_SIZE members pair all i<j by ``id_col``; a larger block
+    sorts by ``order`` (default: ``id_col``) and pairs each member with
+    its next SN_WINDOW neighbours, so any block costs O(n·W) pairs.
+    A pair is written ``{id}_1 < {id}_2`` and repeats once per block it
+    shares.
+
+    Ids only: callers join the wide columns back per side
+    (``webr.queries.common.with_sides``). No exchange is added here:
+    ``build_pairs`` hash-partitions ``memb`` by ``key`` itself, and the
+    driver queries leave the window's small shuffle to AQE, which
+    coalesces it."""
+    order = order or (id_col,)
+    # SQL strings, not Column builders: each builder call is one py4j
+    # round trip, and a stage's plan is built on the driver before any of
+    # its jobs can start
+    # NULL keys pair with nothing, as in an equi-join (and the DuckDB
+    # twin); unfiltered, the window would lead-pair a NULL mega-block
+    m = (memb.selectExpr(*dict.fromkeys((id_col, *order, key)))
+         .where(f"{key} IS NOT NULL")
+         # singleton blocks die via {key}_n >= 2
+         .selectExpr("*", f"count(*) OVER (PARTITION BY {key}) AS {key}_n"))
+
+    small = m.where(f"{key}_n BETWEEN 2 AND {spec.MAX_BLOCK_SIZE}")
+    # merge join: both sides share the window's partitioning by key (a
+    # broadcast would cost one more job)
+    pairs_small = (small.alias("a")
+                   .join(small.alias("b").hint("merge"),
+                         F.expr(f"a.{key} = b.{key} "
+                                f"AND a.{id_col} < b.{id_col}"))
+                   .selectExpr(f"a.{key} AS {key}",
+                               f"a.{id_col} AS {id_col}_1",
+                               f"b.{id_col} AS {id_col}_2"))
+
+    leads = ", ".join(
+        f"lead({id_col}, {o}) OVER (PARTITION BY {key} "
+        f"ORDER BY {', '.join(order)})"
+        for o in range(1, spec.SN_WINDOW + 1))
+    pairs_big = (m.where(f"{key}_n > {spec.MAX_BLOCK_SIZE}")
+                 .selectExpr(key, id_col, f"array({leads}) AS nbrs")
+                 .selectExpr(key, id_col, "explode(nbrs) AS nbr")
+                 .where("nbr IS NOT NULL")
+                 .selectExpr(key, f"least({id_col}, nbr) AS {id_col}_1",
+                             f"greatest({id_col}, nbr) AS {id_col}_2"))
+    return pairs_small.unionByName(pairs_big)
+
+
 def build_pairs(mentions: DataFrame) -> DataFrame:
-    """Candidate pair generation. Small blocks: all i<j pairs via self-join
-    on block_key (J1/P10). Blocks over MAX_BLOCK_SIZE: sorted-neighborhood
-    window (orderBy name_norm,url; lead 1..SN_WINDOW) — bounds any block
-    to O(n·W) pairs, which is the explicit mega-block/skew rule (SURVEY
-    §4). Both run inside one hash partitioning by block key with the
-    session's default parallelism; one more by pair dedups the pairs
-    that share several blocks (four jobs in all)."""
+    """Candidate pair generation: ``bounded_pairs`` over the exploded
+    block keys, sorted-neighbourhood order (name_norm, url). The blocks
+    run inside one hash partitioning by block key with the session's
+    default parallelism; one more by pair dedups the pairs that share
+    several blocks (four jobs in all)."""
     # one explicit hash partitioning by block key serves the block sizes,
     # the self-join and the window without another exchange; AQE would
     # coalesce this small shuffle into one task, but never coalesces a
     # repartition by number
     n = mentions.sparkSession.sparkContext.defaultParallelism
-    # SQL strings, not Column builders: each builder call is one py4j
-    # round trip, and a stage's plan is built on the driver before any of
-    # its jobs can start
     memb = (mentions
             .where("parse_ok AND size(block_keys) > 0")
             .selectExpr("url", "name_norm", "explode(block_keys) AS bk")
-            .repartition(n, "bk")
-            # singleton blocks die via bk_n >= 2
-            .selectExpr("*", "count(*) OVER (PARTITION BY bk) AS bk_n"))
-
-    small = memb.where(f"bk_n BETWEEN 2 AND {spec.MAX_BLOCK_SIZE}")
-    # merge join: both sides are already partitioned by bk (a broadcast
-    # would cost one more job)
-    pairs_small = (small.alias("a")
-                   .join(small.alias("b").hint("merge"),
-                         F.expr("a.bk = b.bk AND a.url < b.url"))
-                   .selectExpr("a.bk AS bk", "a.url AS url_1",
-                               "b.url AS url_2"))
-
-    leads = ", ".join(
-        f"lead(url, {o}) OVER (PARTITION BY bk ORDER BY name_norm, url)"
-        for o in range(1, spec.SN_WINDOW + 1))
-    pairs_big = (memb.where(f"bk_n > {spec.MAX_BLOCK_SIZE}")
-                 .selectExpr("bk", "url", f"array({leads}) AS nbrs")
-                 .selectExpr("bk", "url", "explode(nbrs) AS nbr")
-                 .where("nbr IS NOT NULL")
-                 .selectExpr("bk", "least(url, nbr) AS url_1",
-                             "greatest(url, nbr) AS url_2"))
-
+            .repartition(n, "bk"))
     # a pair repeats once per block it shares, and those blocks sit in
     # different bk partitions: a map-side partial min would find nothing
     # to fold, so hash by pair once (n tasks, none coalesced) and reduce
-    return (pairs_small.unionByName(pairs_big)
+    return (bounded_pairs(memb, "bk", "url", order=("name_norm", "url"))
             .repartition(n, "url_1", "url_2")
             .groupBy("url_1", "url_2")
             .agg(F.expr("min(bk) AS block_key")))

@@ -131,10 +131,13 @@ def _release(df: DataFrame) -> None:
         pass  # best-effort; the ContextCleaner reclaims eventually
 
 
+# a lazily chained rank state (no dangling nodes) is cut back to a leaf
+# every this many rounds and at the last one
+CHECKPOINT_EVERY = 10
+
+
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
-             damping: float = 0.85, n_nodes: int | None = None,
-             tol: float | None = None,
-             checkpoint_every: int = 10) -> DataFrame:
+             damping: float = 0.85, n_nodes: int | None = None) -> DataFrame:
     """Power-iteration PageRank over a DISTINCT ``(src, dst)`` edge list.
 
     r_{k+1}(v) = (1-d)/N + d * (sum_{u->v} r_k(u)/outdeg(u)
@@ -150,18 +153,16 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
     Real iteration counts: the rank state is ``localCheckpoint``-ed to
     cut the LOGICAL plan back to a leaf — persist+count bounds physical
     re-execution but not plan growth. Without dangling nodes the plan
-    deepens linearly (one self-reference per round): without ``tol``
-    the rounds chain lazily and materialize together, in one checkpoint
-    every ``checkpoint_every`` rounds and one at the last round; WITH
+    deepens linearly (one self-reference per round): the rounds chain
+    lazily and materialize together, in one checkpoint every
+    ``CHECKPOINT_EVERY`` rounds and one at the last round; WITH
     dangling nodes each round references the rank state twice
     (contributions + mass aggregate), so the analyzed tree DOUBLES per
     round (2^k leaves — measured: the
     AQE plan-string emission alone OOMs a 1 GiB driver by round 7) and
     the state is checkpointed EVERY round. The checkpoint is the round's
     materializing action, so it replaces — not adds to — the Pregel
-    count. With ``tol`` set, iteration stops early once the L1 delta
-    ||r_{k+1} - r_k|| drops below it (one slim extra join per round).
-    All intermediate cache is dropped before returning; the returned
+    count. All intermediate cache is dropped before returning; the returned
     ranks frame holds checkpoint/persist blocks and the CALLER owns
     unpersisting it. Lineage-truncation tradeoff: localCheckpoint blocks
     are not rebuildable after executor loss — on a real cluster pair
@@ -181,9 +182,6 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
                 .select("id").persist())
     has_dangling = bool(dang_ids.limit(1).count())
     ranks = nodes.select("id", F.lit(1.0 / n).alias("r")).persist()
-    # without dangling nodes or tol, a round's state is read by the next
-    # round only: the rounds chain lazily and materialize at checkpoints
-    lazy = not has_dangling and tol is None
     held = ranks  # newest materialized state, released once superseded
     for it in range(1, iters + 1):
         contribs = (eo.join(ranks.withColumnRenamed("id", "src"), "src")
@@ -199,36 +197,20 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 5,
                         .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("m")))
             base = base.crossJoin(F.broadcast(dangling))
             term = term + F.col("m") / F.lit(float(n))
-        nxt = base.select(
+        ranks = base.select(
             "id",
             (F.lit((1.0 - damping) / n)
              + F.lit(damping) * term).alias("r"))
         # A dangling graph reads the rank state twice per round, so its
         # analyzed plan doubles per round unless cut NOW (see docstring);
-        # the linear-growth case is cut every checkpoint_every rounds and
-        # at the last one. The tol path materializes every round (its
-        # delta reads two states).
-        if has_dangling or it % checkpoint_every == 0 or (
-                lazy and it == iters):
-            nxt = nxt.localCheckpoint(eager=True)  # lineage cut to leaf
-        elif lazy:
-            ranks = nxt
-            continue
-        else:
-            nxt = nxt.persist()
-            nxt.count()
-        delta = None
-        if tol is not None:
-            delta = (nxt.join(held.select(
-                         "id", F.col("r").alias("r_prev")), "id")
-                     .agg(F.sum(F.abs(F.col("r") - F.col("r_prev"))))
-                     .first()[0])
-        # only now that nxt is materialized may its parents go
-        _release(held)
-        held = ranks = nxt
-        if delta is not None and delta < tol:
-            break
+        # the linear-growth case is cut every CHECKPOINT_EVERY rounds and
+        # at the last one, and otherwise chains lazily into the next round
+        if has_dangling or it % CHECKPOINT_EVERY == 0 or it == iters:
+            ranks = ranks.localCheckpoint(eager=True)  # lineage cut to leaf
+            # only now that the new state is materialized may its
+            # parents go
+            _release(held)
+            held = ranks
     eo.unpersist()
     dang_ids.unpersist()
-    pagerank.last_iters = it  # introspection aid (tests pin early exit)
     return ranks

@@ -50,3 +50,15 @@ def doc_count(spark, sf: str) -> int:
     if key not in _NDOCS_CACHE:
         _NDOCS_CACHE[key] = read(spark, sf, "documents").count()
     return _NDOCS_CACHE[key]
+
+
+def with_sides(pairs, d, cols: list[str], id_col: str = "doc_id"):
+    """``pairs`` ({id_col}_1, {id_col}_2, ...) with ``d``'s ``cols``
+    joined on once per side as ``{c}_1`` / ``{c}_2``: the ids ride the
+    self-join, the wide payload joins back once per pair side."""
+    for s in (1, 2):
+        pairs = pairs.join(
+            d.selectExpr(f"{id_col} AS {id_col}_{s}",
+                         *(f"{c} AS {c}_{s}" for c in cols)),
+            f"{id_col}_{s}")
+    return pairs

@@ -13,9 +13,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from webr.engine import bounded_pairs
 from webr.queries.common import (
     duck_tokens, duck_tokens_nostop, read, spark_tokens, spark_tokens_nostop,
+    with_sides,
 )
+from webr.similarity import cosine_sql
 from webr.textproc import STOPWORDS
 
 # ---------------------------------------------------------------------------
@@ -284,12 +287,11 @@ def _spark_sim64_word(w: int) -> str:
 
 def q_simhash64_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Candidate join is the (band, word) bucket self-join ROUTED THROUGH
-    the mega-block guard (bounded_pair_ids on the composite key):
+    the mega-block guard (bounded_pairs on the composite key):
     boilerplate-heavy corpora concentrate majority-vote words, and one
     hot (band, word) bucket must cost O(n*W) candidates, not O(n^2) —
     same rule as every other self-join in the repo. The 16-bit words ride
     a slim id-only pair frame and join back once per side."""
-    from webr.queries.er_docs import bounded_pair_ids
     d = (read(spark, sf, "documents")
          .withColumn("tset",
                      F.array_sort(F.array_distinct(
@@ -306,15 +308,12 @@ def q_simhash64_pairs(spark: SparkSession, sf: str) -> DataFrame:
             .select("doc_id",
                     F.concat_ws(":", F.col("bw.band"),
                                 F.col("bw.word")).alias("bkey")))
-    p = (bounded_pair_ids(memb, key="bkey")
+    p = (bounded_pairs(memb, "bkey", "doc_id")
          .select("doc_id_1", "doc_id_2").distinct())
     ham = sum(
         F.bit_count(F.col(f"w{w}_1").bitwiseXOR(F.col(f"w{w}_2")))
         for w in range(4))
-    side = [d.select(F.col("doc_id").alias(f"doc_id_{s}"),
-                     *[F.col(f"w{w}").alias(f"w{w}_{s}")
-                       for w in range(4)]) for s in (1, 2)]
-    return (p.join(side[0], "doc_id_1").join(side[1], "doc_id_2")
+    return (with_sides(p, d, [f"w{w}" for w in range(4)])
             .select("doc_id_1", "doc_id_2",
                     ham.cast("long").alias("hamming"))
             .where(F.col("hamming") <= _SIMHASH64_HAM)
@@ -370,22 +369,17 @@ ORDER BY doc_id_1, doc_id_2
 # n-gram (token 3-shingle) Jaccard near-dup pairs, blocked by source with
 # the mega-block guard: one hot hostname at 100 TB must not turn the
 # self-join into O(n^2) — blocks over MAX_BLOCK_SIZE switch to the
-# sorted-neighborhood window (same rule as webr/engine.py build_pairs,
-# shared helper in webr/queries/er_docs.py).
+# sorted-neighborhood window (webr.engine.bounded_pairs, the engine's own
+# guard).
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    from webr.queries.er_docs import bounded_pair_ids
     d = (read(spark, sf, "documents")
          .withColumn("toks", F.expr(spark_tokens("text")))
          .where(F.size("toks") >= 3)
          .withColumn("sh", F.array_sort(F.array_distinct(
              F.expr(_SPARK_SHINGLES))))
          .select("doc_id", "source", "sh"))
-    p = (bounded_pair_ids(d, key="source")
-         .join(d.select(F.col("doc_id").alias("doc_id_1"),
-                        F.col("sh").alias("sh_1")), "doc_id_1")
-         .join(d.select(F.col("doc_id").alias("doc_id_2"),
-                        F.col("sh").alias("sh_2")), "doc_id_2"))
+    p = with_sides(bounded_pairs(d, "source", "doc_id"), d, ["sh"])
     inter = F.size(F.array_intersect("sh_1", "sh_2"))
     uni = F.size("sh_1") + F.size("sh_2") - inter
     return (p.select("doc_id_1", "doc_id_2",
@@ -430,14 +424,10 @@ def q_ann_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q = (e.where(F.col("vec_id") % 50 == 0)
          .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv")))
-    dot = ("aggregate(zip_with(qv, v, (x, y) -> x * y), 0D, "
-           "(acc, x) -> acc + x)")
-    nrm = ("sqrt(aggregate({c}, 0D, (acc, x) -> acc + x * x))")
-    cos = (f"({dot}) / ((" + nrm.format(c="qv") + ") * ("
-           + nrm.format(c="v") + "))")
     pairs = (q.crossJoin(e)
              .where(F.col("vec_id") != F.col("q_id"))
-             .select("q_id", "vec_id", F.expr(cos).alias("cos_raw")))
+             .select("q_id", "vec_id",
+                     F.expr(cosine_sql("qv", "v")).alias("cos_raw")))
     w = Window.partitionBy("q_id").orderBy(
         F.desc(F.round("cos_raw", 6)), F.asc("vec_id"))
     return (pairs.withColumn("rk", F.row_number().over(w))
@@ -1232,16 +1222,11 @@ def q_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
                  .alias("v"))
          .withColumn("bkt", F.expr(_spark_sign_bucket())))
     a, b = e.alias("a"), e.alias("b")
-    dot = ("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, "
-           "(acc, x) -> acc + x)")
-    nrm = "sqrt(aggregate({c}, 0D, (acc, x) -> acc + x * x))"
-    cos = (f"({dot}) / ((" + nrm.format(c="a.v") + ") * ("
-           + nrm.format(c="b.v") + "))")
     return (a.join(b, (F.col("a.bkt") == F.col("b.bkt"))
                    & (F.col("a.vec_id") < F.col("b.vec_id")))
             .select(F.col("a.vec_id").alias("vec_id_1"),
                     F.col("b.vec_id").alias("vec_id_2"),
-                    F.expr(cos).alias("cos_raw"))
+                    F.expr(cosine_sql("a.v", "b.v")).alias("cos_raw"))
             .where(F.round("cos_raw", 6) >= _EMB_TAU)
             .select("vec_id_1", "vec_id_2",
                     F.round("cos_raw", 4).alias("cosine"))

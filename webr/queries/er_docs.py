@@ -18,8 +18,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from webr import spec
+from webr.engine import bounded_pairs
 from webr.queries.common import (
-    doc_count, duck_tokens_nostop, read, spark_tokens_nostop,
+    doc_count, duck_tokens_nostop, read, spark_tokens_nostop, with_sides,
 )
 
 # shared fragments -----------------------------------------------------------
@@ -31,70 +32,14 @@ _BK_SPARK = ("concat(source, ':', "
              "substring(try_element_at({toks}, 1), 1, 1))")
 _BK_DUCK = "source || ':' || substr({toks}[1], 1, 1)"
 
-# Mega-block guard for every in-block self-join in this family (same rule
-# as the engine proper, webr/engine.py build_pairs): blocks up to
-# MAX_BLOCK_SIZE get all i<j pairs; larger blocks switch to the
-# sorted-neighborhood window (sort by doc_id, pair i with i+1..i+W), which
-# bounds any block to O(n*W) pairs — one 100x-hot source at web scale must
-# not turn the self-join into an O(n^2) shuffle explosion.
-
-_PAIR_CAP = spec.MAX_BLOCK_SIZE
-_PAIR_WIN = spec.SN_WINDOW
-
-
-def bounded_pair_ids(d: DataFrame, key: str = "block_key",
-                     id_col: str = "doc_id",
-                     cap: int = _PAIR_CAP,
-                     win: int = _PAIR_WIN) -> DataFrame:
-    """(key, {id}_1, {id}_2) candidate pairs with the mega-block guard.
-    Ids-only output: callers join the fat side columns back once per pair
-    (ids shuffle cheap; the wide payload never rides the self-join)."""
-    wrn = Window.partitionBy(key).orderBy(id_col)
-    # NULL keys pair with nothing (SQL join semantics — the DuckDB mirror
-    # joins on key equality, which is never true for NULL; without this
-    # filter Spark's window would happily lead-pair a NULL mega-block)
-    m = (d.select(key, id_col)
-         .where(F.col(key).isNotNull())
-         .withColumn("rn", F.row_number().over(wrn))
-         .withColumn("bn", F.count("*").over(Window.partitionBy(key))))
-    small = m.where(F.col("bn") <= cap)
-    a, b = small.alias("a"), small.alias("b")
-    pairs_small = (a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}"))
-                          & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                   .select(F.col(f"a.{key}").alias(key),
-                           F.col(f"a.{id_col}").alias(f"{id_col}_1"),
-                           F.col(f"b.{id_col}").alias(f"{id_col}_2")))
-    big = m.where(F.col("bn") > cap)
-    nbrs = F.array(*[F.lead(id_col, o).over(wrn)
-                     for o in range(1, win + 1)])
-    pairs_big = (big.select(key, id_col, nbrs.alias("nbrs"))
-                 .select(key, F.col(id_col).alias(f"{id_col}_1"),
-                         F.explode("nbrs").alias(f"{id_col}_2"))
-                 .where(F.col(f"{id_col}_2").isNotNull()))
-    return pairs_small.unionByName(pairs_big)
-
-
-def attach_pair_sides(d: DataFrame, cols: list[str]) -> DataFrame:
-    """bounded_pair_ids(d) with ``cols`` joined back per side (_1/_2
-    suffixes) — the shared sides-attach scaffolding of every doc-pair
-    feature query (ids ride the self-join; the payload joins back once
-    per side)."""
-    sides = d.select("doc_id", *cols)
-    p = bounded_pair_ids(d)
-    for s in (1, 2):
-        p = p.join(sides.select(
-            F.col("doc_id").alias(f"doc_id_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in cols]), f"doc_id_{s}")
-    return p
-
-
 def duck_bounded_pairs(docs_sql: str, key: str = "block_key",
-                       id_col: str = "doc_id",
-                       cap: int = _PAIR_CAP,
-                       win: int = _PAIR_WIN) -> str:
-    """DuckDB CTE body mirroring bounded_pair_ids exactly: within a block
-    sorted by id, (rn_b - rn_a) in [1, win] == the lead-window pairs, and
-    rn order == id order, so both engines emit the identical pair set."""
+                       id_col: str = "doc_id") -> str:
+    """DuckDB CTE body mirroring ``webr.engine.bounded_pairs(d, key,
+    id_col)``, the mega-block guard of every self-join in this family:
+    within a block sorted by id, (rn_b - rn_a) in [1, W] == the
+    lead-window pairs, and rn order == id order, so both engines emit the
+    identical pair set."""
+    cap, win = spec.MAX_BLOCK_SIZE, spec.SN_WINDOW
     return f"""
 bm AS (SELECT {id_col}, {key},
               row_number() OVER (PARTITION BY {key} ORDER BY {id_col}) AS rn,
@@ -162,7 +107,7 @@ GROUP BY block_key HAVING count(*) >= 2 ORDER BY block_key
 
 def q_doc_pairs(spark: SparkSession, sf: str) -> DataFrame:
     d = _docs_with_tokens(spark, sf)
-    return (bounded_pair_ids(d)
+    return (bounded_pairs(d, "block_key", "doc_id")
             .groupBy("block_key")
             .agg(F.count("*").alias("n_pairs"))
             .orderBy("block_key"))
@@ -182,7 +127,8 @@ def q_doc_pair_features(spark: SparkSession, sf: str) -> DataFrame:
     30-char prefixes: exact cross-engine parity, no float summation."""
     d = (_docs_with_tokens(spark, sf)
          .withColumn("prefix", F.substring("text", 1, 30)))
-    p = attach_pair_sides(d, ["tset", "prefix", "n_chars"])
+    p = with_sides(bounded_pairs(d, "block_key", "doc_id"), d,
+                   ["tset", "prefix", "n_chars"])
     inter = F.size(F.array_intersect("tset_1", "tset_2"))
     uni = (F.size("tset_1") + F.size("tset_2") - inter)
     return (p.select("doc_id_1", "doc_id_2",
@@ -227,8 +173,8 @@ _FI_THR = 0.55
 def q_feature_importance(spark: SparkSession, sf: str) -> DataFrame:
     d = (_docs_with_tokens(spark, sf)
          .withColumn("prefix", F.substring("text", 1, 30)))
-    p = attach_pair_sides(d, ["tset", "prefix", "n_chars",
-                              "lang", "source"])
+    p = with_sides(bounded_pairs(d, "block_key", "doc_id"), d,
+                   ["tset", "prefix", "n_chars", "lang", "source"])
     inter = F.size(F.array_intersect("tset_1", "tset_2"))
     uni = F.size("tset_1") + F.size("tset_2") - inter
     feats = {
@@ -310,21 +256,18 @@ SELECT * FROM ({unions}) ORDER BY feature
 # --- F2: Jaro-Winkler (python kernel vs duckdb builtin — same algorithm) -------
 
 def q_doc_jaro_winkler(spark: SparkSession, sf: str) -> DataFrame:
-    d = _docs_with_tokens(spark, sf)
-    sides = d.select("doc_id", F.substring("text", 1, 40).alias("prefix"))
-    pairs = (bounded_pair_ids(d)
-             .join(sides.select(F.col("doc_id").alias("doc_id_1"),
-                                F.col("prefix").alias("p1")), "doc_id_1")
-             .join(sides.select(F.col("doc_id").alias("doc_id_2"),
-                                F.col("prefix").alias("p2")), "doc_id_2")
-             .select("doc_id_1", "doc_id_2", "p1", "p2"))
+    d = (_docs_with_tokens(spark, sf)
+         .withColumn("prefix", F.substring("text", 1, 40)))
+    pairs = (with_sides(bounded_pairs(d, "block_key", "doc_id"), d,
+                        ["prefix"])
+             .select("doc_id_1", "doc_id_2", "prefix_1", "prefix_2"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from webr.textproc import jaro_winkler
         for pdf in batches:
             pdf = pdf.copy()
             pdf["jw"] = [round(jaro_winkler(x, y), 6)
-                         for x, y in zip(pdf["p1"], pdf["p2"])]
+                         for x, y in zip(pdf["prefix_1"], pdf["prefix_2"])]
             yield pdf[["doc_id_1", "doc_id_2", "jw"]]
 
     return (pairs.mapInPandas(
@@ -443,12 +386,7 @@ _EDGE_TAU = 0.6
 
 def _doc_edges(spark: SparkSession, sf: str) -> DataFrame:
     d = _docs_with_tokens(spark, sf)
-    sides = d.select("doc_id", "tset")
-    p = (bounded_pair_ids(d)
-         .join(sides.select(F.col("doc_id").alias("doc_id_1"),
-                            F.col("tset").alias("tset_1")), "doc_id_1")
-         .join(sides.select(F.col("doc_id").alias("doc_id_2"),
-                            F.col("tset").alias("tset_2")), "doc_id_2"))
+    p = with_sides(bounded_pairs(d, "block_key", "doc_id"), d, ["tset"])
     inter = F.size(F.array_intersect("tset_1", "tset_2"))
     uni = F.size("tset_1") + F.size("tset_2") - inter
     return (p.where(inter / uni >= _EDGE_TAU)
@@ -541,7 +479,7 @@ def q_blocking_metrics(spark: SparkSession, sf: str) -> DataFrame:
                 F.expr("count(*) * (count(*) - 1) div 2")
                 .alias("total_pairs"))
     # NULL block keys pair with NOTHING (same invariant as
-    # bounded_pair_ids) — a NULL group must not contribute candidate or
+    # bounded_pairs) — a NULL group must not contribute candidate or
     # covered pairs; truth pairs stay defined over all docs
     keyed = d.where(F.col("block_key").isNotNull())
     cand = pair_sum(keyed.groupBy("block_key"), "cand_pairs")
@@ -635,14 +573,8 @@ def q_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     d = (_docs_with_tokens(spark, sf)
          .select("doc_id", "block_key", "tset",
                  F.md5(F.array_join("tset", " ")).alias("fp")))
-    sides = d.select("doc_id", "tset", "fp")
-    p = (bounded_pair_ids(d)
-         .join(sides.select(F.col("doc_id").alias("doc_id_1"),
-                            F.col("tset").alias("tset_1"),
-                            F.col("fp").alias("fp_1")), "doc_id_1")
-         .join(sides.select(F.col("doc_id").alias("doc_id_2"),
-                            F.col("tset").alias("tset_2"),
-                            F.col("fp").alias("fp_2")), "doc_id_2"))
+    p = with_sides(bounded_pairs(d, "block_key", "doc_id"), d,
+                   ["tset", "fp"])
     inter = F.size(F.array_intersect("tset_1", "tset_2"))
     uni = F.size("tset_1") + F.size("tset_2") - inter
     scored = p.select((inter / uni).alias("score"),

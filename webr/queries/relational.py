@@ -12,7 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from webr.queries.common import read
+from webr.engine import bounded_pairs
+from webr.queries.common import read, with_sides
 from webr.queries.er_docs import duck_bounded_pairs
 
 
@@ -272,17 +273,14 @@ def q_time_diff_pairs(spark: SparkSession, sf: str) -> DataFrame:
     mega-block guard — a hot key must stay O(n*W)) with the capped
     absolute day diff ``least(cap, abs(datediff))`` and the F10-style
     same-era flag, aggregated to exact integer stats per era-match."""
-    from webr.queries.er_docs import bounded_pair_ids
     o = (read(spark, sf, "orders")
          .select("o_orderkey", "o_custkey", "o_orderdate",
                  F.expr(_ERA_SPARK).alias("era")))
-    side = [o.select(F.col("o_orderkey").alias(f"o_orderkey_{s}"),
-                     F.col("o_orderdate").alias(f"d_{s}"),
-                     F.col("era").alias(f"era_{s}")) for s in (1, 2)]
-    p = (bounded_pair_ids(o, key="o_custkey", id_col="o_orderkey")
-         .join(side[0], "o_orderkey_1").join(side[1], "o_orderkey_2"))
+    p = with_sides(bounded_pairs(o, "o_custkey", "o_orderkey"), o,
+                   ["o_orderdate", "era"], id_col="o_orderkey")
     diff = F.least(F.lit(_DAY_DIFF_CAP),
-                   F.abs(F.datediff(F.col("d_2"), F.col("d_1"))))
+                   F.abs(F.datediff(F.col("o_orderdate_2"),
+                                    F.col("o_orderdate_1"))))
     return (p.select((F.col("era_1") == F.col("era_2")).alias("same_era"),
                      diff.alias("dd"))
             .groupBy("same_era")

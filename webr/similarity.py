@@ -14,15 +14,23 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-_DOT = "aggregate(zip_with(qv, v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-_NRM = "sqrt(aggregate({c}, 0D, (acc, x) -> acc + x * x))"
-_COS = f"({_DOT}) / (({_NRM.format(c='qv')}) * ({_NRM.format(c='v')}))"
+
+def cosine_sql(a: str, b: str) -> str:
+    """Spark SQL cosine of two array<double> columns, JVM-side. Every
+    embedding cosine in webr is this one text, so the float fold order
+    (and the rounded outputs the DuckDB oracles check) cannot drift
+    apart between operators."""
+    nrm = "sqrt(aggregate({c}, 0D, (acc, x) -> acc + x * x))"
+    return (f"(aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+            f"(acc, x) -> acc + x)) / (({nrm.format(c=a)}) * "
+            f"({nrm.format(c=b)}))")
+
+
+_COS = cosine_sql("qv", "v")
 
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame,
@@ -112,8 +120,7 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, dim: int,
-             k: int = 10, n_lists: int = 16, n_probe: int = 4,
-             seed_ids: list[int] | None = None) -> DataFrame:
+             k: int = 10, n_lists: int = 16, n_probe: int = 4) -> DataFrame:
     """IVF-flat variant: coarse quantize to the nearest of n_lists
     deterministic centroid seeds (md5 pseudo-planes reused as centroids),
     probe the n_probe nearest lists, exact rerank. Same join shape as LSH
