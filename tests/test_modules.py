@@ -277,11 +277,12 @@ def test_multimodal_raise_stub(spark, corpus_pd):
 
 # --- connected components: distributed final pass (_resolve) ------------------
 
-def test_cc_resolve_matches_single_task(spark):
-    """Force the residual-forest budget to 0 so the ladder finishes via the
-    distributed min-label propagation instead of the single final task; the
-    labels must be identical. Graph: chains + stars + cross-partition
-    bridges scattered over many partitions."""
+def test_cc_resolve_matches_single_task(spark, monkeypatch):
+    """Force the forest budget to 0 so connected components finishes via
+    the distributed min-label propagation instead of the single final
+    task; the labels must be identical. Graph: chains + stars +
+    cross-partition bridges scattered over many partitions."""
+    from webr import cluster
     from webr.cluster import connected_components
     edges = []
     # 40 chains of length 6 (urls interleaved so partitions cut chains)
@@ -294,10 +295,13 @@ def test_cc_resolve_matches_single_task(spark):
     edges.append(("u0000", "u0001"))
     df = (spark.createDataFrame(edges, "url_1 string, url_2 string")
           .repartition(16))
-    single = (connected_components(df, final_rows_max=10**9).toPandas()
-              .sort_values("url").reset_index(drop=True))
-    dist = (connected_components(df, final_rows_max=0).toPandas()
-            .sort_values("url").reset_index(drop=True))
+    single, one_task = connected_components(df)
+    assert one_task
+    single = single.toPandas().sort_values("url").reset_index(drop=True)
+    monkeypatch.setattr(cluster, "CC_FINAL_ROWS_MAX", 0)
+    dist, one_task = connected_components(df)
+    assert not one_task
+    dist = dist.toPandas().sort_values("url").reset_index(drop=True)
     assert list(single.url) == list(dist.url)
     assert list(single.rep) == list(dist.rep)
     # reps are component minima

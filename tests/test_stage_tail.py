@@ -4,8 +4,8 @@ with outputs pinned to the oracle and to the pandas entities twin.
 - job budget per stage, counted from Spark's own job groups;
 - a second run in the session compiles no generated class;
 - the pair-scoring kernel spread over the session's cores;
-- every connected-components path (count-free ladder, multi-rung ladder,
-  distributed ``_resolve``) gives the same labels on a multi-file
+- both connected-components finishes (count-free single task,
+  distributed ``_resolve``) give the same labels on a multi-file
   pair_scores table, and ``label_clusters`` equals the oracle on each;
 - ``build_entities`` equals ``webr.oracle.entities`` row for row,
   planted vote ties and host containment included.
@@ -90,37 +90,31 @@ def _sorted(df, *cols) -> pd.DataFrame:
 
 def test_cc_paths_agree_on_multi_file_scores(spark, pipeline_out,
                                              oracle_result, monkeypatch):
-    """Once pair_scores spans several files, the count-free ladder, a
-    forced multi-rung ladder and the distributed ``_resolve`` finish give
-    identical (url, rep); label_clusters equals the oracle on the
-    count-free path (window ids) and on the ``_resolve`` path
-    (zipWithIndex ids)."""
+    """Once pair_scores spans several files, the count-free single-task
+    finish and the distributed ``_resolve`` finish give identical
+    (url, rep); label_clusters equals the oracle on the count-free path
+    (window ids) and on the ``_resolve`` path (zipWithIndex ids)."""
     from webr import cluster
-    from webr.cluster import (
-        _forest_map, connected_components, label_clusters,
-    )
+    from webr.cluster import connected_components, label_clusters
     ps = pipeline_out["pair_scores"]
     assert len(ps.inputFiles()) >= 4
     n_scored = ps.count()
     edges = ps.where("is_edge").select("url_1", "url_2")
 
-    free = _sorted(cluster._ladder(edges, 8, cluster.CC_FINAL_ROWS_MAX,
-                                   n_scored)[0], "url")
-    resolve = _sorted(connected_components(edges, final_rows_max=0), "url")
-    wide = edges.repartition(64, "url_1")
-    first_rung = wide.mapInPandas(_forest_map, "url string, rep string")
-    rungs = _sorted(connected_components(
-        wide, final_rows_max=first_rung.count() - 1), "url")
-    assert len(free) > 0
-    for other in (resolve, rungs):
-        assert list(free.url) == list(other.url)
-        assert list(free.rep) == list(other.rep)
-
+    free, one_task = connected_components(edges, n_scored)
+    assert one_task
+    free = _sorted(free, "url")
     gold = oracle_result.clusters.sort_values("url").reset_index(drop=True)
     mentions = pipeline_out["mentions"]
     free_cl = _sorted(label_clusters(mentions, edges, edges_max=n_scored),
                       "url")
     monkeypatch.setattr(cluster, "CC_FINAL_ROWS_MAX", 0)
+    resolve, one_task = connected_components(edges)
+    assert not one_task
+    resolve = _sorted(resolve, "url")
+    assert len(free) > 0
+    assert list(free.url) == list(resolve.url)
+    assert list(free.rep) == list(resolve.rep)
     resolve_cl = _sorted(label_clusters(mentions, edges), "url")
     for cl in (free_cl, resolve_cl):
         assert list(cl.url) == list(gold.url)

@@ -8,6 +8,7 @@ Usage: python tools/check_queries.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -26,8 +27,6 @@ def norm_cell(v) -> str:
         if v == int(v) and abs(v) < 1e15:
             return str(int(v))
         return f"{v:.6g}"
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
     if isinstance(v, dict):
         return "{" + ",".join(f"{k}:{norm_cell(x)}"
                               for k, x in sorted(v.items())) + "}"
@@ -75,7 +74,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from webr.session import get_spark
 

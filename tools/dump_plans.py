@@ -13,6 +13,7 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
@@ -78,7 +79,8 @@ CHECKS = {
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from webr.session import get_spark
 

@@ -1,41 +1,40 @@
-"""Distributed transitive clustering: connected components via a
-union-find reduction ladder (SURVEY §2.8 C3 — with minPts=2 the
-reference's DBSCAN is connected components; GraphFrames is unavailable,
-so this is hand-rolled, SURVEY §7.4 item 4).
+"""Distributed transitive clustering: connected components via two
+union-find passes (SURVEY §2.8 C3 — with minPts=2 the reference's DBSCAN
+is connected components; GraphFrames is unavailable, so this is
+hand-rolled, SURVEY §7.4 item 4).
 
 Algorithm: each partition runs union-find over its edges and emits its
 spanning forest as (vertex -> local min-root) edges — at most one edge per
-vertex, so each pass reduces the edge list to <= |V_partition| rows.
-Partitions are then coalesced 8:1 and the pass repeats; the final single
-partition resolves the global forest. Union always roots at the MINIMUM
-id, so the final representative is the component min — matching the
-oracle's union-by-min exactly, independent of partitioning and order.
+vertex, so the first pass reduces the edge list to <= |V_partition| rows
+per partition. One final single-partition pass then resolves the global
+forest. Union always roots at the MINIMUM id, so the final representative
+is the component min — matching the oracle's union-by-min exactly,
+independent of partitioning and order.
 
 Why not iterative hash-min / star-contraction DataFrame loops: profiling
 showed sorted-neighborhood mega-block graphs (bounded-degree band graphs)
 contract only ~20% per round, and Spark-side per-iteration overhead grows
 with accumulated checkpoint state — the tail iterations dominated wall
-time. The reduction ladder does O(log_8 P) passes of pure mapPartitions
-work with total I/O O(E + V log P).
+time. The two passes are pure mapPartitions work with total I/O O(E + V).
 
-Scale note (10^12 docs): the ladder's second-to-last step leaves the
-remaining forest (one entry per linked vertex per surviving partition).
-Web-scale entity graphs reduce enormously (components are entity-sized),
-so the single-task final pass is usually fine — but it is guarded: when
-the residual forest exceeds ``CC_FINAL_ROWS_MAX`` rows, ``_resolve``
-finishes the merge fully distributed (min-label propagation over the
-partial forests to fixpoint). Partial forests are depth-1 stars, so the
-label graph's diameter is bounded by the handful of partitions being
-merged and propagation converges in a few rounds, each a plain shuffle —
-no single task ever has to hold the forest. When the caller knows an
-upper bound on the edges (the pipeline passes the pair_scores row count)
-and twice that bound fits the budget, the ladder goes from its first
-pass straight to the final one without counting a forest.
+Scale note (10^12 docs): the first pass leaves one forest row per linked
+vertex per partition. Web-scale entity graphs reduce enormously
+(components are entity-sized), so the single-task final pass is usually
+fine — but it is guarded: when the first-pass forest exceeds
+``CC_FINAL_ROWS_MAX`` rows, ``_resolve`` finishes the merge fully
+distributed (min-label propagation over the partial forests to
+fixpoint). Partial forests are depth-1 stars, so the label graph's
+diameter is bounded by the number of partitions being merged and
+propagation converges in a few rounds, each a plain shuffle — no single
+task ever has to hold the forest. When the caller knows an upper bound
+on the edges (the pipeline passes the pair_scores row count) and twice
+that bound fits the budget, the final pass runs without counting a
+forest.
 
 Labelling (``label_clusters``) adds one cogroup per component — the
 cannot-link replay, a pass-through for components whose name
 signatures are all compatible — and dense cluster ids; in the pipeline
-the whole clusters stage is the ladder's two passes plus one write.
+the whole clusters stage is the two union-find passes plus one write.
 """
 
 from __future__ import annotations
@@ -81,8 +80,8 @@ def _forest_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame({"url": verts, "rep": [find(v) for v in verts]})
 
 
-# residual-forest rows above which the ladder's final pass switches from
-# one in-memory union-find task to distributed min-label propagation
+# first-pass forest rows above which the final pass switches from one
+# in-memory union-find task to distributed min-label propagation
 CC_FINAL_ROWS_MAX = 50_000_000
 
 
@@ -122,61 +121,38 @@ def _resolve(forest: DataFrame) -> DataFrame:
     return lab.select(F.col("v").alias("url"), F.col("lab").alias("rep"))
 
 
-def _ladder(edges: DataFrame, fanin: int, final_rows_max: int,
-            edges_max: int | None) -> tuple[DataFrame, bool]:
-    """The reduction ladder (see ``connected_components``) -> ((url, rep)
-    forest, whether its final pass ran in one task). ``edges_max``: an
-    upper bound on the edge rows that the caller already knows (the
-    pipeline passes the pair_scores row count); when twice it fits the
-    budget, the ladder goes from its first pass straight to the final
-    one without counting a forest."""
+def connected_components(edges: DataFrame, edges_max: int | None = None
+                         ) -> tuple[DataFrame, bool]:
+    """edges: (url_1, url_2). -> ((url, rep) for every url that appears
+    in an edge, whether the final pass ran in one task); rep = min id of
+    its component.
+
+    One per-partition ``_forest_map`` pass, then one finish: a single-task
+    ``_forest_map`` pass over the whole forest when it fits
+    ``CC_FINAL_ROWS_MAX`` rows, ``_resolve`` (identical output, tested)
+    otherwise. ``edges_max``: an upper bound on the edge rows that the
+    caller already knows (the pipeline passes the pair_scores row count).
+
+    The first pass is materialized via eager localCheckpoint BEFORE the
+    coalesce: a narrow coalesce over a lazy plan would otherwise collapse
+    it into the final task and execute both passes (parquet scan
+    included) serially — the classic coalesce(1) trap."""
     first = edges.schema.fields[0].dataType.simpleString()
     out_schema = f"url {first}, rep {first}"
     out = (edges.mapInPandas(_forest_map, out_schema)
            .localCheckpoint(eager=True))
     # one partition per input partition; asked of the checkpoint, whose
     # RDD already exists, not of the edges' plan
-    n = out.rdd.getNumPartitions()
+    if out.rdd.getNumPartitions() == 1:
+        return out, True
     # a pass emits at most one row per vertex it saw, so no forest ever
-    # exceeds 2 * edges: when a known edge bound fits the single-task
-    # budget, the final pass needs no count to settle it
-    bounded = edges_max is not None and 2 * edges_max <= final_rows_max
-    while n > 1:
-        # the residual forest shrinks fast (one row per vertex per
-        # surviving partition); as soon as it fits the single-task
-        # budget, one final pass resolves it — intermediate fanin rungs
-        # would only add checkpoint round-trips. count() is cheap: out
-        # is always an eager localCheckpoint.
-        if bounded or out.count() <= final_rows_max:
-            n = 1
-        else:
-            n = max(1, n // fanin)
-            if n == 1:
-                return _resolve(out), False
-        out = (out.coalesce(n).mapInPandas(_forest_map, out_schema)
-               .localCheckpoint(eager=True))
-    return out, True
-
-
-def connected_components(edges: DataFrame, fanin: int = 8,
-                         final_rows_max: int | None = None) -> DataFrame:
-    """edges: (url_1, url_2). Returns (url, rep) for every url that appears
-    in an edge; rep = min id of its component.
-
-    Reduction ladder: each partition's spanning forest is ≤ one row per
-    vertex; partitions coalesce fanin:1 and repeat until one partition
-    resolves the global forest — O(log_fanin P) passes, Arrow-batched.
-    If the residual forest entering the final single-partition pass
-    exceeds ``final_rows_max`` rows, ``_resolve`` finishes distributed
-    instead (identical output, tested).
-
-    Each pass is materialized via eager localCheckpoint BEFORE the next
-    coalesce: a narrow coalesce over a lazy plan would otherwise collapse
-    the upstream passes into the final task and execute the whole ladder
-    (parquet scan included) serially — the classic coalesce(1) trap."""
-    if final_rows_max is None:
-        final_rows_max = CC_FINAL_ROWS_MAX
-    return _ladder(edges, fanin, final_rows_max, None)[0]
+    # exceeds 2 * edges: a known edge bound within the budget settles the
+    # finish without a count (cheap anyway: out is an eager checkpoint)
+    bounded = edges_max is not None and 2 * edges_max <= CC_FINAL_ROWS_MAX
+    if not bounded and out.count() > CC_FINAL_ROWS_MAX:
+        return _resolve(out), False
+    return (out.coalesce(1).mapInPandas(_forest_map, out_schema)
+            .localCheckpoint(eager=True)), True
 
 
 def _refine(memb, comp_edges):
@@ -227,7 +203,7 @@ def _cluster_ids(labels: DataFrame, one_task: bool) -> DataFrame:
     """(url, rep) -> (url, cluster_id, is_noise): dense ids 1..K by sorted
     representative, 0 for noise (null rep).
 
-    When the ladder's final pass ran in one task, one task may rank the
+    When the final union-find pass ran in one task, one task may rank the
     labels too: they are at most the linked urls that pass already held
     (one window, one exchange). After a distributed ``_resolve`` no
     single task may hold them, so the ids come from a sorted
@@ -257,19 +233,18 @@ def label_clusters(mentions: DataFrame, edges: DataFrame,
     1..K by sorted representative (deterministic).
 
     Two phases: unconstrained CC bounds each component (``edges_max``
-    goes to ``_ladder``), then one cogroup
-    per component replays its edges through the cannot-link kernel
-    (``_refine``), which splits components that merged name-incompatible
+    goes to ``connected_components``), then one cogroup per component
+    replays its edges through the cannot-link kernel (``_refine``), which splits components that merged name-incompatible
     mentions through an initial-only bridge and passes every other
     component through as is.
 
-    Job shape: the ladder's two checkpointed passes, then one write
+    Job shape: the two checkpointed union-find passes, then one write
     whose plan broadcasts the (small) component table to the mention
     and edge scans, shuffles both by component into the cogroup, and
     ranks the representatives (``_cluster_ids``). Noise needs no
     anti-join: it is the left join's unmatched side plus the replay's
     dropped members."""
-    forest, one_task = _ladder(edges, 8, CC_FINAL_ROWS_MAX, edges_max)
+    forest, one_task = connected_components(edges, edges_max)
     # all three joins below use the SAME build side, so the plan
     # broadcasts the component table once and reuses it
     comp = forest.withColumnRenamed("rep", "comp")

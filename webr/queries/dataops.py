@@ -156,7 +156,7 @@ def q_dedup_minhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
              .select(F.col("root").alias("url_1"),
                      F.col("doc_id").alias("url_2"))
              .distinct())
-    labels = connected_components(edges).select(
+    labels = connected_components(edges)[0].select(
         F.col("url").alias("doc_id"), F.col("rep").alias("dup_group"))
     docs = read(spark, sf, "documents").select("doc_id")
     return (docs.join(labels, "doc_id", "left")
@@ -606,8 +606,8 @@ def q_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     d = (read(spark, sf, "documents")
          .withColumn("toks", F.expr(spark_tokens("text"))))
     n_toks = F.greatest(F.size("toks"), F.lit(1))
-    tok_chars = F.expr("aggregate(transform(" + spark_tokens("text")
-                       + ", x -> length(x)), 0, (a, x) -> a + x)")
+    tok_chars = F.expr(
+        "aggregate(transform(toks, x -> length(x)), 0, (a, x) -> a + x)")
     return (d.select(
         "doc_id",
         F.length("text").alias("n_chars_raw"),

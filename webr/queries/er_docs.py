@@ -395,14 +395,14 @@ def _doc_edges(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_doc_components(spark: SparkSession, sf: str) -> DataFrame:
     """Token-set-similar docs in the same block, transitively closed via
-    distributed hash-min CC (webr.cluster). DuckDB oracle uses a recursive
+    distributed union-find CC (webr.cluster). DuckDB oracle uses a recursive
     CTE doing the same min-label propagation."""
     from webr.cluster import connected_components
     # plain scan: the doc-id universe needs no tokenization
     d = read(spark, sf, "documents").select("doc_id")
     edges = _doc_edges(spark, sf).select(
         F.col("doc_id_1").alias("url_1"), F.col("doc_id_2").alias("url_2"))
-    labels = connected_components(edges).select(
+    labels = connected_components(edges)[0].select(
         F.col("url").alias("doc_id"), F.col("rep").alias("component"))
     return (d.join(labels, "doc_id", "left")
             .select("doc_id",

@@ -7,6 +7,7 @@ parity against the NumPy oracle, bitwise scores included."""
 from __future__ import annotations
 
 import atexit
+import functools
 import shutil
 import tempfile
 
@@ -27,6 +28,25 @@ _PAGES_PER_ENTITY = 12
 # Without this, a driver sweep over the registry pays five full pipeline
 # runs (one per query below) for identical outputs.
 _RUN_CACHE: dict = {}
+_PAGE_COLS = ["url", "warc_ts", "html", "text", "lang"]
+
+
+@functools.cache
+def _pages_pd():
+    """The synthetic corpus as pandas (PAGES columns plus truth), once
+    per process."""
+    return pages_to_pandas(generate_pages(
+        n_entities=_N_ENTITIES, pages_per_entity=_PAGES_PER_ENTITY,
+        seed=_SEED))
+
+
+@functools.cache
+def _query_set():
+    """Five corpus pages (deterministic picks) re-submitted as query
+    records -> (their urls, their PAGES columns as pandas)."""
+    pages_pd = _pages_pd()
+    urls = sorted(pages_pd.url)[:: max(len(pages_pd) // 5, 1)][:5]
+    return urls, pages_pd[pages_pd.url.isin(urls)][_PAGE_COLS]
 
 
 def _run(spark: SparkSession) -> dict:
@@ -34,12 +54,8 @@ def _run(spark: SparkSession) -> dict:
            _SEED, _N_ENTITIES, _PAGES_PER_ENTITY)
     if key in _RUN_CACHE:
         return _RUN_CACHE[key]
-    pages_pd = pages_to_pandas(generate_pages(
-        n_entities=_N_ENTITIES, pages_per_entity=_PAGES_PER_ENTITY,
-        seed=_SEED))
-    pages = spark.createDataFrame(
-        pages_pd[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
+    pages = spark.createDataFrame(_pages_pd()[_PAGE_COLS],
+                                  schema=schema.PAGES)
     # per process: a shared dir lets other processes resume its tables
     wh = tempfile.mkdtemp(prefix="webr_entry_wh_")
     atexit.register(shutil.rmtree, wh, ignore_errors=True)
@@ -73,11 +89,8 @@ def q_er_pipeline_f1(spark: SparkSession, sf: str) -> DataFrame:
     joins + one aggregate — no collect); exact numeric parity with the
     NumPy ``oracle.pairwise_f1`` twin is pinned by
     tests/test_pipeline.py::test_er_pipeline_f1_driver_row."""
-    pages_pd = pages_to_pandas(generate_pages(
-        n_entities=_N_ENTITIES, pages_per_entity=_PAGES_PER_ENTITY,
-        seed=_SEED))
     out = _run(spark)
-    truth = spark.createDataFrame(pages_pd[["url", "entity_id"]])
+    truth = spark.createDataFrame(_pages_pd()[["url", "entity_id"]])
     lab = (out["clusters"]
            .select("url", F.when(~F.col("is_noise"), F.col("cluster_id"))
                    .alias("pred"))
@@ -101,16 +114,13 @@ def q_er_pipeline_f1(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(~F.col("p") & F.col("g"), 1).otherwise(0))
         .cast("long").alias("fn"),
         F.count(F.lit(1)).alias("n_labeled_pairs"))
-    return agg.select(
-        F.round(F.expr(
-            "CASE WHEN (CASE WHEN tp+fp=0 THEN 1.0D ELSE tp/(tp+fp) END "
-            "   + CASE WHEN tp+fn=0 THEN 1.0D ELSE tp/(tp+fn) END) = 0 "
-            "THEN 0.0D ELSE "
-            "2 * (CASE WHEN tp+fp=0 THEN 1.0D ELSE tp/(tp+fp) END) "
-            "  * (CASE WHEN tp+fn=0 THEN 1.0D ELSE tp/(tp+fn) END) "
-            "/ ((CASE WHEN tp+fp=0 THEN 1.0D ELSE tp/(tp+fp) END) "
-            " + (CASE WHEN tp+fn=0 THEN 1.0D ELSE tp/(tp+fn) END)) END"),
-            9).alias("pairwise_f1"),
+    pr = agg.selectExpr(
+        "tp", "fp", "fn", "n_labeled_pairs",
+        "CASE WHEN tp+fp=0 THEN 1.0D ELSE tp/(tp+fp) END AS p",
+        "CASE WHEN tp+fn=0 THEN 1.0D ELSE tp/(tp+fn) END AS r")
+    return pr.selectExpr(
+        "round(CASE WHEN p + r = 0 THEN 0.0D "
+        "ELSE 2 * p * r / (p + r) END, 9) AS pairwise_f1",
         "tp", "fp", "fn", "n_labeled_pairs")
 
 
@@ -120,15 +130,8 @@ def q_record_query_topk(spark: SparkSession, sf: str) -> DataFrame:
     entity tables; each must rank its own cluster. Correctness asserted in
     tests/test_query.py (top-1 == own cluster, no-match returns empty)."""
     from webr.query import match_records
-    pages_pd = pages_to_pandas(generate_pages(
-        n_entities=_N_ENTITIES, pages_per_entity=_PAGES_PER_ENTITY,
-        seed=_SEED))
     out = _run(spark)
-    urls = sorted(pages_pd.url)[:: max(len(pages_pd) // 5, 1)][:5]
-    qpages = spark.createDataFrame(
-        pages_pd[pages_pd.url.isin(urls)]
-        [["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
+    qpages = spark.createDataFrame(_query_set()[1], schema=schema.PAGES)
     return (match_records(qpages, out["idf"], out["entities"],
                           out["clusters"], out["mention_feats"])
             .select("q_url", "cluster_id", "votes", "rank")
@@ -147,11 +150,8 @@ def q_query_eval(spark: SparkSession, sf: str) -> DataFrame:
     from webr import spec
     from webr.evalm import query_eval
     from webr.query import match_records
-    pages_pd = pages_to_pandas(generate_pages(
-        n_entities=_N_ENTITIES, pages_per_entity=_PAGES_PER_ENTITY,
-        seed=_SEED))
     out = _run(spark)
-    urls = sorted(pages_pd.url)[:: max(len(pages_pd) // 5, 1)][:5]
+    urls, held_in = _query_set()
     nm_url = "https://nomatch.example.net/p/zq-0001"
     nomatch = pd.DataFrame([{
         "url": nm_url, "warc_ts": pd.Timestamp("2020-01-01"),
@@ -159,10 +159,7 @@ def q_query_eval(spark: SparkSession, sf: str) -> DataFrame:
                  b"<h1>Zebulon Quixote</h1><p>entirely unrelated gibberish"
                  b" tokens qqq www eee</p></body></html>"),
         "text": "", "lang": "eng"}])
-    qpages_pd = pd.concat(
-        [pages_pd[pages_pd.url.isin(urls)]
-         [["url", "warc_ts", "html", "text", "lang"]], nomatch],
-        ignore_index=True)
+    qpages_pd = pd.concat([held_in, nomatch], ignore_index=True)
     qpages = spark.createDataFrame(qpages_pd, schema=schema.PAGES)
     res = match_records(qpages, out["idf"], out["entities"],
                         out["clusters"], out["mention_feats"])

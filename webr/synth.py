@@ -225,21 +225,3 @@ def pages_to_pandas(pages: list[dict]):
     df = pd.DataFrame(pages)
     df["warc_ts"] = pd.to_datetime(df["warc_ts"])
     return df
-
-
-def write_parquet(path: str, seed: int = 42, scale: float = 1.0,
-                  **kw) -> str:
-    """Materialize the synthetic corpus (table columns + truth columns in a
-    sibling file) for bench / fixture use."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    df = pages_to_pandas(generate_pages(seed=seed, scale=scale, **kw))
-    table_cols = ["url", "warc_ts", "html", "text", "lang"]
-    # pandas defaults to ns timestamps; Spark 4 refuses TIMESTAMP(NANOS)
-    # parquet ([PARQUET_TYPE_ILLEGAL]) — write us like Spark itself does
-    pq.write_table(pa.Table.from_pandas(df[table_cols]),
-                   f"{path}/pages.parquet", coerce_timestamps="us")
-    pq.write_table(
-        pa.Table.from_pandas(df[["url", "entity_id", "author_name", "doc_id"]]),
-        f"{path}/pages_truth.parquet")
-    return path

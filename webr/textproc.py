@@ -337,11 +337,7 @@ def jaccard(a: set[str], b: set[str]) -> float:
 
 
 # ---------------------------------------------------------------------------
-# hashing helpers (portable across Spark SQL / DuckDB via md5 hex strings)
-
-def md5_hex(s: str) -> str:
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
-
+# hashing helpers: MinHash-LSH band keys
 
 _MH_PRIME = (1 << 61) - 1  # Mersenne prime: standard minhash modulus
 # deterministic per-(band,row) affine coefficients, derived from md5 so any
