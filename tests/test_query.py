@@ -5,6 +5,7 @@ no-match-correct notion, record_based_query_exp1.py:166-174)."""
 import datetime as dt
 import random
 import re
+import tempfile
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -289,13 +290,20 @@ def warehouse_pd(pipeline_out):
 
 def _engine_rows(spark, pipeline_out, qpd: pd.DataFrame,
                  entities=None) -> list[tuple]:
-    res = match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
-                        pipeline_out["idf"],
-                        pipeline_out["entities"] if entities is None
-                        else entities,
-                        pipeline_out["clusters"],
-                        pipeline_out["mention_feats"])
-    return sorted(tuple(r) for r in res.collect())
+    """match_records rows; an ``entities`` frame of the test's own is
+    committed first (the lookups read committed tables only)."""
+    with tempfile.TemporaryDirectory(prefix="webr_ent_") as d:
+        if entities is None:
+            entities = pipeline_out["entities"]
+        else:
+            entities.write.parquet(f"{d}/entities")
+            entities = spark.read.schema(entities.schema).parquet(
+                f"{d}/entities")
+        res = match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
+                            pipeline_out["idf"], entities,
+                            pipeline_out["clusters"],
+                            pipeline_out["mention_feats"])
+        return sorted(tuple(r) for r in res.collect())
 
 
 @pytest.mark.parametrize("kind", ["single", "mix64", "initial_only",
@@ -391,12 +399,13 @@ def _request_jobs(spark, pipeline_out, qpd, group: str):
 
 def test_query_job_budget_and_idf_memo(spark, pipeline_out, corpus_pd,
                                        warehouse_pd, monkeypatch):
-    """A warm single-page request runs at most 4 Spark jobs (7 with the
-    cogroup it replaced, 11 with the per-pair sided join before that),
-    each of one stage: no shuffle. A request whose last name matches no
-    entity stops after the candidate lookup. A repeat request against
-    the same idf files reuses the memoized broadcast instead of counting
-    and collecting the vocabulary again."""
+    """A warm single-page request runs one Spark job, the query pages'
+    pass (4 with the broadcast-joined member pass it replaced, 7 with
+    the cogroup before that), of one stage: the lookups and the scoring
+    run on the driver. So does a request whose last name matches no
+    entity. A repeat request against the same idf files reuses the
+    memoized broadcast instead of counting and collecting the vocabulary
+    again."""
     from webr import query
     monkeypatch.setattr(query, "_IDF_MEMO", {})
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
@@ -406,13 +415,13 @@ def test_query_job_budget_and_idf_memo(spark, pipeline_out, corpus_pd,
     (again,) = query._IDF_MEMO.values()
     assert again[2] is entry[2] and entry[2] is not None
     assert rows
-    assert len(second) <= 4, second
+    assert len(second) <= 1, second
     assert set(second) == {1}, second  # one stage per job: no exchange
     # idf count + collect
     assert len(first) >= len(second) + 2, (first, second)
     stranger = pd.DataFrame([_fabricated(0, random.Random(3))])[_PAGE_COLS]
     rows, jobs = _request_jobs(spark, pipeline_out, stranger, "q3-budget-3")
-    assert rows == [] and len(jobs) <= 2, (rows, jobs)
+    assert rows == [] and len(jobs) <= 1, (rows, jobs)
 
 
 def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,
@@ -440,32 +449,81 @@ def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,
     assert {r[1] for r in first}.isdisjoint(top1.values())
 
 
-def test_member_pass_plan_broadcasts_no_shuffle(spark, pipeline_out,
-                                               corpus_pd, warehouse_pd):
-    """The member pass joins mention_feats to a broadcast of the named
-    clusters: no shuffle exchange, no sort-merge join. A shuffle here
-    would cost a request two more jobs."""
-    import io
-    from contextlib import redirect_stdout
+def test_query_reads_only_candidate_rows(spark, pipeline_out, corpus_pd,
+                                         warehouse_pd, monkeypatch):
+    """A single-page request reads the entity rows of the query's last
+    name, the non-noise rows of the clusters that pass stage 1 (a subset
+    of those candidates, holding the answer) and exactly those members'
+    mention_feats rows: its reads are bounded by its candidates, not by
+    the warehouse."""
+    from webr import query
+    reads: dict = {}
 
-    from webr.query import member_votes, prepare_query_mentions
+    class Recorded:
+        def __init__(self, dset, arg):
+            self.dset, self.arg = dset, arg
+
+        def to_table(self, **kw):
+            t = self.dset.to_table(**kw)
+            reads.setdefault(self.arg, []).append(t.to_pandas())
+            return t
+
+    committed = query._committed
+    monkeypatch.setattr(query, "_committed",
+                        lambda df, arg: Recorded(committed(df, arg), arg))
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
-    queries = prepare_query_mentions(
-        spark.createDataFrame(qpd, schema=schema.PAGES), pipeline_out["idf"])
-    cid = int(warehouse_pd[2].set_index("url").cluster_id[qpd.url.iloc[0]])
-    df = member_votes(queries, {cid: [0]}, pipeline_out["clusters"],
-                      pipeline_out["mention_feats"])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    # one row per task that holds members: partial counts
-    rows = df.collect()
-    assert {(r.q, r.cluster_id) for r in rows} == {(0, cid)}
-    assert sum(r.votes for r in rows) >= 1
+    rows = _engine_rows(spark, pipeline_out, qpd)
+    _, ent_pd, cl_pd, mf_pd = warehouse_pd
+    (ent,), (cl,), (mf,) = (reads[a] for a in
+                            ("entities", "clusters", "mention_feats"))
+
+    own = next(r[1] for r in rows if r[4] == 1)
+    last = ent_pd.set_index("cluster_id").at[own, "last"]
+    assert set(ent["last"]) == {last}
+    assert len(ent) == (ent_pd["last"] == last).sum() < len(ent_pd)
+
+    named = set(cl.cluster_id)
+    assert {r[1] for r in rows} <= named <= set(ent.cluster_id)
+    live = cl_pd[~cl_pd.is_noise & cl_pd.cluster_id.isin(named)]
+    assert sorted(cl.url) == sorted(live.url)
+    want = mf_pd[mf_pd.url.isin(live.url)]
+    assert sorted(mf.url) == sorted(want.url) and len(mf) < len(mf_pd)
+
+
+@pytest.mark.parametrize("arg", ["entities", "clusters"])
+def test_query_lookup_tables_must_be_committed(spark, pipeline_out,
+                                              corpus_pd, warehouse_pd, arg):
+    """The lookups read the files behind a table, not its plan: a
+    filtered frame or a local copy raises instead of being answered
+    from rows it does not hold."""
+    tables = {t: pipeline_out[t] for t in
+              ("idf", "entities", "clusters", "mention_feats")}
+    if arg == "entities":
+        tables[arg] = tables[arg].where("n_members > 0")
+    else:
+        tables[arg] = spark.createDataFrame(warehouse_pd[2],
+                                            schema=tables[arg].schema)
+    qpd = _query_fixture("single", corpus_pd, warehouse_pd)
+    with pytest.raises(ValueError, match=f"match_records: {arg} must be"):
+        match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
+                      *tables.values())
+
+
+def test_query_warehouse_path_with_escapes(spark, pipeline_out, corpus_pd,
+                                          warehouse_pd, warehouse_dir):
+    """A warehouse under a root whose name holds a space and a '%' (the
+    part files' URIs percent-escape both) answers like the shared one."""
+    from webr.catalog import Warehouse
+    wh = Warehouse(spark, f"{warehouse_dir}/a b%25c")
+    names = ("idf", "entities", "clusters", "mention_feats")
+    for t in names:
+        wh.write(t, pipeline_out[t], snapshot="copy")
+    assert "/a%20b%2525c/" in wh.read("entities").inputFiles()[0]
+    qpd = _query_fixture("mix64", corpus_pd, warehouse_pd)
+    res = match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
+                        *map(wh.read, names))
+    assert sorted(tuple(r) for r in res.collect()) == _engine_rows(
+        spark, pipeline_out, qpd)
 
 
 def test_query_idf_memo_replaced_on_rewrite(spark, pipeline_out,

@@ -65,13 +65,15 @@ CHECKS = {
     # round 4 link-graph family: extraction is Arrow-batched (no per-row
     # UDF node); degrees/pagerank join+aggregate JVM-side (the one-row
     # dangling-mass cross join lowers to a broadcast NLJ, never a
-    # CartesianProduct)
+    # CartesianProduct). PageRank's rounds are localCheckpoint-ed, so its
+    # final plan scans the last round's checkpoint; the extraction it
+    # ran on is asserted by link_extract and link_degree.
     "link_extract": (["MapInPandas"], ["CartesianProduct",
                                        "BatchEvalPython"]),
     "link_degree": (["MapInPandas", "WholeStageCodegen"],
                     ["CartesianProduct", "BatchEvalPython"]),
-    "link_pagerank": (["MapInPandas"], ["CartesianProduct",
-                                        "BatchEvalPython"]),
+    "link_pagerank": (["Scan ExistingRDD", "localCheckpoint"],
+                      ["CartesianProduct", "BatchEvalPython"]),
     "time_diff_pairs": ([], ["CartesianProduct"]),
     "feature_importance": ([], ["CartesianProduct"]),
 }

@@ -11,31 +11,35 @@ Two semantic stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-Request shape — two Python passes, no shuffle. A request's cost is
-mostly fixed (jobs, Python stage start-up, py4j round trips), not task
-CPU, so it is built around how few of each it runs:
+Request shape — one Spark job. A request's cost is mostly fixed (jobs,
+Python stage start-up, py4j round trips), not task CPU, so it is built
+around how few of each it runs:
   * ``prepare_query_mentions``: ONE Arrow pass derives the query pages'
     mentions and tf-idf weight arrays (the corpus's shared kernels, with
     the CORPUS idf — a query must not shift corpus statistics) and
     collects them to the driver as an Arrow table.
-  * One JVM-only collect of the name-key candidates: the entity rows
-    whose ``last`` is one of the queries' last names. The driver applies
-    the first-initial rule and the profile-cosine gate (stage 1) to
-    these request-sized rows.
-  * ONE ``mapInArrow`` pass over ``mention_feats`` joined to a broadcast
-    of the surviving clusters' non-noise rows scores every member
-    against the queries that named its cluster with
-    ``score_pairs_indexed_vec`` (the pipeline's pair kernel; the query
-    rows travel in the closure) and returns vote counts per (query,
-    cluster). Member features never leave the executors.
-  * The driver sums the votes, applies MIN_VOTES and the top-K rank, and
-    returns the rows as a DataFrame over a local Arrow table (its
+  * Three request-sized lookups read the committed parquet files of the
+    warehouse tables on the driver (``pyarrow.dataset`` with the
+    predicate pushed into the reader: no Spark job, no codegen): the
+    name-key candidates (``entities`` whose ``last`` is one of the
+    queries' last names), the non-noise rows of the clusters that pass
+    stage 1 (``clusters``), and those members' ``mention_feats`` rows.
+    The driver applies the first-initial rule and the profile-cosine
+    gate (stage 1) to the candidates, and scores every (query, member)
+    pair in ONE ``score_pairs_indexed_vec`` call (the pipeline's pair
+    kernel) over a member table of the queries followed by the members.
+  * The driver counts the votes, applies MIN_VOTES and the top-K rank,
+    and returns the rows as a DataFrame over a local Arrow table (its
     ``round(cluster_cos, 9)`` is a JVM expression that runs no job).
-A single-page request runs at most 4 Spark jobs once the idf broadcast
-is warm (prepare, candidates, the broadcast side, the member pass; 7
-with the cogroup it replaced), each of one stage; a request whose last
-names match no entity runs 2. The first request against an idf table
-also counts and collects its vocabulary. Pinned by tests/test_query.py.
+Once the idf broadcast is warm a request runs 1 Spark job, of one stage,
+whether or not its last names match an entity. The first request
+against an idf table also counts and collects its vocabulary. Pinned by
+tests/test_query.py.
+
+The lookup tables must be bare scans of committed parquet files
+(``Warehouse.read`` or ``Pipeline.run`` outputs): a filtered, computed
+or local frame raises ValueError naming the argument, since the lookups
+read the files, not the frame's plan.
 
 The idf broadcast is memoized on the idf DataFrame's plan and its
 ``inputFiles()``. Every write of a Spark table gives its part files new
@@ -55,11 +59,12 @@ import hashlib
 import threading
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
@@ -168,11 +173,6 @@ _MATCHES = StructType([
     StructField("rank", IntegerType()),
 ])
 _MATCHES_ARROW = to_arrow_schema(_MATCHES)
-_VOTES = StructType([
-    StructField("q", LongType()),
-    StructField("cluster_id", LongType()),
-    StructField("votes", LongType()),
-])
 
 
 def _first_initial_ok(q_fi, e_fi) -> bool:
@@ -182,61 +182,66 @@ def _first_initial_ok(q_fi, e_fi) -> bool:
     return (q_fi is not None and q_fi == e_fi) or q_fi == "" or e_fi == ""
 
 
-def _one_of(col: str, values: list, dtype) -> Column:
-    """``col IN values`` over one array literal. ``isin`` inlines its
-    values into the generated Java, so each request naming new clusters
-    or last names would compile new classes; the array literal is a
-    reference in the generated code, which every request then reuses."""
-    return F.array_contains(F.lit(np.array(values, dtype=dtype)), F.col(col))
+def _committed(df: DataFrame, arg: str) -> ds.Dataset:
+    """The parquet files behind ``df`` as a dataset under ``df``'s
+    schema, read on the driver: no Spark job, and a filtered read skips
+    the row groups whose statistics exclude the filter. ``df`` must be a
+    bare scan of committed parquet files; any other frame raises
+    ValueError naming ``arg``."""
+    plan = df._jdf.queryExecution().analyzed()
+    rel = (plan.relation()
+           if plan.getClass().getSimpleName() == "LogicalRelation" else None)
+    if (rel is None or rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().shortName() != "parquet"):
+        raise ValueError(
+            f"match_records: {arg} must be a committed parquet table "
+            f"(Warehouse.read or Pipeline.run output), not a derived or "
+            f"local frame")
+    # file: URIs, percent-escaped; from_uri decodes them
+    paths = [pafs.FileSystem.from_uri(f)[1] for f in df.inputFiles()]
+    return ds.dataset(paths, schema=to_arrow_schema(df.schema),
+                      filesystem=pafs.LocalFileSystem(), format="parquet")
 
 
-def member_votes(queries: pa.Table, named: dict, clusters: DataFrame,
-                 mention_feats: DataFrame) -> DataFrame:
-    """-> (q, cluster_id, votes): for query row index ``q`` of
-    ``queries`` (mention_feats rows) and a cluster, how many of the
-    cluster's members score >= RECORD_EPS against the query. One row per
-    Arrow batch that has hits, so a (q, cluster_id) can repeat: the
-    caller sums. ``named``: cluster_id -> the query indexes whose
-    stage-1 gate it passed.
+def _count_votes(qt: dict, named: dict, clusters: ds.Dataset,
+                 mention_feats: ds.Dataset) -> dict:
+    """-> {(q, cluster_id): votes}: for query row index ``q`` of the
+    queries' member table ``qt`` and a cluster, how many of the
+    cluster's non-noise members score >= RECORD_EPS against the query
+    (pairs with no hit are absent). ``named``: cluster_id -> the query
+    indexes whose stage-1 gate it passed.
 
-    One Arrow pass over mention_feats joined to a broadcast of the named
-    clusters' non-noise rows: no shuffle, and member features stay on
-    the executors. Each batch scores its members in ONE kernel call over
-    a member table of the queries followed by the batch's members."""
-    live = (clusters.where(~F.col("is_noise")
-                           & _one_of("cluster_id", list(named), np.int64))
-            .select("url", "cluster_id"))
-    members = (mention_feats.join(F.broadcast(live), "url")
-               .select(*MEMBER_COLUMNS, "cluster_id"))
-
-    def votes(batches):
-        qt = member_table(queries)
-        nq = len(qt["url"])
-        for batch in batches:
-            cids = batch.column("cluster_id").to_pylist()
-            i1, i2 = [], []
-            for j, c in enumerate(cids):
-                for q in named[c]:
-                    i1.append(q)
-                    i2.append(nq + j)
-            if not i1:
-                continue
-            mt = member_table(pa.Table.from_batches([batch]))
-            table = {c: qt[c] + mt[c] for c in qt}
-            score = score_pairs_indexed_vec(table, i1, i2)["score"]
-            hit = score >= spec.RECORD_EPS
-            if not hit.any():
-                continue
-            q_hit = np.asarray(i1, dtype=np.int64)[hit]
-            c_hit = np.asarray(cids, dtype=np.int64)[
-                np.asarray(i2, dtype=np.int64)[hit] - nq]
-            keys, n = np.unique(np.stack([q_hit, c_hit]), axis=1,
-                                return_counts=True)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(keys[0]), pa.array(keys[1]), pa.array(n)],
-                names=["q", "cluster_id", "votes"])
-
-    return members.mapInArrow(votes, _VOTES)
+    Reads only the named clusters' non-noise rows and those members'
+    features, and scores every (query, member) pair in ONE kernel call
+    over a member table of the queries followed by the members."""
+    live = clusters.to_table(
+        columns=["url", "cluster_id"],
+        filter=ds.field("cluster_id").isin(pa.array(list(named), pa.int64()))
+        & ~ds.field("is_noise"))
+    of_url: dict = {}
+    for u, c in zip(live.column("url").to_pylist(),
+                    live.column("cluster_id").to_pylist()):
+        of_url.setdefault(u, []).append(c)
+    mt = member_table(mention_feats.to_table(
+        columns=MEMBER_COLUMNS,
+        filter=ds.field("url").isin(pa.array(list(of_url), pa.string()))))
+    nq = len(qt["url"])
+    i1, i2, cids = [], [], []
+    for j, u in enumerate(mt["url"]):
+        for c in of_url[u]:
+            for q in named[c]:
+                i1.append(q)
+                i2.append(nq + j)
+                cids.append(c)
+    votes: dict = {}
+    if not i1:
+        return votes
+    table = {c: qt[c] + mt[c] for c in qt}
+    score = score_pairs_indexed_vec(table, i1, i2)["score"]
+    for q, c, hit in zip(i1, cids, score >= spec.RECORD_EPS):
+        if hit:
+            votes[q, c] = votes.get((q, c), 0) + 1
+    return votes
 
 
 def match_records(query_pages: DataFrame, idf: DataFrame,
@@ -249,13 +254,18 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
 
     Batch-friendly by construction: pass MANY query pages in one call and
     the name-key candidate lookup against the entity table runs ONCE for
-    the whole batch (the distributed analog of ref
-    record_based_query_exp2.py:124-150's per-name-key profile cache —
-    there the cache avoids refetching cluster profiles per query; here
-    one collect amortizes the same work across the batch), and one
-    member pass scores every query's survivors. Tested with a 100-query
-    batch in tests/test_query.py."""
+    the whole batch (the analog of ref record_based_query_exp2.py:124-150's
+    per-name-key profile cache — there the cache avoids refetching
+    cluster profiles per query; here one read amortizes the same work
+    across the batch), and one kernel call scores every query's
+    survivors. Tested with a 100-query batch in tests/test_query.py.
+    ``entities``, ``clusters`` and ``mention_feats`` must be committed
+    parquet tables (see the module docstring)."""
     spark = query_pages.sparkSession
+    ent_ds, cl_ds, mf_ds = (
+        _committed(t, a) for t, a in ((entities, "entities"),
+                                      (clusters, "clusters"),
+                                      (mention_feats, "mention_feats")))
     # through the module global: a wrapper installed on the module sees
     # the call
     qtbl = prepare_query_mentions(query_pages, idf)
@@ -263,9 +273,11 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
     q_first = qtbl.column("first").to_pylist()
 
     # name-key candidates: entity rows sharing a query's last name
-    ent = (entities.where(_one_of("last", sorted(set(q_last) - {None}), str))
-           .select("last", "first_initial", "cluster_id", "n_members",
-                   "profile").toArrow())
+    ent = ent_ds.to_table(
+        columns=["last", "first_initial", "cluster_id", "n_members",
+                 "profile"],
+        filter=ds.field("last").isin(pa.array(sorted(set(q_last) - {None}),
+                                              pa.string())))
     by_last: dict = {}
     for last, *cand in zip(*(c.to_pylist() for c in ent.columns)):
         by_last.setdefault(last, []).append(cand)
@@ -289,15 +301,11 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
                 surv.append((q, cid, n_members, cos))
 
     # stage 2: member votes
-    votes: dict = {}
-    if surv:
-        named: dict = {}
-        for q, cid, _, _ in surv:
-            named.setdefault(cid, []).append(q)
-        out = member_votes(qtbl, named, clusters, mention_feats).toArrow()
-        for key in zip(*(out.column(c).to_pylist()
-                         for c in ("q", "cluster_id", "votes"))):
-            votes[key[:2]] = votes.get(key[:2], 0) + key[2]
+    named: dict = {}
+    for q, cid, _, _ in surv:
+        named.setdefault(cid, []).append(q)
+    votes = (_count_votes(qt, named, cl_ds, mf_ds)
+             if named else {})
 
     # MIN_VOTES gate, then rank per query: votes desc, stage-1 cosine
     # desc, cluster_id asc; top-K
