@@ -6,6 +6,7 @@ import datetime as dt
 import random
 import re
 import tempfile
+import time
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -383,12 +384,41 @@ def test_query_repeated_url_with_new_content_raises(spark, pipeline_out,
             pipeline_out["clusters"], pipeline_out["mention_feats"])
 
 
-def _request_jobs(spark, pipeline_out, qpd, group: str):
-    """-> (result rows, stage count of each Spark job the request ran)."""
+def test_query_rows_independent_of_process_timezone(
+        spark, pipeline_out, corpus_pd, warehouse_pd, monkeypatch):
+    """The query pages reach the driver with ``warc_ts`` in UTC whatever
+    the Python process's time zone (a collected timestamp would arrive
+    in process-local time), so the prepared rows and the answer rows in
+    New York equal the UTC ones."""
+    from webr import query
+    qpd = _query_fixture("mix64", corpus_pd, warehouse_pd)
+
+    def run():
+        df = spark.createDataFrame(qpd, schema=schema.PAGES)
+        return (query.prepare_query_mentions(df, pipeline_out["idf"]),
+                _engine_rows(spark, pipeline_out, qpd))
+    utc_tbl, utc_rows = run()
+    want_us = [t.value // 1000 for t in qpd.warc_ts]
+    assert utc_tbl.column("warc_ts").cast("int64").to_pylist() == want_us
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        ny_tbl, ny_rows = run()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert ny_tbl.equals(utc_tbl) and ny_rows == utc_rows and utc_rows
+
+
+def _request_jobs(spark, group: str, pages, **tables):
+    """-> (rows of ``match_records(pages(), **tables)``, stage count of
+    each Spark job that making the request frame and answering it
+    ran)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        rows = _engine_rows(spark, pipeline_out, qpd)
+        res = match_records(pages(), **tables)
+        rows = sorted(tuple(r) for r in res.collect())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -397,31 +427,54 @@ def _request_jobs(spark, pipeline_out, qpd, group: str):
                   for j in st.getJobIdsForGroup(group)]
 
 
-def test_query_job_budget_and_idf_memo(spark, pipeline_out, corpus_pd,
-                                       warehouse_pd, monkeypatch):
-    """A warm single-page request runs one Spark job, the query pages'
-    pass (4 with the broadcast-joined member pass it replaced, 7 with
-    the cogroup before that), of one stage: the lookups and the scoring
-    run on the driver. So does a request whose last name matches no
-    entity. A repeat request against the same idf files reuses the
-    memoized broadcast instead of counting and collecting the vocabulary
-    again."""
-    from webr import query
-    monkeypatch.setattr(query, "_IDF_MEMO", {})
+def test_query_job_budget(spark, pipeline_out, corpus_pd, warehouse_pd,
+                          warehouse_dir):
+    """A warm single-page request runs no Spark job (1 with the Arrow
+    prepare pass it replaced, 4 with the broadcast-joined member pass
+    before that): the request frame is a local relation, whose collect
+    runs no job, and the lookups and the scoring run on the driver. So
+    does the first request against a freshly written idf table (no
+    count or collect of the vocabulary) and a request whose last name
+    matches no entity. An empty request answers no rows; PySpark builds
+    an empty pandas frame as an RDD, not a local relation, so collecting
+    it is its one job. Query pages read from parquet run one job of one
+    stage, the scan, and get the rows the local frame gets."""
+    from webr.catalog import Warehouse
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
-    _, first = _request_jobs(spark, pipeline_out, qpd, "q3-budget-1")
-    (entry,) = query._IDF_MEMO.values()
-    rows, second = _request_jobs(spark, pipeline_out, qpd, "q3-budget-2")
-    (again,) = query._IDF_MEMO.values()
-    assert again[2] is entry[2] and entry[2] is not None
-    assert rows
-    assert len(second) <= 1, second
-    assert set(second) == {1}, second  # one stage per job: no exchange
-    # idf count + collect
-    assert len(first) >= len(second) + 2, (first, second)
+    tables = {t: pipeline_out[t] for t in
+              ("idf", "entities", "clusters", "mention_feats")}
+
+    def local():
+        return spark.createDataFrame(qpd, schema=schema.PAGES)
+    rows, jobs = _request_jobs(spark, "q3-budget-warm", local, **tables)
+    assert rows and jobs == [], jobs
+
+    wh = Warehouse(spark, warehouse_dir)
+    wh.write("idf", pipeline_out["idf"], snapshot="fresh")
+    fresh, jobs = _request_jobs(spark, "q3-budget-fresh-idf", local,
+                                **{**tables, "idf": wh.read("idf")})
+    assert fresh == rows and jobs == [], jobs
+
     stranger = pd.DataFrame([_fabricated(0, random.Random(3))])[_PAGE_COLS]
-    rows, jobs = _request_jobs(spark, pipeline_out, stranger, "q3-budget-3")
-    assert rows == [] and len(jobs) <= 1, (rows, jobs)
+    none, jobs = _request_jobs(
+        spark, "q3-budget-stranger",
+        lambda: spark.createDataFrame(stranger, schema=schema.PAGES),
+        **tables)
+    assert none == [] and jobs == [], jobs
+    empty, jobs = _request_jobs(
+        spark, "q3-budget-empty",
+        lambda: spark.createDataFrame(qpd.iloc[:0], schema=schema.PAGES),
+        **tables)
+    assert empty == [] and len(jobs) <= 1, jobs
+
+    mix =_query_fixture("mix64", corpus_pd, warehouse_pd)
+    path = f"{warehouse_dir}/query_pages"
+    spark.createDataFrame(mix, schema=schema.PAGES).write.parquet(path)
+    scanned, jobs = _request_jobs(
+        spark, "q3-budget-parquet",
+        lambda: spark.read.schema(schema.PAGES).parquet(path), **tables)
+    assert jobs == [1], jobs
+    assert scanned == _engine_rows(spark, pipeline_out, mix)
 
 
 def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,
@@ -451,12 +504,14 @@ def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,
 
 def test_query_reads_only_candidate_rows(spark, pipeline_out, corpus_pd,
                                          warehouse_pd, monkeypatch):
-    """A single-page request reads the entity rows of the query's last
-    name, the non-noise rows of the clusters that pass stage 1 (a subset
-    of those candidates, holding the answer) and exactly those members'
-    mention_feats rows: its reads are bounded by its candidates, not by
-    the warehouse."""
+    """A single-page request reads exactly the idf rows of the query's
+    body tokens, the entity rows of the query's last name, the non-noise
+    rows of the clusters that pass stage 1 (a subset of those
+    candidates, holding the answer) and exactly those members'
+    mention_feats rows: its reads are bounded by the request and its
+    candidates, not by the warehouse."""
     from webr import query
+    from webr.mentions import derive_mentions
     reads: dict = {}
 
     class Recorded:
@@ -473,9 +528,14 @@ def test_query_reads_only_candidate_rows(spark, pipeline_out, corpus_pd,
                         lambda df, arg: Recorded(committed(df, arg), arg))
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
     rows = _engine_rows(spark, pipeline_out, qpd)
-    _, ent_pd, cl_pd, mf_pd = warehouse_pd
-    (ent,), (cl,), (mf,) = (reads[a] for a in
-                            ("entities", "clusters", "mention_feats"))
+    idf_d, ent_pd, cl_pd, mf_pd = warehouse_pd
+    (idf,), (ent,), (cl,), (mf,) = (reads[a] for a in (
+        "idf", "entities", "clusters", "mention_feats"))
+
+    toks = set(derive_mentions(qpd).body_toks.iloc[0])
+    assert sorted(idf.token) == sorted(toks & set(idf_d))
+    assert idf.idf.tolist() == [idf_d[t] for t in idf.token]
+    assert 0 < len(idf) < len(idf_d)
 
     own = next(r[1] for r in rows if r[4] == 1)
     last = ent_pd.set_index("cluster_id").at[own, "last"]
@@ -490,7 +550,7 @@ def test_query_reads_only_candidate_rows(spark, pipeline_out, corpus_pd,
     assert sorted(mf.url) == sorted(want.url) and len(mf) < len(mf_pd)
 
 
-@pytest.mark.parametrize("arg", ["entities", "clusters"])
+@pytest.mark.parametrize("arg", ["idf", "entities", "clusters"])
 def test_query_lookup_tables_must_be_committed(spark, pipeline_out,
                                               corpus_pd, warehouse_pd, arg):
     """The lookups read the files behind a table, not its plan: a
@@ -498,7 +558,9 @@ def test_query_lookup_tables_must_be_committed(spark, pipeline_out,
     from rows it does not hold."""
     tables = {t: pipeline_out[t] for t in
               ("idf", "entities", "clusters", "mention_feats")}
-    if arg == "entities":
+    if arg == "idf":
+        tables[arg] = tables[arg].where("df > 0")
+    elif arg == "entities":
         tables[arg] = tables[arg].where("n_members > 0")
     else:
         tables[arg] = spark.createDataFrame(warehouse_pd[2],
@@ -526,30 +588,30 @@ def test_query_warehouse_path_with_escapes(spark, pipeline_out, corpus_pd,
         spark, pipeline_out, qpd)
 
 
-def test_query_idf_memo_replaced_on_rewrite(spark, pipeline_out,
-                                            warehouse_dir, monkeypatch):
-    """Rewriting the idf table gives new part-file names, so the next
-    request misses and its entry replaces the stale one."""
-    from webr import query
-    monkeypatch.setattr(query, "_IDF_MEMO", {})
-    path = f"{warehouse_dir}/idf"
-    pipeline_out["idf"].write.parquet(path)
-    query._idf_broadcast(spark.read.parquet(path))
-    (old,) = query._IDF_MEMO.values()
-    assert query._idf_broadcast(spark.read.parquet(path)) is old[2]
-    pipeline_out["idf"].write.mode("overwrite").parquet(path)
-    bc = query._idf_broadcast(spark.read.parquet(path))
-    (new,) = query._IDF_MEMO.values()
-    assert bc is new[2] and bc is not old[2] and new[0] != old[0]
-
-
-def test_query_vocab_fallback_identical(spark, pipeline_out, corpus_pd,
-                                        warehouse_pd, monkeypatch):
-    """Over the broadcast cap the query side takes the distributed idf
-    join; answers are identical."""
-    from webr import engine, query
+def test_query_reads_rewritten_idf(spark, pipeline_out, corpus_pd,
+                                   warehouse_pd, warehouse_dir):
+    """A request reads the idf files the table names at that moment: after
+    the table is rewritten (here with every idf squared), the next
+    request answers like the pandas twin given the new idf, not like
+    the first request."""
+    from webr.catalog import Warehouse
+    from webr.oracle import record_query
+    wh = Warehouse(spark, warehouse_dir)
     qpd = _query_fixture("mix64", corpus_pd, warehouse_pd)
-    fast = _engine_rows(spark, pipeline_out, qpd)
-    monkeypatch.setattr(query, "_IDF_MEMO", {})
-    monkeypatch.setattr(engine, "VOCAB_BROADCAST_MAX", 0)
-    assert _engine_rows(spark, pipeline_out, qpd) == fast
+    tables = [pipeline_out[t] for t in
+              ("entities", "clusters", "mention_feats")]
+
+    def request():
+        res = match_records(spark.createDataFrame(qpd, schema=schema.PAGES),
+                            wh.read("idf"), *tables)
+        return sorted(tuple(r) for r in res.collect())
+    wh.write("idf", pipeline_out["idf"], snapshot="v1")
+    first = request()
+    assert first == _engine_rows(spark, pipeline_out, qpd)
+    idf = pipeline_out["idf"]
+    wh.write("idf", idf.withColumn("idf", idf.idf * idf.idf), snapshot="v2")
+    squared = {t: v * v for t, v in warehouse_pd[0].items()}
+    want = record_query.match_records(qpd, squared, *warehouse_pd[1:])
+    second = request()
+    assert second == sorted(tuple(r) for r in want.itertuples(index=False))
+    assert second and second != first

@@ -72,8 +72,10 @@ def build_idf(mentions: DataFrame, n_mentions: int) -> DataFrame:
     return counts.mapInPandas(add_idf, schema=schema.IDF)
 
 
-# vocab sizes up to this broadcast as a plain dict into the Python pass
-# (zero shuffles); above it, the distributed join fallback runs instead.
+# Q1's mention_feats stage: vocab sizes up to this broadcast as a plain
+# dict into the Python pass (zero shuffles); above it, the distributed
+# join fallback runs instead. (A record query reads only its own
+# tokens' idf rows, whatever the vocabulary size.)
 # 1M entries ~ 100-200 MB as a Python dict PER python worker process —
 # with 32 workers per host that is the practical executor-memory ceiling
 # (a 5M cap measured ~0.5-1 GB/worker). The fallback is bitwise-identical

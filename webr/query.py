@@ -11,19 +11,22 @@ Two semantic stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-Request shape — one Spark job. A request's cost is mostly fixed (jobs,
-Python stage start-up, py4j round trips), not task CPU, so it is built
-around how few of each it runs:
-  * ``prepare_query_mentions``: ONE Arrow pass derives the query pages'
-    mentions and tf-idf weight arrays (the corpus's shared kernels, with
-    the CORPUS idf — a query must not shift corpus statistics) and
-    collects them to the driver as an Arrow table.
-  * Three request-sized lookups read the committed parquet files of the
+Request shape — no Spark job. A request's cost is mostly fixed (jobs,
+Python worker calls, py4j round trips), not its own work, so it is
+built around how few of each it runs:
+  * ``prepare_query_mentions`` collects the query pages' columns to the
+    driver (``warc_ts`` as micros). The ``createDataFrame`` frame of a
+    request is a local relation, whose collect runs no job; any other
+    plan runs one job with no Python worker. The driver derives the
+    mentions and tf-idf weight arrays with the corpus's shared kernels
+    and the CORPUS idf (a query must not shift corpus statistics).
+  * Four request-sized lookups read the committed parquet files of the
     warehouse tables on the driver (``pyarrow.dataset`` with the
     predicate pushed into the reader: no Spark job, no codegen): the
-    name-key candidates (``entities`` whose ``last`` is one of the
-    queries' last names), the non-noise rows of the clusters that pass
-    stage 1 (``clusters``), and those members' ``mention_feats`` rows.
+    ``idf`` rows of the queries' body tokens, the name-key candidates
+    (``entities`` whose ``last`` is one of the queries' last names),
+    the non-noise rows of the clusters that pass stage 1
+    (``clusters``), and those members' ``mention_feats`` rows.
     The driver applies the first-initial rule and the profile-cosine
     gate (stage 1) to the candidates, and scores every (query, member)
     pair in ONE ``score_pairs_indexed_vec`` call (the pipeline's pair
@@ -31,22 +34,14 @@ around how few of each it runs:
   * The driver counts the votes, applies MIN_VOTES and the top-K rank,
     and returns the rows as a DataFrame over a local Arrow table (its
     ``round(cluster_cos, 9)`` is a JVM expression that runs no job).
-Once the idf broadcast is warm a request runs 1 Spark job, of one stage,
-whether or not its last names match an entity. The first request
-against an idf table also counts and collects its vocabulary. Pinned by
-tests/test_query.py.
+A request holds no state between calls: every one reads the files the
+tables name at that moment, so a rewritten ``idf`` is what the next
+request reads, at any vocabulary size. Pinned by tests/test_query.py.
 
 The lookup tables must be bare scans of committed parquet files
 (``Warehouse.read`` or ``Pipeline.run`` outputs): a filtered, computed
 or local frame raises ValueError naming the argument, since the lookups
 read the files, not the frame's plan.
-
-The idf broadcast is memoized on the idf DataFrame's plan and its
-``inputFiles()``. Every write of a Spark table gives its part files new
-names (the write job's id is in each name), so a rebuilt idf table never
-hits a stale entry: its new file set replaces the old entry, whose
-broadcast is unpersisted. An idf that is not file-backed is collected on
-every request.
 
 A url repeated within one request is answered once: exact duplicate
 pages collapse, and the same url with different content is an error
@@ -56,8 +51,6 @@ pages collapse, and the same url with different content is an error
 from __future__ import annotations
 
 import hashlib
-import threading
-from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -77,34 +70,8 @@ from webr.features import (
 )
 from webr.mentions import derive_mentions
 
-_FEAT_COLS = [f.name for f in schema.MENTION_FEATS.fields]
+_FEATS_ARROW = to_arrow_schema(schema.MENTION_FEATS)
 _CONTENT_COLS = ("warc_ts", "html", "text")  # what the match reads
-
-# idf plan semantic hash -> (input files, idf DataFrame, broadcast or None)
-_IDF_MEMO: dict = {}
-_IDF_LOCK = threading.Lock()
-
-
-def _idf_broadcast(idf: DataFrame):
-    """token -> idf dict as a broadcast, or None when the vocabulary is
-    over ``engine.VOCAB_BROADCAST_MAX`` (the query side then takes the
-    distributed join path, like the corpus stage)."""
-    files = tuple(sorted(idf.inputFiles()))
-    key = idf.semanticHash()
-    with _IDF_LOCK:
-        hit = _IDF_MEMO.get(key)
-        if hit and files and hit[0] == files and idf.sameSemantics(hit[1]):
-            return hit[2]
-        bc = None
-        if idf.count() <= engine.VOCAB_BROADCAST_MAX:
-            bc = idf.sparkSession.sparkContext.broadcast(
-                {r["token"]: r["idf"]
-                 for r in idf.select("token", "idf").collect()})
-        if files:
-            if hit and hit[2] is not None:
-                hit[2].unpersist()
-            _IDF_MEMO[key] = (files, idf, bc)
-        return bc
 
 
 def _content_digests(pdf: pd.DataFrame) -> list[str]:
@@ -125,32 +92,23 @@ def prepare_query_mentions(query_pages: DataFrame,
                            idf: DataFrame) -> pa.Table:
     """Query pages -> their mention_feats rows as an Arrow table on the
     driver: same extract/normalize/weights kernels as the corpus, with
-    the CORPUS idf. One Python pass, collected once; one row per distinct
-    url (see the module docstring)."""
-    spark = query_pages.sparkSession
-    bc = _idf_broadcast(idf)
-    # warc_ts is optional, as in engine.build_mentions
+    the CORPUS idf rows of the request's body tokens. One row per
+    distinct url (see the module docstring)."""
+    idf_ds = _committed(idf, "idf")
+    # warc_ts is optional, as in engine.build_mentions; as micros it
+    # collects free of the process time zone
     cols = [c for c in ("url", *_CONTENT_COLS) if c in query_pages.columns]
-    if bc is None:
-        out_fields = list(schema.MENTIONS.fields)
-    else:
-        out_fields = list(schema.MENTION_FEATS.fields)
-    out_schema = StructType(
-        out_fields + [StructField("digest", StringType(), False)])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        d = bc.value if bc is not None else None
-        for pdf in batches:
-            m = derive_mentions(pdf)
-            out = m if d is None else engine.with_weights(m, d)
-            out["digest"] = _content_digests(pdf)
-            yield out
-
-    tbl = query_pages.select(*cols).mapInPandas(gen, out_schema).toArrow()
+    rows = query_pages.select(*(
+        F.unix_micros(c).alias(c) if c == "warc_ts" else c
+        for c in cols)).collect()
+    pdf = pd.DataFrame(rows, columns=cols, dtype=object)
+    if "warc_ts" in pdf:  # naive UTC, like the corpus stage's Arrow input
+        pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"].astype("Int64"),
+                                        unit="us")
+    pdf["html"] = [h if h is None else bytes(h) for h in pdf["html"]]
     seen: dict[str, str] = {}
     keep = []
-    for i, (u, dg) in enumerate(zip(tbl.column("url").to_pylist(),
-                                    tbl.column("digest").to_pylist())):
+    for i, (u, dg) in enumerate(zip(pdf["url"], _content_digests(pdf))):
         if u not in seen:
             seen[u] = dg
             keep.append(i)
@@ -158,11 +116,17 @@ def prepare_query_mentions(query_pages: DataFrame,
             raise ValueError(
                 f"match_records: query url {u!r} arrives with different "
                 f"content in one request — submit one version per url")
-    tbl = tbl.take(keep).drop_columns(["digest"])
-    if bc is None:  # vocabulary too big to broadcast: distributed join
-        mentions = spark.createDataFrame(tbl, schema=schema.MENTIONS)
-        tbl = engine.build_mention_feats_join(mentions, idf).toArrow()
-    return tbl.select(_FEAT_COLS)
+    if not keep:
+        return _FEATS_ARROW.empty_table()
+    m = derive_mentions(pdf.iloc[keep])
+    toks = {t for ts in m["body_toks"] for t in ts}
+    w = idf_ds.to_table(
+        columns=["token", "idf"],
+        filter=ds.field("token").isin(pa.array(sorted(toks), pa.string())))
+    out = engine.with_weights(m, dict(zip(w.column("token").to_pylist(),
+                                          w.column("idf").to_pylist())))
+    return pa.Table.from_pandas(out, schema=_FEATS_ARROW,
+                                preserve_index=False)
 
 
 _MATCHES = StructType([
@@ -259,8 +223,8 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
     cluster profiles per query; here one read amortizes the same work
     across the batch), and one kernel call scores every query's
     survivors. Tested with a 100-query batch in tests/test_query.py.
-    ``entities``, ``clusters`` and ``mention_feats`` must be committed
-    parquet tables (see the module docstring)."""
+    ``idf``, ``entities``, ``clusters`` and ``mention_feats`` must be
+    committed parquet tables (see the module docstring)."""
     spark = query_pages.sparkSession
     ent_ds, cl_ds, mf_ds = (
         _committed(t, a) for t, a in ((entities, "entities"),
