@@ -438,7 +438,8 @@ def test_query_job_budget(spark, pipeline_out, corpus_pd, warehouse_pd,
     matches no entity. An empty request answers no rows; PySpark builds
     an empty pandas frame as an RDD, not a local relation, so collecting
     it is its one job. Query pages read from parquet run one job of one
-    stage, the scan, and get the rows the local frame gets."""
+    stage, the scan and its Arrow pass, and get the rows the local frame
+    gets."""
     from webr.catalog import Warehouse
     qpd = _query_fixture("single", corpus_pd, warehouse_pd)
     tables = {t: pipeline_out[t] for t in
@@ -467,7 +468,7 @@ def test_query_job_budget(spark, pipeline_out, corpus_pd, warehouse_pd,
         **tables)
     assert empty == [] and len(jobs) <= 1, jobs
 
-    mix =_query_fixture("mix64", corpus_pd, warehouse_pd)
+    mix = _query_fixture("mix64", corpus_pd, warehouse_pd)
     path = f"{warehouse_dir}/query_pages"
     spark.createDataFrame(mix, schema=schema.PAGES).write.parquet(path)
     scanned, jobs = _request_jobs(
@@ -475,6 +476,35 @@ def test_query_job_budget(spark, pipeline_out, corpus_pd, warehouse_pd,
         lambda: spark.read.schema(schema.PAGES).parquet(path), **tables)
     assert jobs == [1], jobs
     assert scanned == _engine_rows(spark, pipeline_out, mix)
+
+
+def test_query_prepare_path_follows_plan(spark, pipeline_out, corpus_pd,
+                                         warehouse_pd, warehouse_dir,
+                                         monkeypatch):
+    """A local request frame is derived on the driver; query pages behind
+    a scan (a parquet file, a stream micro-batch, of any size) are
+    derived in the Python workers, so their pages never reach the
+    driver. Both give the same prepared rows."""
+    from webr import query
+    calls = []
+    feats = query._query_feats
+
+    def on_driver(pdf, idf):
+        calls.append(len(pdf))
+        return feats(pdf, idf)
+    monkeypatch.setattr(query, "_query_feats", on_driver)
+    mix = _query_fixture("mix64", corpus_pd, warehouse_pd)
+    path = f"{warehouse_dir}/query_pages_plan"
+    spark.createDataFrame(mix, schema=schema.PAGES).repartition(2) \
+        .write.parquet(path)
+
+    local = query.prepare_query_mentions(
+        spark.createDataFrame(mix, schema=schema.PAGES), pipeline_out["idf"])
+    assert calls == [len(mix)]
+    scanned = query.prepare_query_mentions(
+        spark.read.schema(schema.PAGES).parquet(path), pipeline_out["idf"])
+    assert calls == [len(mix)]  # the scan's pages stayed in the workers
+    assert scanned.sort_by("url").equals(local.sort_by("url"))
 
 
 def test_query_new_clusters_compile_no_class(spark, pipeline_out, corpus_pd,

@@ -11,22 +11,23 @@ Two semantic stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-Request shape — no Spark job. A request's cost is mostly fixed (jobs,
-Python worker calls, py4j round trips), not its own work, so it is
-built around how few of each it runs:
-  * ``prepare_query_mentions`` collects the query pages' columns to the
-    driver (``warc_ts`` as micros). The ``createDataFrame`` frame of a
-    request is a local relation, whose collect runs no job; any other
-    plan runs one job with no Python worker. The driver derives the
-    mentions and tf-idf weight arrays with the corpus's shared kernels
-    and the CORPUS idf (a query must not shift corpus statistics).
-  * Four request-sized lookups read the committed parquet files of the
+Request shape — no Spark job for a request built on the driver. A
+small request's cost is mostly fixed (jobs, Python worker calls, py4j
+round trips), not its own work, so it is built around how few of each
+it runs:
+  * ``prepare_query_mentions`` derives the query pages' mentions and
+    tf-idf weight arrays with the corpus's shared kernels and the CORPUS
+    idf rows of their body tokens (a query must not shift corpus
+    statistics). A local relation (a request's ``createDataFrame``
+    frame) is collected, which runs no job, and derived on the driver;
+    any other plan (a parquet file, a stream micro-batch) is derived
+    where its rows are, in one Arrow pass.
+  * Three request-sized lookups read the committed parquet files of the
     warehouse tables on the driver (``pyarrow.dataset`` with the
     predicate pushed into the reader: no Spark job, no codegen): the
-    ``idf`` rows of the queries' body tokens, the name-key candidates
-    (``entities`` whose ``last`` is one of the queries' last names),
-    the non-noise rows of the clusters that pass stage 1
-    (``clusters``), and those members' ``mention_feats`` rows.
+    name-key candidates (``entities`` whose ``last`` is one of the
+    queries' last names), the non-noise rows of the clusters that pass
+    stage 1 (``clusters``), and those members' ``mention_feats`` rows.
     The driver applies the first-initial rule and the profile-cosine
     gate (stage 1) to the candidates, and scores every (query, member)
     pair in ONE ``score_pairs_indexed_vec`` call (the pipeline's pair
@@ -51,6 +52,7 @@ pages collapse, and the same url with different content is an error
 from __future__ import annotations
 
 import hashlib
+from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -70,7 +72,6 @@ from webr.features import (
 )
 from webr.mentions import derive_mentions
 
-_FEATS_ARROW = to_arrow_schema(schema.MENTION_FEATS)
 _CONTENT_COLS = ("warc_ts", "html", "text")  # what the match reads
 
 
@@ -88,6 +89,32 @@ def _content_digests(pdf: pd.DataFrame) -> list[str]:
     return out
 
 
+def _query_feats(pdf: pd.DataFrame, idf: ds.Dataset) -> pd.DataFrame:
+    """A batch of query pages (``warc_ts`` as unix micros) -> their
+    mention_feats rows plus a content ``digest``: the corpus's extract,
+    normalize and weights kernels, with the CORPUS idf rows of the
+    batch's body tokens read from the committed idf files. The same code
+    runs on the driver and in a Python worker."""
+    if "warc_ts" in pdf:  # naive UTC, like the corpus stage's Arrow input
+        pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"].astype("Int64"),
+                                        unit="us")
+    pdf["html"] = [h if h is None else bytes(h) for h in pdf["html"]]
+    m = derive_mentions(pdf)
+    toks = {t for ts in m["body_toks"] for t in ts}
+    w = idf.to_table(
+        columns=["token", "idf"],
+        filter=ds.field("token").isin(pa.array(sorted(toks), pa.string())))
+    out = engine.with_weights(m, dict(zip(w.column("token").to_pylist(),
+                                          w.column("idf").to_pylist())))
+    out["digest"] = _content_digests(pdf)
+    return out
+
+
+_PREPARED = StructType(list(schema.MENTION_FEATS.fields)
+                       + [StructField("digest", StringType(), False)])
+_PREPARED_ARROW = to_arrow_schema(_PREPARED)
+
+
 def prepare_query_mentions(query_pages: DataFrame,
                            idf: DataFrame) -> pa.Table:
     """Query pages -> their mention_feats rows as an Arrow table on the
@@ -95,20 +122,31 @@ def prepare_query_mentions(query_pages: DataFrame,
     the CORPUS idf rows of the request's body tokens. One row per
     distinct url (see the module docstring)."""
     idf_ds = _committed(idf, "idf")
-    # warc_ts is optional, as in engine.build_mentions; as micros it
-    # collects free of the process time zone
+    # warc_ts is optional (engine.build_mentions); micros carry no zone
     cols = [c for c in ("url", *_CONTENT_COLS) if c in query_pages.columns]
-    rows = query_pages.select(*(
+    sel = query_pages.select(*(
         F.unix_micros(c).alias(c) if c == "warc_ts" else c
-        for c in cols)).collect()
-    pdf = pd.DataFrame(rows, columns=cols, dtype=object)
-    if "warc_ts" in pdf:  # naive UTC, like the corpus stage's Arrow input
-        pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"].astype("Int64"),
-                                        unit="us")
-    pdf["html"] = [h if h is None else bytes(h) for h in pdf["html"]]
+        for c in cols))
+    plan = sel._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        # pages already on the driver: collecting them runs no job
+        rows = sel.collect()
+        tbl = (pa.Table.from_pandas(
+                   _query_feats(pd.DataFrame(rows, columns=cols,
+                                             dtype=object), idf_ds),
+                   schema=_PREPARED_ARROW, preserve_index=False)
+               if rows else _PREPARED_ARROW.empty_table())
+    else:
+        # pages behind a scan: derive them where they are
+        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf):
+                    yield _query_feats(pdf, idf_ds)
+        tbl = sel.mapInPandas(gen, _PREPARED).toArrow()
     seen: dict[str, str] = {}
     keep = []
-    for i, (u, dg) in enumerate(zip(pdf["url"], _content_digests(pdf))):
+    for i, (u, dg) in enumerate(zip(tbl.column("url").to_pylist(),
+                                    tbl.column("digest").to_pylist())):
         if u not in seen:
             seen[u] = dg
             keep.append(i)
@@ -116,17 +154,7 @@ def prepare_query_mentions(query_pages: DataFrame,
             raise ValueError(
                 f"match_records: query url {u!r} arrives with different "
                 f"content in one request — submit one version per url")
-    if not keep:
-        return _FEATS_ARROW.empty_table()
-    m = derive_mentions(pdf.iloc[keep])
-    toks = {t for ts in m["body_toks"] for t in ts}
-    w = idf_ds.to_table(
-        columns=["token", "idf"],
-        filter=ds.field("token").isin(pa.array(sorted(toks), pa.string())))
-    out = engine.with_weights(m, dict(zip(w.column("token").to_pylist(),
-                                          w.column("idf").to_pylist())))
-    return pa.Table.from_pandas(out, schema=_FEATS_ARROW,
-                                preserve_index=False)
+    return tbl.take(pa.array(keep, pa.int64())).drop_columns(["digest"])
 
 
 _MATCHES = StructType([
