@@ -206,95 +206,6 @@ def test_pagerank_20_iters_bounded(spark):
     r.unpersist()
 
 
-def test_streaming_link_indegree(spark):
-    """Streaming twin of link_degree: pages stream in, links are
-    extracted with the SAME kernel, and windowed per-host in-degree
-    equals the arithmetic ground truth (every link occurrence counted,
-    split across two 1h event-time windows)."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from webr import schema
-    from webr.streaming import streaming_link_indegree
-
-    n = 24
-    rows = []
-    for i in range(n):
-        rows.append({
-            "url": f"https://src.example.net/p/{i}",
-            # first half in hour 0, second half in hour 1
-            "warc_ts": pd.Timestamp("2024-01-01 00:05:00")
-            + pd.Timedelta(hours=int(i >= n // 2)),
-            "html": synth_link_html(i, n).encode(),
-            "text": "", "lang": "eng"})
-    pdf = pd.DataFrame(rows)
-    in_dir = os.path.join(tempfile.mkdtemp(prefix="webr_slink_"), "in")
-    (spark.createDataFrame(
-        pdf[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES).repartition(3).write.parquet(in_dir))
-
-    stream = spark.readStream.schema(schema.PAGES).parquet(in_dir)
-    q = (streaming_link_indegree(stream)
-         .writeStream.outputMode("complete").format("memory")
-         .queryName("slink").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(str(r["window_start"]), r["target_host"]): r["in_links"]
-           for r in spark.sql("SELECT * FROM slink").collect()}
-    want_h0 = sum(len(link_targets(i, n)) for i in range(n // 2))
-    want_h1 = sum(len(link_targets(i, n)) for i in range(n // 2, n))
-    assert got == {
-        ("2024-01-01 00:00:00", "docs.example.org"): want_h0,
-        ("2024-01-01 01:00:00", "docs.example.org"): want_h1,
-    }
-
-
-def test_streaming_link_indegree_edge_hrefs(spark):
-    """ADVICE r4: 'HTTP://Host/..' must count under the lowercased host
-    (case-insensitive scheme match), relative/schemeless hrefs must be
-    DROPPED (not pooled into one '' host group), and a null-warc_ts page
-    contributes nothing (dropped explicitly, not aliased to epoch)."""
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from webr import schema
-    from webr.streaming import streaming_link_indegree
-
-    ts = pd.Timestamp("2024-01-01 00:05:00")
-    html = (b'<html><body>'
-            b'<a href="HTTP://Upper.Example.ORG/x">u</a>'
-            b'<a href="https://plain.example.org/y">p</a>'
-            b'<a href="/relative/path">r</a>'
-            b'<a href="no-scheme.html">n</a>'
-            b'</body></html>')
-    rows = [
-        {"url": "https://s/1", "warc_ts": ts, "html": html,
-         "text": "", "lang": "eng"},
-        # same links but no timestamp: must not appear anywhere
-        {"url": "https://s/2", "warc_ts": None, "html": html,
-         "text": "", "lang": "eng"},
-    ]
-    pdf = pd.DataFrame(rows)
-    in_dir = os.path.join(tempfile.mkdtemp(prefix="webr_slinke_"), "in")
-    (spark.createDataFrame(
-        pdf[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES).write.parquet(in_dir))
-    stream = spark.readStream.schema(schema.PAGES).parquet(in_dir)
-    q = (streaming_link_indegree(stream)
-         .writeStream.outputMode("complete").format("memory")
-         .queryName("slinke").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(str(r["window_start"]), r["target_host"]): r["in_links"]
-           for r in spark.sql("SELECT * FROM slinke").collect()}
-    assert got == {
-        ("2024-01-01 00:00:00", "upper.example.org"): 1,
-        ("2024-01-01 00:00:00", "plain.example.org"): 1,
-    }
-
-
 def test_link_degree_hub_skew(spark):
     from webr.queries.linkgraph import q_link_degree
     deg = {r["doc_id"]: (r["out_deg"], r["in_deg"])

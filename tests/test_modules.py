@@ -1,4 +1,6 @@
-"""Streaming ingest, ANN similarity, multimodal plumbing."""
+"""Modules without a test file of their own: streaming ingest and record
+assignment, ANN similarity, learned blocking, connected components, the
+warehouse commit, the CLI, the pair kernels and media sniffing."""
 
 import os
 import shutil
@@ -11,8 +13,10 @@ import pytest
 # --- streaming ---------------------------------------------------------------
 
 def test_streaming_ingest_and_window_counts(spark, corpus_pd):
+    """Staging ingest lands every page once; a re-run on the same
+    checkpoint appends nothing."""
     from webr import schema
-    from webr.streaming import ingest_to_staging, windowed_host_counts
+    from webr.streaming import ingest_to_staging
 
     d = tempfile.mkdtemp(prefix="webr_stream_")
     in_dir = os.path.join(d, "in")
@@ -33,19 +37,6 @@ def test_streaming_ingest_and_window_counts(spark, corpus_pd):
     q2 = ingest_to_staging(spark, in_dir, staging, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(staging).count() == len(corpus_pd)
-
-    # windowed aggregation parity with the batch equivalent
-    from pyspark.sql.streaming import StreamingQuery  # noqa: F401
-    stream = (spark.readStream.schema(schema.PAGES).parquet(in_dir))
-    from webr.streaming import windowed_host_counts as whc
-    agg = whc(stream)
-    mq = (agg.writeStream.outputMode("complete")
-          .format("memory").queryName("hostcounts")
-          .trigger(availableNow=True).start())
-    mq.awaitTermination(120)
-    got = spark.sql(
-        "SELECT sum(n_pages) AS n FROM hostcounts").collect()[0]["n"]
-    assert got == len(corpus_pd)
 
 
 def test_streaming_staging_replayed_epoch_lands_once(spark, corpus_pd):
@@ -79,7 +70,9 @@ def test_streaming_assign_matches_record_query(spark, corpus_pd,
     same warehouse (one rule for the stream, ``webr query`` and Q3),
     upserted by url into ``assignments``. Two drops, restarts on one
     checkpoint: a restart without new files merges nothing, the second
-    drop's merge chains to the first. The drops carry held-out corpus
+    drop's merge chains to the first. Two more drops, each through a
+    fresh checkpoint, are two more streams whose epoch 0 commits must not
+    pass for replays of another's. The drops carry held-out corpus
     pages, a page that matches nothing (noise 0), John/Jane Brookstone
     pages behind initial-only 'J Brookstone' pages that sort first (a
     first-compatible-representative rule would put John and Jane in
@@ -126,11 +119,12 @@ def test_streaming_assign_matches_record_query(spark, corpus_pd,
     d = tempfile.mkdtemp(prefix="webr_assign_")
     in_dir, ckpt = os.path.join(d, "in"), os.path.join(d, "ckpt")
 
-    def drain(drop=None, name=None):
+    def drain(drop=None, name=None, src="drop*", ckpt=ckpt):
         if drop is not None:  # one file per drop: one micro-batch
             (spark.createDataFrame(drop, schema=schema.PAGES).coalesce(1)
              .write.parquet(os.path.join(in_dir, name)))
-        q = assign_stream(spark, in_dir + "/drop*", warehouse_dir, ckpt)
+        q = assign_stream(spark, os.path.join(in_dir, src), warehouse_dir,
+                          ckpt)
         assert q.awaitTermination(300)
         return wh.manifest("assignments")
 
@@ -142,6 +136,7 @@ def test_streaming_assign_matches_record_query(spark, corpus_pd,
     m2 = drain(drop2, "drop2")
     assert m2["lineage"]["parent"] == m1["snapshot"]
     assert m2["lineage"]["epoch"] > m1["lineage"]["epoch"]
+    assert m2["lineage"]["stream"] == m1["lineage"]["stream"]
 
     got = (wh.read("assignments").toPandas()
            .sort_values("url").reset_index(drop=True))
@@ -171,6 +166,17 @@ def test_streaming_assign_matches_record_query(spark, corpus_pd,
     with pytest.raises(Exception, match="different content"):
         drain(clash.assign(url="https://nowhere.example/2"), "drop3")
     assert wh.manifest("assignments") == m2
+    # a fresh checkpoint starts another stream: its epoch 0 is a new
+    # snapshot chained to the last commit, not a replay of the epoch 0 of
+    # an earlier stream
+    m3 = drain(held.iloc[:2], "fresh1", "fresh1", os.path.join(d, "ckpt1"))
+    m4 = drain(held.iloc[2:4], "fresh2", "fresh2", os.path.join(d, "ckpt2"))
+    assert m3["lineage"]["epoch"] == m4["lineage"]["epoch"] == 0
+    assert m3["snapshot"] not in (m1["snapshot"], m2["snapshot"])
+    assert m3["lineage"]["parent"] == m2["snapshot"]
+    assert m4["snapshot"] != m3["snapshot"]
+    assert m4["lineage"]["parent"] == m3["snapshot"]
+    assert m4["rows"] == m2["rows"]  # the same pages, upserted again
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -235,44 +241,6 @@ def test_learned_blocking_dnf(spark):
     # sanity of the metric definitions on a known scheme
     ev_good = evaluate_scheme(pairs, ["pred_good"])
     assert ev_good.pc == 0.5 and ev_good.rr == 1.0 - 20 / 400
-
-
-# --- multimodal ---------------------------------------------------------------
-
-def test_multimodal_meta_and_frames(spark, corpus_pd):
-    from webr import schema
-    from webr.multimodal import (extract_media_meta, pages_as_media,
-                                 sample_frames)
-    pages = spark.createDataFrame(
-        corpus_pd.head(60)[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
-    media = pages_as_media(pages)
-    meta = extract_media_meta(media).toPandas()
-    assert len(meta) == 60
-    assert (meta.n_bytes > 0).all()
-    assert meta.sha256.str.len().eq(64).all()
-    assert set(meta.kind) <= {"image", "audio", "video"}
-    assert (meta[meta.kind == "image"].n_frames == 1).all()
-
-    frames = sample_frames(media, every_n=8).toPandas()
-    assert (frames.frame_no % 8 == 0).all()
-    assert frames.frame.map(len).eq(32).all()
-    # deterministic: same input -> same frames
-    frames2 = sample_frames(media, every_n=8).toPandas()
-    assert frames.sort_values(["media_id", "frame_no"]).frame.map(
-        bytes.hex).tolist() == frames2.sort_values(
-        ["media_id", "frame_no"]).frame.map(bytes.hex).tolist()
-
-
-def test_multimodal_raise_stub(spark, corpus_pd):
-    from webr import schema
-    from webr.multimodal import extract_media_meta, pages_as_media
-    pages = spark.createDataFrame(
-        corpus_pd.head(4)[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
-    with pytest.raises(Exception, match="codec"):
-        extract_media_meta(pages_as_media(pages),
-                           decode_stub="raise").collect()
 
 
 # --- connected components: distributed final pass (_resolve) ------------------
@@ -618,65 +586,12 @@ def test_oversample_minority(spark):
     assert oversample_minority(bal).count() == 100
 
 
-def test_streaming_sessionized_counts_matches_batch(spark):
-    """Streaming session_window sessionization must agree with the batch
-    lag+cumsum twin (q_sessionize_events) on drained input: same
-    per-(user, session) event counts and cent sums."""
-    import pandas as pd
-    from webr.queries.relational import q_sessionize_events
-    from webr.streaming import sessionized_counts
-
-    import datetime as dt
-    import os
-    import shutil
-    import tempfile
-    import pyspark.sql.functions as F
-    sf = "/root/testdata/sf0.001"
-    # file streams need a DIRECTORY source; append-mode session windows
-    # only emit once the watermark passes them, so two far-future
-    # sentinel drops (processed as LATER micro-batches via
-    # maxFilesPerTrigger=1) flush every real session out of state
-    d = tempfile.mkdtemp(prefix="webr_sess_")
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    ev.write.parquet(os.path.join(d, "d1"))
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    for i, days in enumerate((1, 2)):
-        spark.createDataFrame(
-            [(10**9 + i, max_ts + dt.timedelta(days=days), -1,
-              "sentinel", 0.0, "")],
-            ev.schema).write.parquet(os.path.join(d, f"d{2 + i}"))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(d + "/d*"))
-    q = (sessionized_counts(stream)
-         .writeStream.outputMode("append")
-         .format("memory").queryName("sessions")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = (spark.sql("SELECT * FROM sessions WHERE user_id >= 0")
-           .toPandas()
-           .sort_values(["user_id", "session_start"])
-           .reset_index(drop=True))
-    shutil.rmtree(d, ignore_errors=True)
-    want = (q_sessionize_events(spark, sf).toPandas()
-            .sort_values(["user_id", "session_no"]).reset_index(drop=True))
-    assert len(got) == len(want)
-    ga = got.groupby("user_id")[["n_events", "session_cents"]].sum()
-    wa = want.groupby("user_id")[["n_events", "session_cents"]].sum()
-    pd.testing.assert_frame_equal(ga, wa, check_dtype=False)
-    # per-session multisets agree (session ids differ; counts must match)
-    for u in ga.index:
-        g = sorted(got[got.user_id == u].n_events)
-        w = sorted(want[want.user_id == u].n_events)
-        assert g == w, (u, g, w)
-
-
 def test_sessionize_fractional_gaps_agree(spark):
-    """Sub-second event times around the 1800 s gap: the DuckDB twin, the
-    Spark batch query and the drained streaming session_window must give
-    the same sessions. Gaps straddle the threshold (exactly 1800 s stays,
-    1800.5 s splits) from start times on both sides of a half second, so
-    whole-second truncation of either side shows up as a mismatch."""
+    """Sub-second event times around the 1800 s gap: the DuckDB twin and
+    the Spark batch query must give the same sessions. Gaps straddle the
+    threshold (exactly 1800 s stays, 1800.5 s splits) from start times on
+    both sides of a half second, so whole-second truncation of either
+    side shows up as a mismatch."""
     import datetime as dt
 
     import duckdb
@@ -686,7 +601,6 @@ def test_sessionize_fractional_gaps_agree(spark):
     from webr.queries.relational import (
         SQL_SESSIONIZE_EVENTS, q_sessionize_events,
     )
-    from webr.streaming import sessionized_counts
 
     gaps = [1799.5, 1800.0, 1800.5, 1801.0, 1801.5]
     base = dt.datetime(2024, 1, 1)
@@ -708,45 +622,19 @@ def test_sessionize_fractional_gaps_agree(spark):
                      ("user_id", pa.int64()), ("event_type", pa.string()),
                      ("value", pa.float64()), ("props", pa.string())])
 
-    def write(path, rs):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(pa.Table.from_pylist(
-            [dict(zip(sch.names, r)) for r in rs], schema=sch), path)
-
     d = tempfile.mkdtemp(prefix="webr_sessfrac_")
     try:
-        write(os.path.join(d, "events.parquet"), rows)
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(sch.names, r)) for r in rows], schema=sch),
+            os.path.join(d, "events.parquet"))
         con = duckdb.connect()
         con.execute("CREATE VIEW events AS SELECT * FROM read_parquet("
                     f"'{d}/events.parquet')")
         cols = ["user_id", "session_no", "n_events", "session_cents"]
         want = con.sql(SQL_SESSIONIZE_EVENTS).df()[cols]
         batch = q_sessionize_events(spark, d).toPandas()[cols]
-
-        # drain the stream: two far-future sentinel drops, read as later
-        # micro-batches, push the watermark past every real session
-        write(os.path.join(d, "s", "d0", "part.parquet"), rows)
-        last = max(r[1] for r in rows)
-        for i in (1, 2):
-            write(os.path.join(d, "s", f"d{i}", "part.parquet"),
-                  [(10**9 + i, last + dt.timedelta(days=i), -1, "sentinel",
-                    0.0, "")])
-        ev_schema = spark.read.parquet(f"{d}/events.parquet").schema
-        q = (sessionized_counts(
-                spark.readStream.schema(ev_schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(d, "s", "d*")))
-             .writeStream.outputMode("append")
-             .format("memory").queryName("sessions_frac")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        streamed = spark.sql(
-            "SELECT * FROM sessions_frac WHERE user_id >= 0").toPandas()
     finally:
         shutil.rmtree(d, ignore_errors=True)
-    streamed["session_no"] = (streamed.groupby("user_id")["session_start"]
-                              .rank(method="first").astype("int64"))
-    streamed = streamed[cols]
 
     def canon(df):
         return (df.astype("int64").sort_values(["user_id", "session_no"])
@@ -756,38 +644,6 @@ def test_sessionize_fractional_gaps_agree(spark):
     # plus 4 for the mixed chain
     assert len(want) == 2 * (1 + 1 + 3 + 3 + 3) + 4
     pd.testing.assert_frame_equal(canon(batch), canon(want))
-    pd.testing.assert_frame_equal(canon(streamed), canon(want))
-
-
-def test_streaming_dedup_exact(spark, corpus_pd):
-    """Watermark-scoped streaming dedup: duplicated page drops collapse
-    to one row per content fingerprint."""
-    import os
-    import shutil
-    import tempfile
-    from webr import schema
-    from webr.streaming import stream_dedup_exact
-
-    d = tempfile.mkdtemp(prefix="webr_sdd_")
-    pages = spark.createDataFrame(
-        corpus_pd.head(80)[["url", "warc_ts", "html", "text", "lang"]],
-        schema=schema.PAGES)
-    pages.write.parquet(os.path.join(d, "in", "drop1"))
-    pages.write.parquet(os.path.join(d, "in", "drop2"))  # exact replay
-    stream = (spark.readStream.schema(schema.PAGES)
-              .parquet(os.path.join(d, "in", "drop*")))
-    q = (stream_dedup_exact(stream)
-         .writeStream.outputMode("append")
-         .format("parquet")
-         .option("path", os.path.join(d, "out"))
-         .option("checkpointLocation", os.path.join(d, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    out = spark.read.parquet(os.path.join(d, "out")).toPandas()
-    n_fp = corpus_pd.head(80).html.map(bytes).nunique()
-    assert len(out) == n_fp
-    assert out.fp.nunique() == n_fp
-    shutil.rmtree(d, ignore_errors=True)
 
 
 # --- CLI entrypoints (ref author_disambiguation.py / record_based_query.py) --
@@ -1091,34 +947,3 @@ def test_sniff_media_formats_and_edges():
     g = bytearray(gif_bytes(12, 34))
     g[3:6] = b"87a"
     assert sniff_media(bytes(g)) == ("gif", 12, 34)
-
-
-def test_multimodal_sniff_mode(spark):
-    """decode_stub='sniff' flows REAL header dims + format through the
-    Arrow batch path; unknown payloads keep NULL dims and NULL format."""
-    import pandas as pd
-
-    from webr.multimodal import (
-        extract_media_meta, jpeg_bytes, png_bytes,
-    )
-    rows = pd.DataFrame({
-        "media_id": ["a", "b", "c"],
-        "kind": ["image", "image", "image"],
-        "payload": [png_bytes(100, 50), jpeg_bytes(70, 35),
-                    b"not an image"],
-    })
-    media = spark.createDataFrame(
-        rows, "media_id string, kind string, payload binary")
-    meta = (extract_media_meta(media, decode_stub="sniff")
-            .toPandas().set_index("media_id"))
-    assert (meta.loc["a", "format"], meta.loc["a", "width"],
-            meta.loc["a", "height"]) == ("png", 100, 50)
-    assert (meta.loc["b", "format"], meta.loc["b", "width"],
-            meta.loc["b", "height"]) == ("jpeg", 70, 35)
-    assert meta.loc["c", "format"] is None
-    assert pd.isna(meta.loc["c", "width"])
-    # 'fake' mode still sniffs the format column (no codec needed)
-    fake = (extract_media_meta(media, decode_stub="fake")
-            .toPandas().set_index("media_id"))
-    assert fake.loc["a", "format"] == "png"
-    assert fake.loc["a", "width"] is not None

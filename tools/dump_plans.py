@@ -3,8 +3,8 @@ plan properties that matter at 100 TB (SURVEY §4):
 
 - parquet scans carry PushedFilters / pruned ReadSchema where expected,
 - small dimension joins are BroadcastHashJoin,
-- no CartesianProduct outside the two intentional cases (ann brute-force
-  baseline and the broadcast query-side cross join),
+- no CartesianProduct in any checked plan but blocking_metrics, whose
+  single-row cross combine is left unasserted,
 - WholeStageCodegen spans exist in every JVM-side query.
 
 Usage: python tools/dump_plans.py [sf_dir]

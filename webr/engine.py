@@ -2,7 +2,9 @@
 
 pages -> mentions (Arrow mapInPandas, shared kernel)
       -> idf (explode + groupBy, A4)
-      -> mentions+idf_map (distributed token join — no driver dict)
+      -> mentions+idf weights (the idf table broadcast as a driver dict
+         into one Arrow pass; a distributed token join above
+         VOCAB_BROADCAST_MAX tokens)
       -> candidate pairs (block explode; J1 self-join for small blocks,
          sorted-neighborhood window for mega-blocks = explicit skew rule)
       -> pair scores (cogroup applyInArrow, shared batched kernel, A8)

@@ -597,9 +597,10 @@ def score_pairs(pairs: pd.DataFrame) -> pd.DataFrame:
     """Batched kernel over a pre-joined sided frame (the oracle path).
     Input columns required (suffix _1/_2 per side): url, doc_id,
     name_norm, first, middle, last, title_toks, host, and the precomputed
-    tf-idf arrays w_toks/w_vals/w_norm (built by weight_arrays via a
-    distributed idf join in the engine — no driver-side global vocabulary
-    is ever collected; SURVEY §4 broadcast-dict note, scaled up).
+    tf-idf arrays w_toks/w_vals/w_norm (built by weight_arrays; the
+    engine's mention_feats stage broadcasts the idf table as a driver
+    dict, or joins it token by token above
+    ``engine.VOCAB_BROADCAST_MAX`` tokens).
     Returns input + FEATURE_COLUMNS. Internally de-duplicates the sides
     into a member table and runs ``score_pairs_indexed``."""
     n = len(pairs)

@@ -1,37 +1,10 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` payloads with
-typed metadata, processed via Arrow-batched ``mapInPandas``.
-
-The actual codecs are NOT in this container, so the decode step is stubbed
-two ways (clearly marked): ``decode_stub='fake'`` produces deterministic
-metadata derived from the payload bytes (so the Spark-side plumbing —
-schema, batch shape, partitioning — is real and testable), and
-``decode_stub='raise'`` raises NotImplementedError the way the real
-integration point would surface a missing codec. Swapping in PIL/ffmpeg is
-confined to ``_decode_one``.
+"""Media container sniffing: format and pixel dimensions of PNG, JPEG and
+GIF payloads from their headers, in pure Python with no codec, plus the
+byte builders that make spec-valid payloads. The driver query
+``q_media_sniff`` runs both inside Arrow batches.
 """
 
 from __future__ import annotations
-
-import hashlib
-from typing import Iterator
-
-import pandas as pd
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
-)
-
-MEDIA_META = StructType([
-    StructField("media_id", StringType(), False),
-    StructField("kind", StringType(), True),
-    StructField("n_bytes", LongType(), False),
-    StructField("sha256", StringType(), False),
-    StructField("format", StringType(), True),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("n_frames", IntegerType(), True),
-])
 
 # ---------------------------------------------------------------------------
 # Real container sniffing — pure-Python header parsing, no codec needed.
@@ -103,84 +76,3 @@ def gif_bytes(w: int, h: int) -> bytes:
     """GIF89a header + logical screen descriptor + trailer; 14 bytes."""
     return (b"GIF89a" + w.to_bytes(2, "little") + h.to_bytes(2, "little")
             + bytes([0, 0, 0]) + b"\x3b")
-
-FRAME_SCHEMA = StructType([
-    StructField("media_id", StringType(), False),
-    StructField("frame_no", IntegerType(), False),
-    StructField("frame", BinaryType(), True),
-])
-
-
-def _decode_one(payload: bytes, kind: str, mode: str) -> tuple:
-    """THE integration point for real codecs (PIL / librosa / pyav).
-    mode='sniff': REAL header parsing (PNG/JPEG/GIF via sniff_media) —
-    no codec required; unknown containers get NULL dims, never a raise.
-    mode='fake': deterministic pseudo-metadata from the digest bytes.
-    mode='raise': behave like the missing-codec production error."""
-    if mode == "sniff":
-        _fmt, w, h = sniff_media(payload or b"")
-        return w, h, (1 if w is not None else None)
-    if mode == "raise":
-        raise NotImplementedError(
-            f"no {kind} codec in this environment; install the codec and "
-            f"replace _decode_one")
-    digest = hashlib.sha256(payload or b"").digest()
-    width = 64 + digest[0] % 192
-    height = 64 + digest[1] % 192
-    n_frames = 1 if kind == "image" else 1 + digest[2] % 32
-    return width, height, n_frames
-
-
-def extract_media_meta(media: DataFrame, kind_col: str = "kind",
-                       decode_stub: str = "fake") -> DataFrame:
-    """media: (media_id string, kind string, payload binary) ->
-    MEDIA_META. Arrow-batched; one python pass per batch, no per-row UDF
-    round trips. ``format`` is ALWAYS the real sniffed container format
-    (header parse needs no codec); width/height/n_frames come from
-    ``decode_stub`` ('sniff' = real header dims, 'fake' = digest-derived
-    stand-ins, 'raise' = missing-codec error)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                    pdf["media_id"], pdf[kind_col], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = sniff_media(b)[0]
-                w, h, nf = _decode_one(b, kind, decode_stub)
-                rows.append((mid, kind, len(b),
-                             hashlib.sha256(b).hexdigest(), fmt, w, h, nf))
-            yield pd.DataFrame(rows, columns=[f.name
-                                              for f in MEDIA_META.fields])
-    return media.mapInPandas(gen, schema=MEDIA_META)
-
-
-def sample_frames(media: DataFrame, every_n: int = 8,
-                  decode_stub: str = "fake") -> DataFrame:
-    """Frame sampling for video payloads: one output row per sampled frame
-    (a UDTF-shaped grouped expansion). The fake decode emits digest-derived
-    32-byte pseudo-frames so downstream batch shapes are real."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, kind, payload in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                _w, _h, nf = _decode_one(b, kind, decode_stub)
-                for fno in range(0, nf, every_n):
-                    frame = hashlib.sha256(
-                        b + fno.to_bytes(4, "big")).digest()
-                    out.append((mid, fno, frame))
-            yield pd.DataFrame(out, columns=[f.name
-                                             for f in FRAME_SCHEMA.fields])
-    return media.mapInPandas(gen, schema=FRAME_SCHEMA)
-
-
-def pages_as_media(pages: DataFrame) -> DataFrame:
-    """Adapter: treat page html payloads as media rows (the plumbing demo
-    used by tests; real corpora carry actual image/audio bytes)."""
-    return pages.select(
-        F.col("url").alias("media_id"),
-        F.when(F.crc32(F.col("url")) % 3 == 0, "image")
-        .when(F.crc32(F.col("url")) % 3 == 1, "audio")
-        .otherwise("video").alias("kind"),
-        F.col("html").alias("payload"))

@@ -1033,9 +1033,9 @@ FROM documents ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing: opaque binary payload + typed metadata. The decode
-# step itself is stubbed (no image/audio libs in this container) in
-# webr.multimodal; this query proves the binary-column path end-to-end.
+# multimodal plumbing: opaque binary payload + typed metadata. No codec
+# decodes the payload; q_media_sniff below reads real container headers
+# (webr.multimodal). This query proves the binary-column path end-to-end.
 
 def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
     d = (read(spark, sf, "documents")
